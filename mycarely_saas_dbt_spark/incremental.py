@@ -79,11 +79,12 @@ def _ingest_threads() -> int:
     reads), so a modest pool overlaps them without contending with
     executor threads. MYCARELY_INGEST_THREADS overrides — set higher on an
     object store where per-file latency, not CPU, dominates; 1 restores
-    the serial loop."""
-    env = os.environ.get("MYCARELY_INGEST_THREADS")
-    if env:
-        return max(1, int(env))
-    return min(16, max(4, (os.cpu_count() or 4) // 2))
+    the serial loop; a value that is not an integer falls back to the
+    default instead of failing every commit."""
+    try:
+        return max(1, int(os.environ["MYCARELY_INGEST_THREADS"]))
+    except (KeyError, ValueError):
+        return min(16, max(4, (os.cpu_count() or 4) // 2))
 
 
 @contextlib.contextmanager
@@ -1419,6 +1420,38 @@ class IncrementalRunner:
                 self.spark.createDataFrame([], schema=ddl)
                 .select(*cols, "_change_type")
             )
+
+        def era_scan(src: dict, paths: list[str], *extra) -> DataFrame:
+            # explicit ERA schema => only traced columns are read by
+            # name (pre-evolution files NULL-fill, dropped-era bytes
+            # stay unread), then aliased to the range-end names
+            era_ddl = (
+                ", ".join(f"`{src[c]}` {tmap[c]}" for c in cols if c in src)
+                + ", `_change_type` string"
+            )
+            return self.spark.read.schema(era_ddl).parquet(*paths).select(
+                *[
+                    F.col(src[c]).alias(c)
+                    if c in src
+                    else F.lit(None).cast(tmap[c]).alias(c)
+                    for c in cols
+                ],
+                "_change_type",
+                *extra,
+            )
+
+        if len(metas) == 1:
+            # a range of exactly ONE version: its change files already
+            # are the net changes — the commit wrote them through
+            # _changes_between, which paired each key's images and
+            # dropped no-op rewrites — so the netting groupBy is skipped
+            _, cdc, src = infos[0]
+            out = era_scan(
+                src, [os.path.join(root, cdc["dir"], f) for f in cdc["files"]]
+            )
+            if not preimages:
+                out = out.filter(F.col("_change_type") != "update_preimage")
+            return out
         # ONE scan per NAMING EPOCH over its versions' change files (a
         # per-version union would grow the plan O(versions) on a deep
         # catch-up); the commit version rides back in via a broadcast
@@ -1434,34 +1467,10 @@ class IncrementalRunner:
         vmap = self.spark.createDataFrame(
             [(c["dir"], v) for v, c, _ in infos], "__cdir string, __v int"
         )
-        scans = []
-        for g in groups.values():
-            src = g["src"]
-            # explicit ERA schema => only traced columns are read by
-            # name (pre-evolution files NULL-fill, dropped-era bytes
-            # stay unread), then aliased to the range-end names
-            era_ddl = (
-                ", ".join(f"`{src[c]}` {tmap[c]}" for c in cols if c in src)
-                + ", `_change_type` string"
-            )
-            scans.append(
-                self.spark.read.schema(era_ddl)
-                .parquet(*g["paths"])
-                .select(
-                    *[
-                        F.col(src[c]).alias(c)
-                        if c in src
-                        else F.lit(None).cast(tmap[c]).alias(c)
-                        for c in cols
-                    ],
-                    "_change_type",
-                    F.regexp_extract(
-                        F.col("_metadata.file_path"),
-                        f"{self._CDC_DIR}/([^/]+)/",
-                        1,
-                    ).alias("__cdir"),
-                )
-            )
+        cdir = F.regexp_extract(
+            F.col("_metadata.file_path"), f"{self._CDC_DIR}/([^/]+)/", 1
+        ).alias("__cdir")
+        scans = [era_scan(g["src"], g["paths"], cdir) for g in groups.values()]
         raw = scans[0]
         for s in scans[1:]:
             raw = raw.unionByName(s)

@@ -4,9 +4,10 @@ unifying the IVM strategies the streaming entries proved one-by-one
 support counts) into ONE maintainer a user points at a change-data base.
 
 A :class:`MVDefinition` declares a grouped aggregate view over a
-change-data base table; :class:`MaterializedViewMaintainer.refresh` runs
-one availableNow hop of the base's four-type change feed through a
-foreachBatch sink that applies the DBSP/Materialize maintenance algebra:
+change-data base table; :class:`MaterializedViewMaintainer.refresh`
+drains the base's pending versions with ONE batch read of its four-type
+change feed (``IncrementalRunner.table_changes(..., preimages=True)``)
+and applies it once with the DBSP/Materialize maintenance algebra:
 
   * ``count`` / ``sum``      — signed deltas, never a base read;
   * ``min`` / ``max``        — monotone extension when the algebra
@@ -30,11 +31,24 @@ deltas, support transitions, the cheap-path MV arithmetic — stays
 distributed. Group tombstones need NO read: the signed count proves a
 group emptied.
 
-Crash ordering: the MV merge commits BEFORE the support merges, all
-under one (app_id, txn_version) per target — a replay after a partial
-failure recomputes transitions from the still-unchanged support and the
-already-applied merge skips via the txn ledger; writing support first
-would make a replayed batch compute transitions from post-state.
+Feed positions: the consumed base version is each target's own txn
+ledger entry (``merge_txn``), committed in the SAME manifest commit as
+the data — no checkpoint or side file. A refresh reads the pending
+range (consumed, current] in one batch call and applies it once, so the
+probes' CURRENT state is the range-end state by construction. The first
+refresh (nothing consumed) reads the base snapshot as inserts, the
+initial-snapshot rule of a change-feed stream starting at version 0.
+
+Crash ordering: the MV merge commits BEFORE the support merges. A crash
+between them leaves the support ledgers one range behind the MV's; the
+next refresh first re-applies exactly that range (consumed-by-support,
+consumed-by-MV] under the MV's txn version, where ``apply_batch`` sees
+the MV ledger already at it and SKIPS the MV-side delta computation and
+its sanity asserts (they would recompute against post-merge state and
+fire 'IVM state and feed disagree'), running only the support merges —
+their transitions recompute correctly from the still-unchanged support.
+Writing support first would make a replayed range compute transitions
+from post-state.
 
 Contracts (documented, fast-failed where checkable): the base commits
 write-time change files (``ModelSpec.change_data=True``); group-by
@@ -44,28 +58,19 @@ other byte in a value can never merge two composite keys); min/max,
 sum and avg source columns are non-NULL; sum/avg source columns are
 numeric (validated against the base manifest's dtypes at construction
 — aggregate outputs carry the SQL result type, never a silent bigint
-truncation); catch-up runs as a SINGLE availableNow batch (the probes
-read CURRENT state = batch-end state — the change-feed source itself
-REFUSES maxVersionsPerBatch, see pydatasource._ManifestCDF).
-
-Replay safety (foreachBatch is at-least-once): each apply_batch first
-consults the txn ledger — if the MV merge for this batch_id already
-committed (a crash landed between the MV commit and the checkpoint
-commit), the MV-side delta computation and its sanity asserts are
-SKIPPED (they would otherwise recompute against post-merge state and
-fire 'IVM state and feed disagree'), and only the support-table merges
-run — each idempotent via its own ledger entry.
+truncation); the base's pending range stays inside its retained history
+(``RETAIN_VERSIONS`` / ``RETENTION_SECONDS``).
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .incremental import IncrementalRunner, ModelSpec
-from .util import await_or_raise
 
 _ALLOWED = {"count", "sum", "min", "max", "count_distinct", "avg"}
 
@@ -150,38 +155,26 @@ class MVDefinition:
             raise ValueError(f"{self.name}: duplicate aggregate aliases")
 
 
-def _single_batch_guard(maintainer, start: int):
-    """One-refresh sink wrapper enforcing the CURRENT-state contract
-    BEFORE any work (VERDICT r13 item 4): the maintainers' state probes
-    read CURRENT state = batch-end state, which is only sound when the
-    whole availableNow catch-up arrives as ONE batch. If the feed ever
-    delivers a second batch in the same refresh (e.g. someone rebuilt
-    the feed with maxVersionsPerBatch admission control), the sink
-    refuses at the TOP of batch 2 — batch 1 is fully committed and
-    checkpointed, nothing is half-applied — instead of asserting after
-    wrong probes already merged."""
-
-    def sink(batch_df, batch_id):
-        if len(maintainer._batches) - start >= 1:
-            raise RuntimeError(
-                f"{type(maintainer).__name__}: IVM CURRENT-state contract "
-                "violated — the change feed delivered more than one batch "
-                "in a single refresh (was maxVersionsPerBatch set on the "
-                "feed?); state probes would read batch-end state for a "
-                "mid-stream batch"
-            )
-        maintainer.apply_batch(batch_df, batch_id)
-
-    return sink
+def _pending(
+    runner: IncrementalRunner, model: str, key: str, lo: int | None, hi: int
+) -> DataFrame:
+    """``model``'s four-type change rows over the version range (lo, hi]
+    in one batch read. ``lo`` None = nothing consumed yet: the snapshot
+    at ``hi`` arrives as inserts (the initial-snapshot rule)."""
+    if lo is None:
+        return runner.read_target(model, version=hi).withColumn(
+            "_change_type", F.lit("insert")
+        )
+    return runner.table_changes(model, key, lo, hi, preimages=True)
 
 
 class MaterializedViewMaintainer:
     """Maintains one :class:`MVDefinition` exactly off its base's
     four-type change feed. ``refresh(spark)`` drains pending base
-    versions (availableNow); ``read(spark)`` returns the MV's current
-    rows under the declared aliases. ``path_log`` records, per applied
-    batch, (probe rels, committed rels, n recompute groups) — the
-    change-proportionality audit trail entries assert on."""
+    versions (one batch read, one apply); ``read(spark)`` returns the
+    MV's current rows under the declared aliases. ``path_log`` records,
+    per applied batch, (probe rels, committed rels, n recompute groups)
+    — the change-proportionality audit trail entries assert on."""
 
     def __init__(self, runner: IncrementalRunner, mv: MVDefinition):
         self.runner = runner
@@ -263,8 +256,14 @@ class MaterializedViewMaintainer:
             )
             for a in self.distincts
         }
+        # (target, txn app id) per ledger — MV first, then supports; the
+        # ledger version is the base version that target has consumed
+        self.ledgers = {None: (mv.name, f"ivm_{mv.name}")}
+        for a in self.distincts:
+            self.ledgers[a.alias] = (
+                self.sup_specs[a.alias].name, f"ivm_{mv.name}_sup_{a.alias}"
+            )
         self.path_log: list = []
-        self._batches: list = []
 
     # -- key/bucket helpers -------------------------------------------------
     def _gk(self):
@@ -289,7 +288,6 @@ class MaterializedViewMaintainer:
     # -- the maintenance algebra --------------------------------------------
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         mv, runner, G = self.mv, self.runner, self.G
-        self._batches.append(batch_id)
         rows = batch_df.persist()
         try:
             if not rows.count():
@@ -361,19 +359,15 @@ class MaterializedViewMaintainer:
                     ),
                 ).persist()
 
-            # foreachBatch redelivery (ADVICE r13): if the MV merge for
-            # this batch_id already committed (crash between the MV
-            # commit and the checkpoint commit), recomputing MV deltas
-            # here would read POST-merge state and fire the sanity
-            # assert. Skip straight to the support merges — each is
-            # idempotent via its own ledger, and the support transitions
-            # recompute correctly from the still-unchanged support.
-            app_id = f"ivm_{mv.name}"
-            last = (
-                runner.txn_last_version(mv.name, app_id)
-                if runner.target_exists(mv.name)
-                else None
-            )
+            # replayed range (ADVICE r13): if the MV merge for this
+            # batch_id already committed (crash between the MV commit
+            # and the support commits), recomputing MV deltas here would
+            # read POST-merge state and fire the sanity assert. Skip
+            # straight to the support merges — each is idempotent via
+            # its own ledger, and the support transitions recompute
+            # correctly from the still-unchanged support.
+            app_id = self.ledgers[None][1]
+            last = runner.txn_last_version(mv.name, app_id)
             if last is not None and last >= batch_id:
                 for a in self.distincts:
                     tj = sup_transitions(a)
@@ -587,42 +581,34 @@ class MaterializedViewMaintainer:
         sup_cols.append((F.col("__s_new") == 0).alias("__del"))
         self.runner.merge_txn(
             self.sup_specs[a.alias], tj.select(*sup_cols),
-            app_id=f"ivm_{mv.name}_sup_{a.alias}",
+            app_id=self.ledgers[a.alias][1],
             txn_version=batch_id,
         )
 
-    # -- streaming glue -------------------------------------------------
-    def _single_batch_sink(self, start: int):
-        return _single_batch_guard(self, start)
-
-    def refresh(self, spark: SparkSession, timeout: int = 300) -> None:
-        """Drain pending base versions through ONE availableNow batch.
-        The probes read CURRENT state = batch-end state only under
-        single-batch catch-up, so the feed never sets
-        maxVersionsPerBatch (asserted)."""
-        from .sources.pydatasource import register_manifest_cdf_source
-
-        register_manifest_cdf_source(spark)
-        start = len(self._batches)
-        feed = (
-            spark.readStream.format("mycarely_manifest_cdf")
-            .option("root", self.runner.target_root)
-            .option("model", self.mv.base)
-            .option("key", self.mv.base_key)
-            .option("preimages", "true")
-            .load()
+    # -- batch drain ----------------------------------------------------
+    def refresh(self, spark: SparkSession | None = None) -> None:
+        """Drain the pending base versions (consumed, current] with ONE
+        batch read of the change feed and ONE ``apply_batch`` — the
+        probes read CURRENT state, which is the range-end state because
+        the whole range is one apply. Consumed positions are the
+        targets' own txn ledgers, committed with the data (no
+        checkpoint); nothing pending commits nothing. They differ only
+        after a crash between the MV and support commits: the lagging
+        supports' range is then re-applied first, exactly as it ran
+        (the MV side skips via its ledger), before the regular drain.
+        ``spark`` is accepted for call compatibility; the runner's
+        session does the work."""
+        runner, mv = self.runner, self.mv
+        end = runner.current_manifest(mv.base)["version"]
+        done = sorted(
+            {runner.txn_last_version(*t) for t in self.ledgers.values()},
+            key=lambda v: -1 if v is None else v,
         )
-        q = (
-            feed.writeStream.foreachBatch(self._single_batch_sink(start))
-            .option(
-                "checkpointLocation",
-                f"{self.runner.target_root}/_ckpt_ivm_{self.mv.name}",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout)
-        assert len(self._batches) - start <= 1, self._batches
+        for lo, hi in zip(done, [*done[1:], end]):
+            if lo != hi:
+                self.apply_batch(
+                    _pending(runner, mv.base, mv.base_key, lo, hi), hi
+                )
 
     def read(self, spark: SparkSession | None = None) -> DataFrame:
         """Current MV rows under the declared output columns: stored
@@ -645,6 +631,10 @@ class MaterializedViewMaintainer:
                 "*", *[f"({expr}) AS {alias}" for alias, expr in self.mv.derived]
             )
         return out
+
+
+# view-manifest meta key holding the join view's {fact, dim} positions
+_JV_POSITIONS = "feed_positions"
 
 
 @dataclass
@@ -728,8 +718,9 @@ class JoinViewDefinition:
 
 class JoinViewMaintainer:
     """Maintains one :class:`JoinViewDefinition` exactly off a UNION of
-    the fact's and dim's four-type feeds (one checkpoint — both sources
-    advance atomically per batch). Per batch, the affected key set is
+    the fact's and dim's four-type feeds, read in one batch per refresh
+    (both feed positions commit atomically with the view's data). Per
+    batch, the affected key set is
 
         keys = keys(ΔF)  ∪  keys(F'[pred] ⋉ join_keys(ΔD))
 
@@ -745,8 +736,8 @@ class JoinViewMaintainer:
     state) plus the pruned slice — manifest-only file selection,
     asserted via ``path_log``. Change-proportional: only the changed
     join-key lists collect to the driver (the dim is broadcast-scale by
-    contract). Same single-batch CURRENT-state contract as the
-    aggregate maintainer (asserted per refresh)."""
+    contract). Same CURRENT-state contract as the aggregate maintainer:
+    one refresh is one apply over the whole pending range."""
 
     def __init__(self, runner: IncrementalRunner, jv: JoinViewDefinition):
         self.runner = runner
@@ -790,7 +781,6 @@ class JoinViewMaintainer:
             change_data=jv.emit_changes,
         )
         self.path_log: list = []  # (d_rels, committed, files_ok|None)
-        self._batches: list = []
 
     def _buckets(self, key_df: DataFrame) -> list[str]:
         """Bucket rels for the join keys in ``key_df`` (fact-side column
@@ -811,9 +801,12 @@ class JoinViewMaintainer:
             dim = dim.filter(F.expr(self.jv.dim_filter))
         return dim
 
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def apply_batch(
+        self, batch_df: DataFrame, batch_id: int, positions: dict | None = None
+    ) -> None:
+        """Apply one batch of fact/dim change rows; ``positions`` (the
+        feed versions the batch ends at) commit with the view's merge."""
         jv, runner, FJ = self.jv, self.runner, self.FJ
-        self._batches.append(batch_id)
         rows = batch_df.persist()
         try:
             if not rows.count():
@@ -899,62 +892,54 @@ class JoinViewMaintainer:
             runner.merge_txn(
                 self.view_spec, apply,
                 app_id=f"jv_{jv.name}", txn_version=batch_id,
+                meta_update={_JV_POSITIONS: positions} if positions else None,
             )
             d_keys_df.unpersist()
         finally:
             rows.unpersist()
 
-    def _single_batch_sink(self, start: int):
-        return _single_batch_guard(self, start)
-
-    def refresh(self, spark: SparkSession, timeout: int = 300) -> None:
-        """Drain BOTH feeds through one availableNow batch (shared
-        checkpoint — the two sources' offsets advance atomically).
-        Single-batch CURRENT-state contract asserted, as for the
-        aggregate maintainer."""
-        from .sources.pydatasource import register_manifest_cdf_source
-
-        register_manifest_cdf_source(spark)
-        jv = self.jv
-        start = len(self._batches)
-
-        def cdf(model, key):
-            return (
-                spark.readStream.format("mycarely_manifest_cdf")
-                .option("root", self.runner.target_root)
-                .option("model", model)
-                .option("key", key)
-                .option("preimages", "true")
-                .load()
-            )
-
-        fkey_t = dict(
-            self.runner.current_manifest(jv.fact)["dtypes"]
-        )[jv.fact_key]
+    def refresh(self, spark: SparkSession | None = None) -> None:
+        """Drain BOTH feeds' pending versions in one batch read and one
+        ``apply_batch``. The fact and dim positions ride in the view's
+        manifest meta, committed with its data (no checkpoint); the
+        view's txn ledger counts applies. Nothing pending commits
+        nothing. On the first refresh the fact snapshot arrives as
+        inserts, which already makes every fact key affected, so the dim
+        snapshot is not read. ``spark`` is accepted for call
+        compatibility; the runner's session does the work."""
+        jv, runner = self.jv, self.runner
+        view = runner.current_manifest(jv.name) or {}
+        pos = (view.get("meta") or {}).get(_JV_POSITIONS) or {}
+        fact_m = runner.current_manifest(jv.fact)
+        end = {
+            "fact": fact_m["version"],
+            "dim": runner.current_manifest(jv.dim)["version"],
+        }
+        fkey_t = dict(fact_m["dtypes"])[jv.fact_key]
         # both feeds project to (fact_key, *fact-side join cols): the
         # dim side renames its join columns to the fact-side names so
         # the bucket expr and the semi-join probe evaluate uniformly
-        fs = cdf(jv.fact, jv.fact_key).select(
-            jv.fact_key, *self.FJ,
-            F.lit("fact").alias("_src"), "_change_type",
-        )
-        ds = cdf(jv.dim, jv.dim_key).select(
-            F.lit(None).cast(fkey_t).alias(jv.fact_key),
-            *[F.col(dc).alias(fc) for fc, dc in jv.join_on],
-            F.lit("dim").alias("_src"), "_change_type",
-        )
-        q = (
-            fs.unionByName(ds)
-            .writeStream.foreachBatch(self._single_batch_sink(start))
-            .option(
-                "checkpointLocation",
-                f"{self.runner.target_root}/_ckpt_jv_{jv.name}",
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, timeout)
-        assert len(self._batches) - start <= 1, self._batches
+        feeds = []
+        if pos.get("fact") != end["fact"]:
+            feeds.append(_pending(
+                runner, jv.fact, jv.fact_key, pos.get("fact"), end["fact"]
+            ).select(
+                jv.fact_key, *self.FJ,
+                F.lit("fact").alias("_src"), "_change_type",
+            ))
+        if "fact" in pos and pos["dim"] != end["dim"]:
+            feeds.append(_pending(
+                runner, jv.dim, jv.dim_key, pos["dim"], end["dim"]
+            ).select(
+                F.lit(None).cast(fkey_t).alias(jv.fact_key),
+                *[F.col(dc).alias(fc) for fc, dc in jv.join_on],
+                F.lit("dim").alias("_src"), "_change_type",
+            ))
+        if not feeds:
+            return
+        batch = functools.reduce(DataFrame.unionByName, feeds)
+        applied = runner.txn_last_version(jv.name, f"jv_{jv.name}") or 0
+        self.apply_batch(batch, applied + 1, end)
 
     def read(self, spark: SparkSession | None = None) -> DataFrame:
         jv = self.jv

@@ -1897,6 +1897,17 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         A = pdf[pdf["b"] == b1].sort_values("vec_id", ignore_index=True)
         Bb = pdf[pdf["b"] == b2].sort_values("vec_id", ignore_index=True)
+        if A.empty or Bb.empty:
+            # no cross pair: the cluster has no vector in one of the two
+            # blocks (any cluster smaller than S); the diagonal groups
+            # already emit every present vector with its verdict
+            return pd.DataFrame(
+                {
+                    "vec_id": pd.Series(dtype="int64"),
+                    "cid": pd.Series(dtype="int64"),
+                    "pruned": pd.Series(dtype="bool"),
+                }
+            )
         EA = np.stack(A["embedding"].to_numpy()).astype(np.float64)
         EB = np.stack(Bb["embedding"].to_numpy()).astype(np.float64)
         na = A["nrm"].to_numpy(dtype=np.float64)

@@ -3063,7 +3063,6 @@ def _mvr_flow(spark, sf_dir: str, make_maintainer):
     root = tempfile.mkdtemp(prefix="mycarely_mvr_")
     runner = IncrementalRunner(spark, root)
     runner.RETENTION_SECONDS = 3600.0
-    register_manifest_cdf_source(spark)
 
     def base_build(n):
         def b(sp, sfd, wm):
@@ -3199,7 +3198,7 @@ def q_jv_incremental_refresh(spark, sf_dir: str):
     UPDATE wave moves ck AND ckb (copy-on-write DML migrates rows across
     hive partitions); a dim delete tombstones dangling view rows while a
     simultaneous same-key insert wave stays out (both sources in one
-    microbatch); replay is a version-pinned no-op."""
+    refresh); replay is a version-pinned no-op."""
     import dataclasses
     import shutil
     import tempfile
@@ -3213,7 +3212,6 @@ def q_jv_incremental_refresh(spark, sf_dir: str):
     root = tempfile.mkdtemp(prefix="mycarely_jvr_")
     runner = IncrementalRunner(spark, root)
     runner.RETENTION_SECONDS = 3600.0
-    register_manifest_cdf_source(spark)
 
     def fact_build(n):
         def b(sp, sfd, wm):
@@ -3267,7 +3265,7 @@ def q_jv_incremental_refresh(spark, sf_dir: str):
     runner.run(                                          # insert wave 2
         dataclasses.replace(fact_spec, build=fact_build(600)), sf_dir
     )
-    m.refresh(spark)  # BOTH sources in one microbatch
+    m.refresh(spark)  # BOTH sources in one refresh
     v_mv = runner.current_manifest("jvr_view")["version"]
     m.refresh(spark)                                     # replay: no-op
     assert runner.current_manifest("jvr_view")["version"] == v_mv
@@ -3765,7 +3763,6 @@ def q_ivm_traffic_daily(spark, sf_dir: str):
     root = tempfile.mkdtemp(prefix="mycarely_ivmtd_")
     runner = IncrementalRunner(spark, root)
     runner.RETENTION_SECONDS = 3600.0
-    register_manifest_cdf_source(spark)
 
     def ev_build(pred):
         def b(sp, sfd, wm):

@@ -52,15 +52,23 @@ def source_column_max(sf_dir: str, file_name: str, col: str):
     metadata-only, no Spark job (r15, guide §1.2: eight lifecycle entries
     each paid one full-scan aggregate job for a scalar the file footer
     already carries; the manifest `watermark` does the same trick for
-    committed tables). Parquet column statistics are exact (not
+    committed tables). Integer column statistics are exact (not
     estimates); returns None — caller falls back to the Spark aggregate —
-    when the file is missing, any non-empty row group lacks usable stats,
-    or the column is absent."""
+    when the file is missing, the column is absent or not an integer
+    type, or any non-empty row group lacks usable stats. Other types
+    take the fallback because their footer values can disagree with
+    Spark's: timestamp stats come back tz-naive (and ns units truncate
+    to us) where Spark collects driver-local datetimes, and string stats
+    may be truncated."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, file_name)
     try:
-        md = pq.ParquetFile(path).metadata
+        pf = pq.ParquetFile(path)
+        if not pa.types.is_integer(pf.schema_arrow.field(col).type):
+            return None
+        md = pf.metadata
     except Exception:
         return None
     best = None

@@ -1897,3 +1897,21 @@ def test_table_changes_preimages_and_empty_merge_output(spark, target_root):
     assert out.count() == 1 and out.first()["k"] == 3
     m = runner.current_manifest("pre_t")
     assert "day=2024-01-01" not in m["partitions"]
+
+
+def test_ingest_threads_env_parse_falls_back_on_malformed(monkeypatch):
+    """MYCARELY_INGEST_THREADS: an integer overrides (floored at 1); an
+    unset or malformed value falls back to the CPU-derived default
+    instead of raising inside every commit."""
+    from mycarely_saas_dbt_spark.incremental import _ingest_threads
+
+    monkeypatch.delenv("MYCARELY_INGEST_THREADS", raising=False)
+    default = _ingest_threads()
+    assert 4 <= default <= 16
+    monkeypatch.setenv("MYCARELY_INGEST_THREADS", "3")
+    assert _ingest_threads() == 3
+    monkeypatch.setenv("MYCARELY_INGEST_THREADS", "0")
+    assert _ingest_threads() == 1
+    for bad in ("auto", "", "2.5"):
+        monkeypatch.setenv("MYCARELY_INGEST_THREADS", bad)
+        assert _ingest_threads() == default, bad

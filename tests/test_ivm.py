@@ -758,25 +758,147 @@ def test_aggregate_over_join_composition(spark, target_root):
     check()
 
 
-def test_single_batch_contract_enforced_before_work(spark, target_root):
-    """VERDICT r13 item 4: the CURRENT-state contract is enforced at the
-    TOP of a second batch within one refresh — before any probe or
-    merge — not asserted after the hop ran. (The CDF source's
-    maxVersionsPerBatch admission control is a legitimate feature for
-    other consumers; a maintainer fed a capped feed must refuse.)"""
+def _record_applies(monkeypatch, m) -> list:
+    """Batch ids of every apply_batch call on maintainer ``m``."""
+    calls, orig = [], m.apply_batch
+
+    def rec(batch_df, batch_id, *a):
+        calls.append(batch_id)
+        return orig(batch_df, batch_id, *a)
+
+    monkeypatch.setattr(m, "apply_batch", rec)
+    return calls
+
+
+def test_refresh_applies_whole_pending_range_once(
+    spark, target_root, monkeypatch
+):
+    """One refresh is one apply: three pending base versions drain in a
+    single apply_batch over the whole range (consumed, current], whose
+    batch id is the range-end base version — the consumed position each
+    target commits in its own txn ledger. The result equals the batch
+    GROUP BY, and a refresh with nothing pending commits no version on
+    the MV or its support table."""
     from mycarely_saas_dbt_spark.incremental import IncrementalRunner
-    from mycarely_saas_dbt_spark.ivm import MaterializedViewMaintainer
+    from mycarely_saas_dbt_spark.ivm import (
+        MaterializedViewMaintainer,
+        MVAggregate,
+    )
 
     r = IncrementalRunner(spark, target_root)
-    r.run(_base_spec(), SF_DIR)
-    m = MaterializedViewMaintainer(r, _defn())
-    applied = []
-    m.apply_batch = lambda df, bid: (applied.append(bid), m._batches.append(bid))
-    sink = m._single_batch_sink(start=len(m._batches))
-    sink(None, 0)  # first batch of the refresh: applied
-    with pytest.raises(RuntimeError, match="CURRENT-state contract"):
-        sink(None, 1)  # second batch: refused BEFORE any work
-    assert applied == [0]
+    r.RETENTION_SECONDS = 3600.0
+    spec = _base_spec()
+    r.run(spec, SF_DIR)
+    m = MaterializedViewMaintainer(r, _defn(aggregates=[
+        MVAggregate("count", None, "n"),
+        MVAggregate("min", "x", "min_x"),
+        MVAggregate("count_distinct", "u", "uniq_u"),
+    ]))
+    calls = _record_applies(monkeypatch, m)
+    m.refresh(spark)  # bootstrap: the v1 snapshot as inserts
+    assert calls == [1]
+    r.update_where(spec, "k % 7 = 2", {"x": "x + 500", "u": "(u + 1) % 5"})
+    r.delete_where(spec, "k % 11 = 3")
+    r.delete_where(spec, "g = 4")
+    end = r.current_manifest("ivm_b")["version"]
+    assert end == 4
+    m.refresh(spark)
+    assert calls == [1, end]
+    for name, app in m.ledgers.values():
+        assert r.txn_last_version(name, app) == end, name
+    expected = (
+        r.read_target("ivm_b")
+        .groupBy("g")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.min("x").cast("bigint").alias("min_x"),
+            F.count_distinct("u").cast("bigint").alias("uniq_u"),
+        )
+    )
+    got = m.read()
+    assert got.count() == expected.count()
+    assert got.exceptAll(expected).count() == 0
+
+    versions = {n: r.current_manifest(n)["version"] for n, _ in m.ledgers.values()}
+    m.refresh(spark)  # nothing pending
+    assert calls == [1, end]
+    assert {n: r.current_manifest(n)["version"] for n in versions} == versions
+
+
+def test_join_view_catch_up_and_dim_only_refresh(
+    spark, target_root, monkeypatch
+):
+    """The join view drains both feeds with one apply per refresh: a
+    dim-only refresh over two pending dim versions (the pruned fact
+    probe, fact position unchanged), then a catch-up over several fact
+    AND dim versions, each equal to the batch join; both positions
+    commit in the view's manifest, and nothing pending commits
+    nothing."""
+    from mycarely_saas_dbt_spark.incremental import (
+        IncrementalRunner,
+        ModelSpec,
+    )
+    from mycarely_saas_dbt_spark.ivm import (
+        JoinViewDefinition,
+        JoinViewMaintainer,
+    )
+
+    r = IncrementalRunner(spark, target_root)
+    r.RETENTION_SECONDS = 3600.0
+    fact_spec = _base_spec()
+    dim_spec = ModelSpec(
+        "jv_dim", "g", "g",
+        lambda sp, sfd, wm: sp.range(10).select(
+            F.col("id").alias("g"),
+            F.concat(F.lit("L"), F.col("id")).alias("label"),
+        ),
+        change_data=True,
+    )
+    r.run(fact_spec, SF_DIR)
+    r.run(dim_spec, SF_DIR)
+    m = JoinViewMaintainer(r, JoinViewDefinition(
+        "jv_t", "ivm_b", "k", "jv_dim", "g",
+        fact_cols=["x"], dim_cols=["label"],
+        fact_bucket_expr="g % 4", fact_bucket_col="gb",
+        view_bucket_expr="k % 4", view_bucket_col="kb",
+    ))
+    calls = _record_applies(monkeypatch, m)
+
+    def positions():
+        return r.current_manifest("jv_t")["meta"]["feed_positions"]
+
+    def check():
+        exp = r.read_target("ivm_b").join(
+            r.read_target("jv_dim"), "g", "inner"
+        ).select("k", "g", "x", "label")
+        got = m.read()
+        assert got.count() == exp.count()
+        assert got.exceptAll(exp).count() == 0
+
+    m.refresh(spark)
+    assert calls == [1] and positions() == {"fact": 1, "dim": 1}
+    check()
+
+    r.update_where(dim_spec, "g = 1", {"label": "concat(label, '_a')"})
+    r.update_where(dim_spec, "g = 5", {"label": "concat(label, '_b')"})
+    m.refresh(spark)  # dim-only, two pending dim versions
+    assert calls == [1, 2] and positions() == {"fact": 1, "dim": 3}
+    d_rels, _, files_ok = m.path_log[-1]
+    assert d_rels == ["gb=1"] and files_ok is True, m.path_log
+    check()
+
+    r.update_where(fact_spec, "k % 7 = 2", {"x": "x + 500"})
+    r.delete_where(fact_spec, "k % 11 = 3")
+    r.delete_where(dim_spec, "g = 6")
+    r.update_where(dim_spec, "g = 2", {"label": "concat(label, '_c')"})
+    m.refresh(spark)  # catch-up: 2 fact + 2 dim versions, one apply
+    assert calls == [1, 2, 3] and positions() == {"fact": 3, "dim": 5}
+    check()
+
+    v = r.current_manifest("jv_t")["version"]
+    m.refresh(spark)  # nothing pending
+    assert calls == [1, 2, 3]
+    assert r.current_manifest("jv_t")["version"] == v
 
 
 def test_mv_maintainer_races_disjoint_writer(spark, target_root, monkeypatch):

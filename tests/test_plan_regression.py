@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import re
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SF_SMALL
 
 
 def _plan(df) -> str:
@@ -400,6 +400,22 @@ def test_semdedup_block_split_path_matches_single_task_path(
     assert base == split
     plan = _plan(semdedup(spark, SF_DIR))
     assert "CartesianProduct" not in plan, plan
+
+
+def test_semdedup_split_path_tolerates_clusters_missing_a_block(
+    spark, monkeypatch
+):
+    """Regression: with one vector per block target, sf0.001 splits into
+    S=32 blocks, so most clusters leave some block empty and many
+    off-diagonal (cid, b1, b2) groups have one side empty. Those groups
+    hold no cross pair and must yield no rows (they used to fail on
+    np.stack of nothing); the result equals the single-task path."""
+    from mycarely_saas_dbt_spark.operators.similarity import semdedup
+
+    base = [tuple(r) for r in semdedup(spark, SF_SMALL).collect()]
+    monkeypatch.setenv("MYCARELY_SEMDEDUP_BLOCK", "1")
+    split = [tuple(r) for r in semdedup(spark, SF_SMALL).collect()]
+    assert split == base
 
 
 def test_hybrid_rrf_query_path_uses_committed_prior(spark):
