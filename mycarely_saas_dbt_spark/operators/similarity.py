@@ -697,8 +697,8 @@ def _pq_encode_df(e: DataFrame, C, B) -> DataFrame:
     higher-order functions over literal arrays; interpreted per-element
     HOF evaluation cost ~2 ms/row — the batched matrix form is ~100×
     faster and is how an encoder would actually run at 100 TB. (No
-    fanout_scan: the r6 paired A/B measured the protective repartition as
-    a net loss here too — scripts/ab_fanout.py.)"""
+    protective repartition before the encode: the r6 paired A/B measured
+    it as a net loss here too.)"""
     import numpy as np
 
     C_enc, B_enc = np.asarray(C, dtype=np.float64), np.asarray(B, dtype=np.float64)

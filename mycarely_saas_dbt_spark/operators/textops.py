@@ -528,8 +528,8 @@ def _winnow_batches(docs: DataFrame, *, exploded: bool) -> DataFrame:
              "min_fp bigint, max_fp bigint"
     )
     # Arrow stages inherit the scan's split count; the r6 interleaved A/B
-    # (scripts/ab_fanout.py) measured the protective repartition as a net
-    # LOSS at every site, so the scorer rides the scan's own splits.
+    # measured a protective repartition as a net LOSS at every site, so
+    # the scorer rides the scan's own splits.
     return docs.mapInPandas(run, schema)
 
 

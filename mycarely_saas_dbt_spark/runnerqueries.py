@@ -2091,11 +2091,15 @@ def colmap_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         base = runner.read_target("rr_base").select("k", "amount", "s")
         sink = runner.read_target("rr_sink").select("k", "amount", "s")
-        # cheap row-count sanity only (r15): the full exceptAll content
-        # compare here duplicated the oracle hash-match the driver runs
-        # on the returned frame (and the hop-B exceptAll already proved
-        # the cross-rename mechanism mid-lifecycle)
-        assert sink.count() == base.count()
+
+        def digest(df):
+            # row count plus an order-independent content checksum, one
+            # aggregate per side (the hop-B exceptAll already proved the
+            # cross-rename mechanism); a decimal sum cannot overflow
+            h = F.xxhash64("k", "amount", "s").cast("decimal(38,0)")
+            return tuple(df.agg(F.count(F.lit(1)), F.sum(h)).first())
+
+        assert digest(sink) == digest(base)
         return materialize(sink.orderBy("k"))
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -421,13 +421,14 @@ def register_manifest_stream_source(spark) -> None:
 # Scale shape (r10 — VERDICT r9 item 1): for tables with
 # spec.change_data, every mutating commit ALSO committed its change rows
 # as key-bucketed `_change_data/` files, and a batch over such versions
-# is a PURE FILE READ — one netting task per key bucket, task memory =
-# that bucket's change rows, never a snapshot. The snapshot-diff path
-# below survives as the fallback for versions without change files
-# (full refresh, RESTORE, never-opted-in tables): one task per CHANGED
-# partition-rel, arrow/pandas inside the task; its deletion-vector leg
-# reads the KB-scale sidecars and scans only from-snapshot files whose
-# manifest min/max can contain a newly-deleted key. The initial load
+# is a PURE FILE READ — one netting task per packed key-bucket range,
+# task memory = that range's change rows, never a snapshot. The
+# snapshot-diff path below survives as the fallback for versions without
+# change files (full refresh, RESTORE, never-opted-in tables): one task
+# per CHANGED partition-rel, arrow/pandas inside the task; its
+# deletion-vector leg reads the KB-scale sidecars and scans only
+# from-snapshot files whose manifest min/max can contain a newly-deleted
+# key. The initial load
 # (startingversion 0) is one task per committed FILE, emitted as
 # inserts — Delta's initial-snapshot semantics.
 # ---------------------------------------------------------------------------
@@ -472,14 +473,16 @@ class _CdfSnapshotInsert(InputPartition):
 
 
 class _CdfChangeBucket(InputPartition):
-    """Write-time change-file leg: every `_change_data/` file of one or
-    more WHOLE key buckets across the batch's versions. Bucketing at
-    write time puts all of a key's events in the same bucket, so
-    per-batch netting is local to the task; task memory is the packed
-    buckets' CHANGE rows — never a snapshot. The planner packs whole
-    buckets into one leg by on-disk byte size (VERDICT r10 item 1:
-    write-fine, group-coarse), so the cap holds regardless of churn or
-    catch-up depth while each key's events stay within one task.
+    """Write-time change-file leg: the contiguous key-bucket range
+    [lo, hi] across the batch's versions. Every row carries its key
+    bucket, so all of a key's events share one bucket and per-batch
+    netting is local to the task; the leg reads every `_change_data/`
+    file whose recorded bucket range overlaps [lo, hi] and keeps only
+    the rows inside it. Task memory is the range's CHANGE rows — never
+    a snapshot. The planner packs contiguous buckets into one leg by
+    their share of on-disk bytes (VERDICT r10 item 1: write-fine,
+    group-coarse), so the cap holds regardless of churn or catch-up
+    depth while legs never share a bucket.
 
     ``srcs`` (r12 — rename-aware feeds): per VERSION, declared output
     column -> the name it carries in that version's change files (the
@@ -488,10 +491,14 @@ class _CdfChangeBucket(InputPartition):
     (NULL-fill) or was dropped on the way (its era bytes must never be
     read — the resurrection fence at the feed level)."""
 
-    def __init__(self, buckets, files, srcs=None):
-        self.buckets = tuple(buckets)
+    def __init__(self, lo, hi, files, srcs=None):
+        self.lo, self.hi = lo, hi
         self.files = files  # [(version, abs path), ...] version-ordered
         self.srcs = srcs or {}
+
+    @property
+    def buckets(self) -> tuple:
+        return tuple(range(self.lo, self.hi + 1))
 
 
 def _dv_key_set(paths) -> set:
@@ -557,7 +564,7 @@ class ManifestCDFStreamReader(ManifestStreamReader):
                 self.root, self.model, float(st)
             )
         # cap on one netting task's change-file bytes (the packer groups
-        # whole buckets up to this); option `cdfTaskTargetBytes`
+        # contiguous buckets up to this); option `cdfTaskTargetBytes`
         self.task_target_bytes = int(
             options.get("cdftasktargetbytes", CDF_TASK_TARGET_BYTES)
         )
@@ -631,8 +638,9 @@ class ManifestCDFStreamReader(ManifestStreamReader):
         if legs is not None:
             # every version in the batch committed write-time change
             # files: NO base data file is opened — one netting task per
-            # key bucket (DV deletes are already IN the change files;
-            # renames translate per version via the legs' `srcs` maps)
+            # key-bucket range (DV deletes are already IN the change
+            # files; renames translate per version via the legs' `srcs`
+            # maps)
             return legs or [_CdfRelDiff("", [], [], [], [])]
         # ---- snapshot-diff fallback: it reads BASE files under the
         # declared logical dtypes, which genuinely cannot represent a
@@ -799,12 +807,15 @@ class ManifestCDFStreamReader(ManifestStreamReader):
         return out or single()
 
     def _change_file_legs(self, s: int, e: int) -> list | None:
-        """Per-bucket change-file legs for versions (s, e], or None when
-        any version lacks a write-time change descriptor (snapshot-diff
-        fallback — full refresh, RESTORE, tables that never opted in).
-        All non-empty versions must agree on the bucket count and key, or
-        a key's events would straddle tasks and netting would be wrong —
-        disagreement falls back to the diff.
+        """Bucket-range change-file legs for versions (s, e], or None
+        when any version lacks a write-time change descriptor
+        (snapshot-diff fallback — full refresh, RESTORE, tables that
+        never opted in). All non-empty versions must agree on the bucket
+        count and key, or a key's events would straddle tasks and netting
+        would be wrong — disagreement falls back to the diff. Each leg
+        is a contiguous bucket range, packed from the per-file ``lo``/
+        ``hi`` ranges the writer recorded; a leg lists every file whose
+        range overlaps its own, whatever version wrote it.
 
         RENAME-AWARE (r12): the rename/drop chain between each version
         and the stream's DECLARED schema is reconstructed from the
@@ -860,42 +871,58 @@ class ManifestCDFStreamReader(ManifestStreamReader):
         if len({int(c["buckets"]) for _, c in nonempty}) > 1:
             return None
         base = os.path.join(self.root, self.model, "_change_data")
-        groups: dict[str, list] = {}
+        target = self.task_target_bytes
+        nb = int(nonempty[0][1]["buckets"]) if nonempty else 0
+        files = []  # (lo, hi, version, abs path)
+        # per-bucket byte estimate: a file's bytes spread evenly over its
+        # recorded bucket range (key hashes fill buckets uniformly), as
+        # difference arrays over the bucket axis — a pure metadata
+        # decision (one stat() per change file; change files are
+        # change-proportional, so this is cheap even on a deep catch-up)
+        dens = [0.0] * (nb + 1)
+        cover = [0] * (nb + 1)
         for v, c in nonempty:
             for f in c["files"]:
-                bucket = f.split("/", 1)[0]
-                groups.setdefault(bucket, []).append(
-                    (v, os.path.join(base, c["dir"], f))
-                )
-        # WRITE-FINE, GROUP-COARSE (VERDICT r10 item 1): pack whole
-        # buckets into netting tasks by on-disk byte size — a pure
-        # metadata decision (one stat() per change file; change files
-        # are change-proportional, so this is cheap even on a deep
-        # catch-up). One task's pandas netting is thereby capped at
-        # ~task_target_bytes of parquet regardless of churn or version
-        # depth; a bucket LARGER than the target still rides alone (the
-        # floor is one whole bucket — key locality is the invariant).
-        target = self.task_target_bytes
-        legs: list = []
-        cur_buckets: list = []
-        cur_files: list = []
-        cur_bytes = 0
-        for b, fl in sorted(groups.items()):
-            sz = 0
-            for _, p in fl:
+                lo, hi = int(f["lo"]), int(f["hi"])
+                p = os.path.join(base, c["dir"], f["path"])
                 try:
-                    sz += os.path.getsize(p)
+                    sz = os.path.getsize(p)
                 except OSError:
-                    sz += target  # unstat-able: isolate conservatively
-            if cur_files and cur_bytes + sz > target:
-                legs.append(_CdfChangeBucket(cur_buckets, sorted(cur_files), srcs))
-                cur_buckets, cur_files, cur_bytes = [], [], 0
-            cur_buckets.append(b)
-            cur_files.extend(fl)
-            cur_bytes += sz
-        if cur_files:
-            legs.append(_CdfChangeBucket(cur_buckets, sorted(cur_files), srcs))
-        return legs
+                    sz = target  # unstat-able: isolate conservatively
+                files.append((lo, hi, v, p))
+                dens[lo] += sz / (hi - lo + 1)
+                dens[hi + 1] -= sz / (hi - lo + 1)
+                cover[lo] += 1
+                cover[hi + 1] -= 1
+        # WRITE-FINE, GROUP-COARSE (VERDICT r10 item 1): pack contiguous
+        # buckets into netting tasks by their byte share, so one task's
+        # pandas netting is capped at ~task_target_bytes of parquet
+        # regardless of churn or version depth; a bucket LARGER than the
+        # target still rides alone (the floor is one whole bucket — key
+        # locality is the invariant), and legs never share a bucket.
+        ranges: list = []  # [lo, hi, bytes]
+        d = n = 0
+        for bkt in range(nb):
+            d += dens[bkt]
+            n += cover[bkt]
+            if not n:
+                continue  # no file covers this bucket
+            if ranges and ranges[-1][2] + d <= target:
+                # extends the open leg (across any uncovered gap — it
+                # holds no rows)
+                ranges[-1][1] = bkt
+                ranges[-1][2] += d
+            else:
+                ranges.append([bkt, bkt, d])
+        return [
+            _CdfChangeBucket(
+                lo, hi,
+                sorted((v, p) for flo, fhi, v, p in files
+                       if flo <= hi and fhi >= lo),
+                srcs,
+            )
+            for lo, hi, _ in ranges
+        ]
 
     def _pa_type(self, tname: str):
         import pyarrow as pa
@@ -1016,7 +1043,7 @@ class ManifestCDFStreamReader(ManifestStreamReader):
             yield self._emit(side(dele, "__o"), "delete", rel)
 
     def _read_change_bucket(self, part):
-        """Net the leg's (whole) key buckets' committed change rows
+        """Net the committed change rows of the leg's bucket range
         across the batch's versions: per key, the FIRST version's
         pre-state vs the LAST version's post-state — identical to the
         snapshot diff, computed from change-proportional bytes (capped
@@ -1027,9 +1054,15 @@ class ManifestCDFStreamReader(ManifestStreamReader):
         import pyarrow.parquet as pq
 
         allc = [n for n, _ in self.dtypes]
+        inside = [
+            ("__cdc_bucket", ">=", part.lo),
+            ("__cdc_bucket", "<=", part.hi),
+        ]
         frames = []
         for v, path in part.files:
-            t = pq.read_table(path).to_pandas()
+            # a file may straddle the leg's range: keep only its buckets
+            # (row groups outside the range are skipped on their stats)
+            t = pq.read_table(path, filters=inside).to_pandas()
             src = part.srcs.get(v) if getattr(part, "srcs", None) else None
             if src is not None:
                 # rename-aware read: keep ONLY the columns the planner

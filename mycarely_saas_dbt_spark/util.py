@@ -166,40 +166,6 @@ def session_memo(site: str, sf_dir: str, files: tuple[str, ...], builder):
     return df0
 
 
-def fanout_scan(df: DataFrame) -> DataFrame:
-    """Spread a narrow scan across the executor cores before an
-    explode/UDF-heavy stage.
-
-    Small single-file parquet inputs (one row group) arrive as ONE input
-    partition, so an explode or Arrow stage directly above the scan runs
-    single-threaded no matter how many cores the session has — at sf0.1
-    this made shingling 3.5x slower than the same work on 32 splits. On a
-    real 100 TB lake the scan already has thousands of splits and this is
-    a metadata-only no-op (the condition below is false); the repartition
-    only fires when the input has fewer splits than half the cores, so we
-    never add a shuffle to a well-partitioned source.
-
-    Currently applied at NO call site: the r6 paired interleaved A/B
-    (scripts/ab_fanout.py) measured the protective repartition as a net
-    loss or wash everywhere at sf0.1 — the r5 blanket application made
-    three pure-Catalyst tokenize paths SLOWER (the added exchange cost
-    more than the parallelism bought). The function, its unit test, and
-    the MYCARELY_FANOUT=0 kill switch remain as the
-    measurement record: a future site must re-adopt it explicitly AND
-    show a paired A/B win (the harness only measures sites that call
-    it).
-    """
-    import os
-
-    if os.environ.get("MYCARELY_FANOUT", "1") == "0":
-        return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, target // 2):
-        return df.repartition(target)
-    return df
-
-
 def _prune_mat_dirs() -> None:
     while len(_MAT_DIRS) > _MAT_KEEP:
         shutil.rmtree(_MAT_DIRS.popleft(), ignore_errors=True)

@@ -872,11 +872,11 @@ def test_one_version_table_changes_equals_netted_path(
 
 def test_change_file_legs_pack_buckets_by_bytes(spark, tmp_path, monkeypatch):
     """VERDICT r10 item 1 — write-fine, group-coarse: the CDF planner
-    packs WHOLE key buckets into netting tasks by on-disk byte size, so
-    one task's pandas netting is capped regardless of churn or catch-up
-    depth. Pinned: (a) under a tiny byte target every leg's file bytes
-    stay <= max(target, its largest single bucket); (b) no bucket
-    straddles legs; (c) the default target packs the same fixture into
+    packs contiguous key-bucket ranges into netting tasks by on-disk
+    byte size, so one task's pandas netting is capped regardless of
+    churn or catch-up depth. Pinned: (a) under a tiny byte target every
+    leg's share of file bytes stays <= max(target, its largest single
+    bucket); (b) no bucket straddles legs; (c) the default target packs the same fixture into
     FEWER legs than buckets; (d) both plans net to exactly the batch
     table_changes row set."""
     import datetime as dt
@@ -922,15 +922,26 @@ def test_change_file_legs_pack_buckets_by_bytes(spark, tmp_path, monkeypatch):
     legs = tight.partitions({"version": 1}, {"version": 4})
     assert all(isinstance(p, _CdfChangeBucket) for p in legs)
     assert len(legs) > 1
+    # each file's bytes count evenly over its recorded bucket range; a
+    # leg is charged only the share of the buckets it keeps
+    ranges = {}
+    for v in range(2, 5):
+        c = runner._manifest_at("t", v)["cdc"]
+        for f in c["files"]:
+            path = os.path.join(root, "t", "_change_data", c["dir"], f["path"])
+            ranges[path] = (f["lo"], f["hi"])
     seen_buckets: list = []
     for p in legs:
         seen_buckets.extend(p.buckets)
-        leg_bytes = sum(os.path.getsize(f) for _, f in p.files)
         per_bucket: dict = {}
         for _, f in p.files:
-            b = f.split("/_change_data/", 1)[1].split("/")[1]
-            per_bucket[b] = per_bucket.get(b, 0) + os.path.getsize(f)
-        assert leg_bytes <= max(4000, max(per_bucket.values())), (
+            lo, hi = ranges[f]
+            for b in range(max(lo, p.lo), min(hi, p.hi) + 1):
+                per_bucket[b] = (
+                    per_bucket.get(b, 0) + os.path.getsize(f) / (hi - lo + 1)
+                )
+        leg_bytes = sum(per_bucket.values())
+        assert leg_bytes <= max(4000, max(per_bucket.values())) + 1e-6, (
             p.buckets, leg_bytes, per_bucket,
         )
     assert len(seen_buckets) == len(set(seen_buckets))  # no straddling

@@ -23,24 +23,6 @@ def test_bounded_persist_unpersists_previous_generation(spark):
     pb.unpersist(), pc.unpersist()
 
 
-def test_fanout_scan_spreads_narrow_scans_and_noops_on_wide(spark):
-    """fanout_scan must repartition a single-split scan up to the session
-    parallelism, and be a strict no-op (same plan object) on an input
-    that already has enough splits."""
-    from mycarely_saas_dbt_spark.util import fanout_scan
-
-    narrow = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    assert narrow.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
-    spread = fanout_scan(narrow)
-    assert (
-        spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    )
-    assert spread.count() == narrow.count()
-
-    wide = narrow.repartition(spark.sparkContext.defaultParallelism)
-    assert fanout_scan(wide) is wide  # no extra exchange on a healthy scan
-
-
 def test_session_memo_builds_once_and_invalidates_on_input_change(
     spark, tmp_path, monkeypatch
 ):
