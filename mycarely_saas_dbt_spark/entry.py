@@ -314,7 +314,7 @@ def register(name: str, fn: QueryFn, oracle: str | None = None) -> None:
 # IVFADC build+search is the fixture of the in-window retrain and
 # maintenance entries), `streaming_cdc_apply` (4 artifacts; tombstone
 # CDC application through merge_txn runs in-window inside
-# colmap_cdf_lifecycle's sink and both IVM sinks),
+# colmap_cdf_lifecycle's sink and the IVM maintainers' view merges),
 # `bm25_index_delete_aware` (4 artifacts; delete-awareness stays via
 # streaming_bm25_maintenance's live-docs deletes and the tiered
 # entry's masked folding), `ann_index_delete_aware` (3 artifacts; same
@@ -353,8 +353,9 @@ def register(name: str, fn: QueryFn, oracle: str | None = None) -> None:
 # `dedup_cc_clusters` (10 artifacts; the CC iteration executes
 # in-window inside training_mix_pipeline's canonical-keep stage every
 # run), `streaming_cdf_propagate` (4 artifacts; CDF-stream-into-
-# idempotent-merge-sink is exactly what colmap_stream_restart and both
-# IVM entries run in-window, with harder semantics layered on),
+# idempotent-merge-sink is exactly what colmap_stream_restart runs
+# in-window, with harder semantics layered on; the IVM entries drain
+# the same feed with batch refreshes),
 # `interval_bin_join` (3 artifacts; interval-join SEMANTICS return to
 # the window in streaming form via streaming_interval_join; the batch
 # bin shape keeps its pytest plan gate), `profile_table_approx`
@@ -378,8 +379,8 @@ def register(name: str, fn: QueryFn, oracle: str | None = None) -> None:
 # in ONE maintained view) — in the slot of `streaming_ivm_minmax`
 # (1 artifact, r12; its signed-count cheap path AND pruned-recompute
 # extrema arm execute inside mv_incremental_refresh's maintainer every
-# run — same algebra, now engine surface instead of sink choreography;
-# the hand-written entry keeps its pytest oracle + full sweep).
+# run — same algebra; the minmax entry keeps its pytest oracle + full
+# sweep and now runs on the same maintainer).
 # A thirteenth r13 first-timer: `jv_incremental_refresh` — the IVM
 # engine API's JOIN-VIEW side (JoinViewDefinition + JoinViewMaintainer:
 # a fact ⋈ dim row-level view off a union of both change feeds, probes
@@ -387,7 +388,8 @@ def register(name: str, fn: QueryFn, oracle: str | None = None) -> None:
 # `streaming_ivm_join_pruned` (1 artifact, r12; SAME fixture, SAME
 # waves, SAME oracle — the API twin executes the identical delta-join
 # algebra through engine surface, incl. the 1-of-4-rels dim-only
-# pruning assert; the hand-written entry keeps pytest + full sweep).
+# pruning assert; the pruned entry keeps pytest + full sweep and now
+# runs the same JoinViewMaintainer flow).
 # An eleventh r13 first-timer joins late: `streaming_ivm_traffic_pages`
 # (the IVM support-count machinery instantiated on the REFERENCE's
 # flagship aggregate — composite group keys, NULL-user COUNT DISTINCT
@@ -520,7 +522,9 @@ DRIVER_WINDOW = [
     # r8 rotation survivors
     # r10 rotation survivors
     # r13: the generalized IVM engine API in the minmax entry's slot
-    # (same algebra, engine surface)
+    # (same algebra, engine surface). Every IVM entry (ivmqueries.py)
+    # refreshes through the ivm.py maintainers: the streaming_ivm_*
+    # names stay, but each refresh is a batch drain of the change feed
     "mv_incremental_refresh",
     # r13 new builds (VERDICT r12 items 1 and 3 + the reference-shaped
     # IVM instantiation)
@@ -546,8 +550,8 @@ DRIVER_WINDOW = [
     # r11 late builds (commit provenance; column mapping)
     # r12 new build (VERDICT r11 item 1)
     "colmap_cdf_lifecycle",
-    # r13: the join-view API twin in the hand-written pruned entry's
-    # slot (same fixture/waves/oracle through engine surface)
+    # r13: the join-view entry in the pruned join entry's slot (same
+    # fixture/waves/oracle; both run one JoinViewMaintainer flow)
     "jv_incremental_refresh",
     # r14 new builds (VERDICT r13 items 1 and 7)
     "ivm_traffic_daily",

@@ -1,7 +1,8 @@
-"""Generalized exact incremental view maintenance (r13) — the engine API
-unifying the IVM strategies the streaming entries proved one-by-one
-(additive counters -> joins -> MIN/MAX extrema -> COUNT DISTINCT
-support counts) into ONE maintainer a user points at a change-data base.
+"""Generalized exact incremental view maintenance (r13) — ONE engine for
+the IVM strategies (additive counters -> joins -> MIN/MAX extrema ->
+COUNT DISTINCT support counts) that a user points at a change-data base.
+Every registered IVM entry (ivmqueries.py) declares its view here and
+refreshes it through these maintainers.
 
 A :class:`MVDefinition` declares a grouped aggregate view over a
 change-data base table; :class:`MaterializedViewMaintainer.refresh`
@@ -640,8 +641,9 @@ _JV_POSITIONS = "feed_positions"
 @dataclass
 class JoinViewDefinition:
     """A row-level fact ⋈ dim join view maintained off BOTH tables'
-    change feeds — the delta-join the streaming_ivm_join entries proved,
-    as engine surface. ``fact_cols``/``dim_cols`` are the payload
+    change feeds — the delta-join ΔJ = ΔF ⋈ D' ∪ F' ⋈ ΔD, which the
+    streaming_ivm_join entries and jv_incremental_refresh run on.
+    ``fact_cols``/``dim_cols`` are the payload
     columns from each side; the output schema is
     (fact_key, *fact-side join cols, *fact_cols, *dim_cols).
 

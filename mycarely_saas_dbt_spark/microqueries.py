@@ -2077,6 +2077,9 @@ def register_all(register) -> None:
     bucketing.register_queries(register)
     zorder.register_queries(register)
     pydatasource.register_queries(register)
+    from mycarely_saas_dbt_spark import ivmqueries
+
+    ivmqueries.register_queries(register)
     from mycarely_saas_dbt_spark.functions import udtfs
 
     udtfs.register_queries(register)

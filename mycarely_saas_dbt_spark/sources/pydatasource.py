@@ -1876,2120 +1876,6 @@ ORDER BY k
 """
 
 
-def q_streaming_ivm_aggregate(spark, sf_dir: str):
-    """Exact INCREMENTAL VIEW MAINTENANCE over the four-type change feed
-    (r9): a gold aggregate `(day, n_rows, sum_v)` maintained purely from
-    signed CDF deltas — insert/update_postimage contribute +1/+v,
-    delete/update_preimage contribute -1/-v (the preimage row is what
-    makes subtraction EXACT; a post-only feed cannot reconstruct the old
-    value). Unlike the medallion gold hop (which recomputes touched days
-    from the silver SNAPSHOT), the IVM sink never re-reads the base
-    table: per batch it reads only the pruned gold slice for the touched
-    days, applies the additive deltas, and tombstones days whose count
-    reaches zero — per-batch cost is change-proportional at any base
-    size, the classic IVM economics for additive aggregates.
-
-    Waves: bootstrap insert -> cow UPDATE (v mutates: -old +new) -> cow
-    DELETE -> FULL-DAY delete (drives a gold count to zero -> tombstone)
-    -> second insert wave; replay wave asserted a no-op (checkpoint
-    offsets + txn ledger). Final gold must equal the groupBy over live
-    bronze, which the oracle derives arithmetically — integer-exact, so
-    any double-count or missed preimage flips the hash."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..incremental import IncrementalRunner, ModelSpec
-
-    epoch = "2024-01-01"
-    root = tempfile.mkdtemp(prefix="mycarely_ivm_")
-    runner = IncrementalRunner(spark, root)
-    register_manifest_cdf_source(spark)
-
-    def bronze_build(n):
-        def b(sp, sfd, wm):
-            rows = sp.range(n).select(
-                F.col("id").alias("k"),
-                F.date_add(
-                    F.lit(epoch).cast("date"),
-                    F.floor(F.col("id") / 100).cast("int"),
-                ).alias("day"),
-                ((F.col("id") * F.col("id")) % 1000).alias("v"),
-            )
-            if wm is not None:
-                rows = rows.filter(F.col("day") > F.lit(wm))
-            return rows
-
-        return b
-
-    bronze_spec = ModelSpec(
-        "ivm_bronze", "k", "day", bronze_build(300), partition_by=["day"],
-        # r10: the IVM deltas stream off write-time change files
-        # (cdc_buckets sized to the 300-row fixture — r15, guide §6)
-        change_data=True, cdc_buckets=16,
-    )
-    gold_spec = ModelSpec(
-        "ivm_gold", "day", "day", None, partition_by=["day"],
-        tombstone_col="__del",
-    )
-
-    def hop():
-        stream = (
-            spark.readStream.format("mycarely_manifest_cdf")
-            .option("root", root)
-            .option("model", "ivm_bronze")
-            .option("key", "k")
-            .option("preimages", "true")
-            .load()
-        )
-
-        def sink(batch_df, bid):
-            rows = batch_df.persist()
-            try:
-                if not rows.count():
-                    return
-                sgn = F.when(
-                    F.col("_change_type").isin("insert", "update_postimage"),
-                    F.lit(1),
-                ).otherwise(F.lit(-1))
-                delta = (
-                    rows.select("day", "v", sgn.alias("sgn"))
-                    .groupBy("day")
-                    .agg(
-                        F.sum("sgn").cast("long").alias("dn"),
-                        F.sum(F.col("v") * F.col("sgn")).cast("long").alias("dv"),
-                    )
-                )
-                # bounded collect: one row per TOUCHED day (the batch's
-                # change footprint), the same metadata-scale list the
-                # medallion hop collects
-                days = sorted(r["day"] for r in delta.select("day").collect())
-                if runner.current_manifest("ivm_gold") is not None:
-                    cur = runner.read_target(
-                        "ivm_gold",
-                        prune={"day": (str(days[0]), str(days[-1]))},
-                    ).filter(F.col("day").isin(days))
-                    delta = delta.join(cur, "day", "left")
-                else:
-                    delta = delta.select(
-                        "day", "dn", "dv",
-                        F.lit(None).cast("long").alias("n_rows"),
-                        F.lit(None).cast("long").alias("sum_v"),
-                    )
-                apply = delta.select(
-                    "day",
-                    (F.coalesce("n_rows", F.lit(0)) + F.col("dn"))
-                    .cast("long")
-                    .alias("n_rows"),
-                    (F.coalesce("sum_v", F.lit(0)) + F.col("dv"))
-                    .cast("long")
-                    .alias("sum_v"),
-                ).withColumn("__del", F.col("n_rows") == 0)
-                runner.merge_txn(
-                    gold_spec, apply, app_id="ivm", txn_version=bid
-                )
-            finally:
-                rows.unpersist()
-
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{root}/_ckpt_ivm")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300)
-
-    import dataclasses
-
-    runner.run(bronze_spec, sf_dir)                      # insert wave 1
-    hop()
-    runner.update_where(bronze_spec, "k % 11 = 5", {"v": "v + 5000"})
-    hop()                                                # -old +new
-    runner.delete_where(bronze_spec, "k % 7 = 3")        # cow DELETE
-    hop()
-    runner.delete_where(bronze_spec, "day = DATE '2024-01-01'")
-    hop()                                                # day-1 -> zero -> tombstone
-    runner.run(                                          # insert wave 2
-        dataclasses.replace(bronze_spec, build=bronze_build(600)), sf_dir
-    )
-    hop()
-    v_gold = runner.current_manifest("ivm_gold")["version"]
-    hop()                                                # replay: no-op
-    assert runner.current_manifest("ivm_gold")["version"] == v_gold
-
-    from ..util import materialize
-
-    out = materialize(
-        runner.read_target("ivm_gold")
-        .select("day", "n_rows", "sum_v")
-        .orderBy("day")
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
-O_IVM_AGG = """
-WITH g AS (
-    SELECT i AS k, DATE '2024-01-01' + CAST(i // 100 AS INT) AS day,
-           CASE WHEN i < 300 AND i % 11 = 5 THEN (i * i) % 1000 + 5000
-                ELSE (i * i) % 1000 END AS v
-    FROM UNNEST(range(0, 600)) AS u(i)
-),
-live AS (
-    SELECT * FROM g
-    WHERE NOT (k < 300 AND k % 7 = 3) AND k >= 100
-)
-SELECT day, COUNT(*) AS n_rows, CAST(SUM(v) AS BIGINT) AS sum_v
-FROM live GROUP BY day ORDER BY day
-"""
-
-
-def q_streaming_ivm_join(spark, sf_dir: str):
-    """Exact INCREMENTAL VIEW MAINTENANCE of a two-table JOIN (r11) —
-    the delta-join algebra (ΔJ = ΔF ⋈ D' ∪ F' ⋈ ΔD) on top of the
-    four-type change feed, completing the IVM story past additive
-    aggregates (`streaming_ivm_aggregate`): a materialized view
-    `mv = fact ⋈ dim` keyed by the fact key follows BOTH base tables
-    through ONE streaming query — the two `mycarely_manifest_cdf`
-    sources union into a single tagged feed, so a microbatch carries
-    either side's (or both sides') netted changes.
-
-    Per batch the sink recomputes exactly the AFFECTED SLICE:
-
-        K = keys(ΔF) ∪ keys(F' ⋉ cks(ΔD))     -- fact keys whose MV row
-                                                -- could have changed
-        new = (F' ⋉ K) ⋈ D'                     -- fresh rows for K
-        apply = K ⟕ new                          -- unmatched → tombstone
-
-    and merges it with the idempotent txn ledger. Both probe sets (ΔF
-    keys, ΔD keys) are change-proportional and broadcast; the one
-    base-side read the algebra genuinely requires (F' ⋉ ΔD — Delta/DBSP
-    pay it too) is a semi-join a ck-partitioned fact or secondary index
-    would prune further. MV rows whose dim row disappears tombstone via
-    the merge's delete split — the view never keeps a dangling join row.
-
-    Waves: bootstrap both tables -> dim cow UPDATE (seg re-labels flow
-    to every joined row) -> fact cow UPDATE (amt AND the join key ck
-    move) + fact cow DELETE caught up by ONE hop (netted two-version
-    range; rows hit by both net to a delete) -> dim cow DELETE (ck=3)
-    and a fact insert wave landing in the SAME microbatch (existing
-    ck=3 join rows tombstone while the simultaneous ck=3 inserts find
-    no dim and stay out) -> replay hop asserted a zero-commit no-op. Final MV hash-matches the join over the final live states of
-    both tables, derived arithmetically in the oracle — integer-exact,
-    so one stale or dangling row flips the hash."""
-    import dataclasses
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..incremental import IncrementalRunner, ModelSpec
-    from ..util import materialize
-
-    root = tempfile.mkdtemp(prefix="mycarely_ivmj_")
-    runner = IncrementalRunner(spark, root)
-    # the mutate hop catches up TWO fact commits at once — the
-    # consumer's lag is covered by the AGE retention window (r12),
-    # RETAIN_VERSIONS at the engine default
-    runner.RETENTION_SECONDS = 3600.0
-    register_manifest_cdf_source(spark)
-
-    def fact_build(n):
-        def b(sp, sfd, wm):
-            rows = sp.range(n).select(
-                F.col("id").alias("k"),
-                (F.col("id") % 20).alias("ck"),
-                ((F.col("id") * F.col("id")) % 1000).alias("amt"),
-                (F.col("id") % 8).alias("kb"),
-            )
-            if wm is not None:
-                rows = rows.filter(F.col("k") > F.lit(wm))
-            return rows
-
-        return b
-
-    def dim_build(sp, sfd, wm):
-        rows = sp.range(20).select(
-            F.col("id").alias("ck"), (F.col("id") % 5).alias("seg")
-        )
-        if wm is not None:
-            rows = rows.filter(F.col("ck") > F.lit(wm))
-        return rows
-
-    fact_spec = ModelSpec(
-        "ivmj_fact", "k", "k", fact_build(300), partition_by=["kb"],
-        change_data=True, cdc_buckets=16,
-    )
-    dim_spec = ModelSpec(
-        "ivmj_dim", "ck", "ck", dim_build, change_data=True, cdc_buckets=16
-    )
-    mv_spec = ModelSpec(
-        "ivmj_mv", "k", "k", None, partition_by=["kb"], tombstone_col="__del",
-    )
-
-    def cdf(model):
-        return (
-            spark.readStream.format("mycarely_manifest_cdf")
-            .option("root", root)
-            .option("model", model)
-            .option("key", "k" if model == "ivmj_fact" else "ck")
-            .option("preimages", "true")
-            .load()
-        )
-
-    def hop():
-        fs = cdf("ivmj_fact").select(
-            "k", "ck", F.lit("fact").alias("_src"), "_change_type"
-        )
-        ds = cdf("ivmj_dim").select(
-            F.lit(None).cast("long").alias("k"), "ck",
-            F.lit("dim").alias("_src"), "_change_type",
-        )
-        stream = fs.unionByName(ds)
-        batches: list = []
-
-        def sink(batch_df, bid):
-            batches.append(bid)
-            rows = batch_df.persist()
-            try:
-                if not rows.count():
-                    return
-                fc_keys = (
-                    rows.filter(F.col("_src") == "fact")
-                    .select("k").distinct()
-                )
-                d_cks = (
-                    rows.filter(F.col("_src") == "dim")
-                    .select("ck").distinct()
-                )
-                fact = runner.read_target("ivmj_fact")
-                dim = runner.read_target("ivmj_dim")
-                k_dim = fact.join(F.broadcast(d_cks), "ck", "semi").select("k")
-                keys = fc_keys.unionByName(k_dim).distinct()
-                new = (
-                    fact.join(F.broadcast(keys), "k", "semi")
-                    .join(dim, "ck", "inner")
-                    .select("k", "ck", "amt", "seg")
-                )
-                apply = keys.join(new, "k", "left").select(
-                    "k", "ck", "amt", "seg",
-                    (F.col("k") % 8).alias("kb"),
-                    F.col("ck").isNull().alias("__del"),
-                )
-                runner.merge_txn(
-                    mv_spec, apply, app_id="ivmj", txn_version=bid
-                )
-            finally:
-                rows.unpersist()
-
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{root}/_ckpt_ivmj")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300)
-        # CURRENT-state contract (ADVICE r12): the sink reads the bases'
-        # CURRENT snapshot, which equals batch-end state ONLY when the
-        # whole catch-up lands in one microbatch — never set
-        # maxVersionsPerBatch on this stream. Pinned per hop:
-        assert len(batches) <= 1, batches
-
-    runner.run(fact_spec, sf_dir)                        # bootstrap both
-    runner.run(dim_spec, sf_dir)
-    hop()                                                # MV = full join
-    runner.update_where(dim_spec, "ck % 4 = 1", {"seg": "seg + 10"})
-    hop()                                                # F' ⋈ ΔD arm
-    runner.update_where(                                 # join key MOVES
-        fact_spec, "k % 9 = 2",
-        {"amt": "amt + 5000", "ck": "(ck + 7) % 20"},
-    )
-    runner.delete_where(fact_spec, "k % 13 = 4")         # cow DELETE
-    hop()                                                # one netted catch-up
-    runner.delete_where(dim_spec, "ck = 3")              # dangling rows out
-    runner.run(                                          # insert wave 2
-        dataclasses.replace(fact_spec, build=fact_build(600)), sf_dir
-    )
-    hop()  # BOTH sources in one microbatch: existing ck=3 rows tombstone
-    #        and the simultaneous ck=3 inserts find no dim and stay out
-    v_mv = runner.current_manifest("ivmj_mv")["version"]
-    hop()                                                # replay: no-op
-    assert runner.current_manifest("ivmj_mv")["version"] == v_mv
-
-    out = materialize(
-        runner.read_target("ivmj_mv")
-        .select("k", "ck", "amt", "seg")
-        .orderBy("k")
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
-O_IVM_JOIN = """
-WITH f0 AS (
-    SELECT i AS k, i % 20 AS ck, (i * i) % 1000 AS amt
-    FROM UNNEST(range(0, 600)) AS u(i)
-),
-f1 AS (
-    -- the cow UPDATE then cow DELETE hit only the bootstrap rows (k<300);
-    -- wave-2 inserts (k>=300) arrived after both and are raw
-    SELECT k,
-           CASE WHEN k < 300 AND k % 9 = 2 THEN (ck + 7) % 20 ELSE ck END
-               AS ck,
-           CASE WHEN k < 300 AND k % 9 = 2 THEN amt + 5000 ELSE amt END
-               AS amt
-    FROM f0
-    WHERE NOT (k < 300 AND k % 13 = 4)
-),
-d1 AS (
-    SELECT ck,
-           CASE WHEN ck % 4 = 1 THEN seg + 10 ELSE seg END AS seg
-    FROM (
-        SELECT i AS ck, i % 5 AS seg FROM UNNEST(range(0, 20)) AS u(i)
-    )
-    WHERE ck <> 3
-)
-SELECT f1.k AS k, f1.ck AS ck, f1.amt AS amt, d1.seg AS seg
-FROM f1 JOIN d1 USING (ck)
-ORDER BY k
-"""
-
-
-def q_streaming_ivm_join_pruned(spark, sf_dir: str):
-    """The IVM-join with its base-side probes PARTITION-PRUNED (r12 —
-    VERDICT r11 item 4): `q_streaming_ivm_join` partitions the fact by
-    a k-derived bucket, so the F' ⋉ cks(ΔD) probe scans the WHOLE fact
-    on every dim-churn batch — fine at sf0.1, dominant at 100 TB under
-    a high-churn dim. Here the fact is partitioned by the JOIN-KEY
-    bucket `ckb = ck % 4` (the ck-partitioned fact the r11 docstring
-    named), and the sink derives the touched bucket set from the
-    CHANGE ROWS themselves — a pure metadata decision:
-
-        dim probe:  rels = {ckb=ck%4 : ck ∈ ΔD}      (change-proportional)
-        key probe:  rels = buckets of every ck seen in ΔF images
-                    ∪ the dim-probe slice's buckets   (exact: the netted
-                    post-image IS the key's F' state, so its bucket is
-                    known without reading F')
-
-    Both reads go through `read_target(rels=...)` — the manifest
-    resolves ONLY matching hive partitions' files, asserted in-entry on
-    the dim-only wave: the probe opened exactly the one `ckb=1` rel
-    (cks 1,5,9,13,17 all ≡ 1 mod 4) of the 4 committed, every input
-    file path under it. The fact UPDATE wave moves ck AND ckb, proving
-    copy-on-write DML migrates rows across hive partitions. Same waves,
-    same final state, same oracle as the unpruned entry — layout is not
-    allowed to change semantics."""
-    import dataclasses
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..incremental import IncrementalRunner, ModelSpec
-    from ..util import materialize
-
-    root = tempfile.mkdtemp(prefix="mycarely_ivmjp_")
-    runner = IncrementalRunner(spark, root)
-    # consumer lag covered by AGE retention (r12 item 5) — no per-entry
-    # RETAIN_VERSIONS hand-bump
-    runner.RETENTION_SECONDS = 3600.0
-    register_manifest_cdf_source(spark)
-
-    def fact_build(n):
-        def b(sp, sfd, wm):
-            rows = sp.range(n).select(
-                F.col("id").alias("k"),
-                (F.col("id") % 20).alias("ck"),
-                ((F.col("id") * F.col("id")) % 1000).alias("amt"),
-                ((F.col("id") % 20) % 4).alias("ckb"),
-            )
-            if wm is not None:
-                rows = rows.filter(F.col("k") > F.lit(wm))
-            return rows
-
-        return b
-
-    def dim_build(sp, sfd, wm):
-        rows = sp.range(20).select(
-            F.col("id").alias("ck"), (F.col("id") % 5).alias("seg")
-        )
-        if wm is not None:
-            rows = rows.filter(F.col("ck") > F.lit(wm))
-        return rows
-
-    fact_spec = ModelSpec(
-        "ivmjp_fact", "k", "k", fact_build(300), partition_by=["ckb"],
-        change_data=True, cdc_buckets=16,
-    )
-    dim_spec = ModelSpec(
-        "ivmjp_dim", "ck", "ck", dim_build, change_data=True, cdc_buckets=16
-    )
-    mv_spec = ModelSpec(
-        "ivmjp_mv", "k", "k", None, partition_by=["kb"], tombstone_col="__del",
-    )
-    pruned_log: list = []  # (n_rels_read, n_rels_committed, files_ok)
-
-    def cdf(model):
-        return (
-            spark.readStream.format("mycarely_manifest_cdf")
-            .option("root", root)
-            .option("model", model)
-            .option("key", "k" if model == "ivmjp_fact" else "ck")
-            .option("preimages", "true")
-            .load()
-        )
-
-    def hop():
-        fs = cdf("ivmjp_fact").select(
-            "k", "ck", F.lit("fact").alias("_src"), "_change_type"
-        )
-        ds = cdf("ivmjp_dim").select(
-            F.lit(None).cast("long").alias("k"), "ck",
-            F.lit("dim").alias("_src"), "_change_type",
-        )
-        stream = fs.unionByName(ds)
-        batches: list = []
-
-        def sink(batch_df, bid):
-            batches.append(bid)
-            rows = batch_df.persist()
-            try:
-                if not rows.count():
-                    return
-                # change-proportional driver-side key/bucket sets (the
-                # dim is broadcast-scale; fact keys are this batch's
-                # netted changes)
-                f_rows = rows.filter(F.col("_src") == "fact")
-                d_cks = [
-                    r["ck"]
-                    for r in rows.filter(F.col("_src") == "dim")
-                    .select("ck").distinct().collect()
-                ]
-                f_cks = [
-                    r["ck"]
-                    for r in f_rows.select("ck").distinct().collect()
-                ]
-                fc_keys = f_rows.select("k").distinct()
-                dim = runner.read_target("ivmjp_dim")
-                committed = sorted(
-                    runner.current_manifest("ivmjp_fact")["partitions"]
-                )
-                # dim-churn probe: only the partitions that can hold a
-                # changed ck — resolved from the manifest, no scan
-                d_rels = sorted({f"ckb={ck % 4}" for ck in d_cks})
-                if d_cks:
-                    fslice = runner.read_target("ivmjp_fact", rels=d_rels)
-                    if not f_cks:  # dim-only batch: pin the pruning
-                        files = fslice.inputFiles()
-                        pruned_log.append((
-                            len(d_rels),
-                            len(committed),
-                            bool(files)
-                            and all(
-                                any(f"/{r}/" in f for r in d_rels)
-                                for f in files
-                            ),
-                        ))
-                    d_cks_df = (
-                        rows.filter(F.col("_src") == "dim")
-                        .select("ck").distinct()
-                    )
-                    k_dim = fslice.join(
-                        F.broadcast(d_cks_df), "ck", "semi"
-                    ).select("k")
-                    keys = fc_keys.unionByName(k_dim).distinct()
-                else:
-                    keys = fc_keys
-                # key probe: every candidate key's current bucket is
-                # known from the change images (fact side) or the
-                # pruned slice (dim side) — union of both bucket sets
-                k_rels = sorted(
-                    {f"ckb={ck % 4}" for ck in f_cks}
-                    | set(d_rels if d_cks else [])
-                )
-                fact = runner.read_target("ivmjp_fact", rels=k_rels)
-                new = (
-                    fact.join(F.broadcast(keys), "k", "semi")
-                    .join(dim, "ck", "inner")
-                    .select("k", "ck", "amt", "seg")
-                )
-                apply = keys.join(new, "k", "left").select(
-                    "k", "ck", "amt", "seg",
-                    (F.col("k") % 8).alias("kb"),
-                    F.col("ck").isNull().alias("__del"),
-                )
-                runner.merge_txn(
-                    mv_spec, apply, app_id="ivmjp", txn_version=bid
-                )
-            finally:
-                rows.unpersist()
-
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{root}/_ckpt_ivmjp")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300)
-        # CURRENT-state contract (ADVICE r12): the sink's probes read the
-        # bases' CURRENT snapshot = batch-end state only under single-batch
-        # availableNow catch-up — never set maxVersionsPerBatch here.
-        assert len(batches) <= 1, batches
-
-    runner.run(fact_spec, sf_dir)                        # bootstrap both
-    runner.run(dim_spec, sf_dir)
-    hop()                                                # MV = full join
-    runner.update_where(dim_spec, "ck % 4 = 1", {"seg": "seg + 10"})
-    hop()                                                # dim-only: pruned
-    runner.update_where(                                 # join key + ckb MOVE
-        fact_spec, "k % 9 = 2",
-        {"amt": "amt + 5000", "ck": "(ck + 7) % 20",
-         "ckb": "((ck + 7) % 20) % 4"},
-    )
-    runner.delete_where(fact_spec, "k % 13 = 4")         # cow DELETE
-    hop()                                                # one netted catch-up
-    runner.delete_where(dim_spec, "ck = 3")              # dangling rows out
-    runner.run(                                          # insert wave 2
-        dataclasses.replace(fact_spec, build=fact_build(600)), sf_dir
-    )
-    hop()  # BOTH sources in one microbatch
-    # the dim-only wave read exactly ONE of the 4 committed ckb rels
-    # (ck%4=1 for every changed ck), every input file under it
-    assert pruned_log == [(1, 4, True)], pruned_log
-
-    out = materialize(
-        runner.read_target("ivmjp_mv")
-        .select("k", "ck", "amt", "seg")
-        .orderBy("k")
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
-def q_streaming_ivm_minmax(spark, sf_dir: str):
-    """Exact IVM for NON-ADDITIVE aggregates (r12 — completes the IVM
-    family: additive counters -> joins -> extrema): a materialized view
-    `(g, m_min, m_max, n)` maintained off the four-type feed. MIN/MAX
-    cannot be maintained by signed deltas alone — deleting the row that
-    CARRIES a group's extreme forces a look at the remaining rows. The
-    sink therefore splits every touched group per batch:
-
-      CHEAP (no base read):  n_new from signed counts; insert-only or
-        strictly-interior removals (d_min > m_min AND d_max < m_max)
-        extend extremes monotonically: min(m_min, i_min)/max(m_max,
-        i_max). First-seen groups aggregate the batch directly.
-        n_new == 0 tombstones the group with NO read (the counts know).
-      RECOMPUTE (pruned base read): a removed value TOUCHES a stored
-        extreme (d_min <= m_min OR d_max >= m_max — conservative under
-        duplicate values, the correct direction): re-aggregate ONLY
-        those groups from the base, read through
-        `read_target(rels=[gb=...])` — the g-bucket partitioning makes
-        the recompute a partition-pruned scan, so the arm costs
-        O(touched groups' buckets), never a base scan. This split is
-        exactly how DBSP/Materialize treat non-commutative monoids:
-        additive where algebra allows, bounded recompute where it
-        doesn't.
-
-    Touched-group stats collect to the driver per batch — change-
-    proportional, the same bounded pattern as the touched-day lists.
-    Waves: bootstrap -> insert wave raising maxima (asserted CHEAP:
-    zero base files read) -> netted UPDATE+DELETE catch-up hitting
-    extremes (asserted RECOMPUTE with a pruned rel subset) -> full-
-    group delete (tombstone with no read) -> replay no-op. Final MV
-    hash-matches the groupBy over the live base, derived arithmetically
-    by the oracle — integer-exact."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..incremental import IncrementalRunner, ModelSpec
-    from ..util import materialize
-
-    root = tempfile.mkdtemp(prefix="mycarely_ivmx_")
-    runner = IncrementalRunner(spark, root)
-    runner.RETENTION_SECONDS = 3600.0
-    register_manifest_cdf_source(spark)
-
-    def base_build(n):
-        def b(sp, sfd, wm):
-            rows = sp.range(n).select(
-                F.col("id").alias("k"),
-                (F.col("id") % 50).alias("g"),
-                (
-                    (F.col("id") * F.col("id")) % 997
-                    + F.when(
-                        (F.col("id") >= 400) & (F.col("id") % 3 == 0), 1500
-                    ).otherwise(0)
-                ).alias("x"),
-                ((F.col("id") % 50) % 8).alias("gb"),
-            )
-            if wm is not None:
-                rows = rows.filter(F.col("k") > F.lit(wm))
-            return rows
-
-        return b
-
-    base_spec = ModelSpec(
-        "ivmx_base", "k", "k", base_build(400), partition_by=["gb"],
-        change_data=True, cdc_buckets=16,
-    )
-    mv_spec = ModelSpec("ivmx_mv", "g", "g", None, tombstone_col="__del")
-    path_log: list = []  # ("cheap"|"recompute", rels_read, rels_committed)
-    batches: list = []
-
-    def hop():
-        hop_start = len(batches)
-        feed = (
-            spark.readStream.format("mycarely_manifest_cdf")
-            .option("root", root)
-            .option("model", "ivmx_base")
-            .option("key", "k")
-            .option("preimages", "true")
-            .load()
-        )
-
-        def sink(batch_df, bid):
-            # CURRENT-state contract, enforced BEFORE work (VERDICT r13
-            # item 4): a second batch in one hop means the probes below
-            # would read batch-end state for a mid-stream batch — refuse
-            # at the top of batch 2, with batch 1 fully committed.
-            if len(batches) - hop_start >= 1:
-                raise RuntimeError(
-                    "IVM CURRENT-state contract violated: more than one "
-                    "batch per availableNow hop (maxVersionsPerBatch?)"
-                )
-            batches.append(bid)
-            rows = batch_df.persist()
-            try:
-                if not rows.count():
-                    return
-                pre = rows.filter(
-                    F.col("_change_type").isin("update_preimage", "delete")
-                ).select("g", "x")
-                post = rows.filter(
-                    F.col("_change_type").isin("insert", "update_postimage")
-                ).select("g", "x")
-                st = (
-                    post.groupBy("g").agg(
-                        F.min("x").alias("i_min"),
-                        F.max("x").alias("i_max"),
-                        F.count("*").alias("i_n"),
-                    )
-                    .join(
-                        pre.groupBy("g").agg(
-                            F.min("x").alias("d_min"),
-                            F.max("x").alias("d_max"),
-                            F.count("*").alias("d_n"),
-                        ),
-                        "g",
-                        "full",
-                    )
-                )
-                if runner.target_exists("ivmx_mv"):
-                    st = st.join(
-                        runner.read_target("ivmx_mv").select(
-                            "g", "m_min", "m_max", "n"
-                        ),
-                        "g",
-                        "left",
-                    )
-                else:
-                    st = st.select(
-                        "*",
-                        F.lit(None).cast("bigint").alias("m_min"),
-                        F.lit(None).cast("bigint").alias("m_max"),
-                        F.lit(None).cast("bigint").alias("n"),
-                    )
-                # touched-group stats: change-proportional, driver-bounded
-                cheap, recompute = [], []
-                for r in st.collect():
-                    n_old = r["n"] or 0
-                    i_n, d_n = r["i_n"] or 0, r["d_n"] or 0
-                    n_new = n_old + i_n - d_n
-                    if n_new == 0:
-                        # counts prove the group is gone — tombstone, no read
-                        cheap.append((r["g"], 0, 0, 0, True))
-                    elif n_old == 0:
-                        cheap.append(
-                            (r["g"], r["i_min"], r["i_max"], n_new, False)
-                        )
-                    elif d_n and (
-                        r["d_min"] <= r["m_min"] or r["d_max"] >= r["m_max"]
-                    ):
-                        # a removed value touches a stored extreme —
-                        # the one case extrema algebra cannot absorb
-                        recompute.append(r["g"])
-                    else:
-                        m_min = (
-                            min(r["m_min"], r["i_min"]) if i_n else r["m_min"]
-                        )
-                        m_max = (
-                            max(r["m_max"], r["i_max"]) if i_n else r["m_max"]
-                        )
-                        cheap.append((r["g"], m_min, m_max, n_new, False))
-                out = spark.createDataFrame(
-                    cheap,
-                    "g bigint, m_min bigint, m_max bigint, n bigint, "
-                    "__del boolean",
-                )
-                if recompute:
-                    rels = sorted({f"gb={g % 8}" for g in recompute})
-                    committed = sorted(
-                        runner.current_manifest("ivmx_base")["partitions"]
-                    )
-                    path_log.append(("recompute", rels, committed))
-                    gset = spark.createDataFrame(
-                        [(g,) for g in recompute], "g bigint"
-                    )
-                    rec = (
-                        runner.read_target("ivmx_base", rels=rels)
-                        .join(F.broadcast(gset), "g", "semi")
-                        .groupBy("g")
-                        .agg(
-                            F.min("x").alias("m_min"),
-                            F.max("x").alias("m_max"),
-                            F.count("*").alias("n"),
-                        )
-                        .select(
-                            "g", "m_min", "m_max", "n",
-                            F.lit(False).alias("__del"),
-                        )
-                    )
-                    out = out.unionByName(rec)
-                else:
-                    path_log.append(("cheap", [], []))
-                runner.merge_txn(
-                    mv_spec, out, app_id="ivmx", txn_version=bid
-                )
-            finally:
-                rows.unpersist()
-
-        q = (
-            feed.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{root}/_ckpt_ivmx")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300)
-        # CURRENT-state contract (ADVICE r12): both the MV probe and the
-        # recompute arm read CURRENT state = batch-end state only under
-        # single-batch availableNow catch-up — never set
-        # maxVersionsPerBatch here. Pinned per hop:
-        assert len(batches) - hop_start <= 1, batches
-
-    runner.run(base_spec, sf_dir)                          # v1 bootstrap
-    hop()                                                  # MV = full agg
-    runner.run(                                            # insert wave
-        __import__("dataclasses").replace(
-            base_spec, build=base_build(600)
-        ),
-        sf_dir,
-    )
-    hop()                                                  # cheap path
-    runner.update_where(base_spec, "k % 97 = 5", {"x": "x + 2000"})
-    runner.delete_where(base_spec, "k % 101 = 7")
-    hop()                                                  # netted: extrema hit
-    runner.delete_where(base_spec, "g = 13")               # whole group out
-    hop()                                                  # tombstone, no read
-    v_mv = runner.current_manifest("ivmx_mv")["version"]
-    hop()                                                  # replay: no-op
-    assert runner.current_manifest("ivmx_mv")["version"] == v_mv
-    # the insert wave stayed on the cheap path; the extrema-hitting
-    # catch-up recomputed through a PRUNED rel subset
-    kinds = [k for k, _, _ in path_log]
-    assert kinds[1] == "cheap", path_log
-    assert "recompute" in kinds[2:], path_log
-    for k, rels, committed in path_log:
-        if k == "recompute":
-            assert rels and set(rels) <= set(committed), (rels, committed)
-
-    out = materialize(
-        runner.read_target("ivmx_mv")
-        .select("g", "m_min", "m_max", "n")
-        .orderBy("g")
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
-def q_streaming_ivm_distinct(spark, sf_dir: str):
-    """Exact IVM for COUNT DISTINCT (r13 — VERDICT r12 item 1): the
-    reference's own flagship aggregate — `traffic_pages_agg`'s
-    `unique_visits` IS a per-day COUNT(DISTINCT domain_userid)
-    (reference models/traffic_pages_agg.sql:33) — maintained off the
-    four-type change feed WITHOUT re-aggregating any base day.
-
-    COUNT DISTINCT is neither additive nor extendable-monotone: a
-    delete of a user's LAST event for a day must decrement the day's
-    distinct count, which no signed counter over the feed alone can
-    know. The exact auxiliary state (DBSP / pre-aggregated support
-    multiset) is per-(day, user) SUPPORT COUNTS — a keyed manifest
-    table, exactly the signature-index shape:
-
-      insert/update_postimage   -> support += 1
-      delete/update_preimage    -> support -= 1
-      support 0 -> positive     -> day's uniq_n += 1
-      support positive -> 0     -> day's uniq_n -= 1 (row tombstoned)
-      day's total_n hits 0      -> MV row tombstoned
-
-    Netting handles update pre/postimage pairs arithmetically (a user
-    updated in place nets to delta 0 and never probes). BOTH state
-    probes are PARTITION-PRUNED from the change rows alone: support
-    and MV are day-bucket-partitioned (gb = g % 8) and each batch
-    derives its probe footprint as `read_target(rels=[gb=...])` from
-    the touched days — manifest-only file selection, the minmax
-    recompute arm's discipline. The base table is NEVER read by the
-    sink; per-batch work is change-proportional (touched-day stats
-    collect driver-side, the bounded touched-day-list pattern; the
-    per-(day,user) support updates stay distributed).
-
-    Crash ordering: the MV merge commits BEFORE the support merge —
-    both carry the same (app_id, txn_version), so a replay after a
-    partial failure recomputes transitions from the still-unchanged
-    support and the already-applied merge skips via the txn ledger;
-    writing support first would make a replayed batch compute
-    transitions from post-state. Waves: bootstrap -> insert wave (new
-    users raise uniq_n, repeat users only total_n) -> netted
-    UPDATE+DELETE catch-up (updates MOVE users across values: uniq
-    increments AND decrements in one batch; deletes drop a last event
-    -> uniq_n decrement, and non-last events -> support-only
-    decrement) -> full-day delete (MV + every support row tombstone,
-    probe asserted to open exactly 1 of 8 committed buckets) ->
-    replay no-op. Final MV hash-matches the batch
-    COUNT(*)/COUNT(DISTINCT) GROUP BY oracle — integer-exact."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..incremental import IncrementalRunner, ModelSpec
-    from ..util import materialize
-
-    root = tempfile.mkdtemp(prefix="mycarely_ivmd_")
-    runner = IncrementalRunner(spark, root)
-    runner.RETENTION_SECONDS = 3600.0
-    register_manifest_cdf_source(spark)
-
-    def base_build(n):
-        def b(sp, sfd, wm):
-            rows = sp.range(n).select(
-                F.col("id").alias("k"),
-                (F.col("id") % 40).alias("g"),
-                ((F.col("id") * F.col("id")) % 23).alias("u"),
-                ((F.col("id") % 40) % 8).alias("gb"),
-            )
-            if wm is not None:
-                rows = rows.filter(F.col("k") > F.lit(wm))
-            return rows
-
-        return b
-
-    base_spec = ModelSpec(
-        "ivmd_base", "k", "k", base_build(500), partition_by=["gb"],
-        change_data=True,
-        # change-file bucket count sized to THIS table (r15, guide §6
-        # small files): the 256-bucket scale default made every 500-row
-        # commit write ~250 near-empty bucket files (one per non-empty
-        # hash bucket) that each CDF hop then re-opened. Constant per
-        # table lifetime, as the netting contract requires; a 100 TB
-        # table keeps the default.
-        cdc_buckets=16,
-    )
-    sup_spec = ModelSpec(
-        "ivmd_sup", "sk", "sk", None, partition_by=["gb"],
-        tombstone_col="__del",
-    )
-    mv_spec = ModelSpec(
-        "ivmd_mv", "g", "g", None, partition_by=["gb"],
-        tombstone_col="__del",
-    )
-    # per batch: (probe rels, committed sup rels, uniq increments,
-    # uniq decrements) — the change-proportional audit trail
-    path_log: list = []
-    batches: list = []
-
-    def hop():
-        hop_start = len(batches)
-        feed = (
-            spark.readStream.format("mycarely_manifest_cdf")
-            .option("root", root)
-            .option("model", "ivmd_base")
-            .option("key", "k")
-            .option("preimages", "true")
-            .load()
-        )
-
-        def sink(batch_df, bid):
-            # CURRENT-state contract, enforced BEFORE work (VERDICT r13
-            # item 4): a second batch in one hop means the probes below
-            # would read batch-end state for a mid-stream batch — refuse
-            # at the top of batch 2, with batch 1 fully committed.
-            if len(batches) - hop_start >= 1:
-                raise RuntimeError(
-                    "IVM CURRENT-state contract violated: more than one "
-                    "batch per availableNow hop (maxVersionsPerBatch?)"
-                )
-            batches.append(bid)
-            rows = batch_df.persist()
-            try:
-                if not rows.count():
-                    return
-                # signed per-(day, user) delta; in-place updates net to 0
-                delta = (
-                    rows.select(
-                        "g", "u",
-                        F.when(
-                            F.col("_change_type").isin(
-                                "insert", "update_postimage"
-                            ),
-                            F.lit(1),
-                        ).otherwise(F.lit(-1)).alias("d"),
-                    )
-                    .groupBy("g", "u")
-                    .agg(F.sum("d").alias("d"))
-                    .filter(F.col("d") != 0)
-                    .persist()
-                )
-                touched = sorted(
-                    r["g"] for r in delta.select("g").distinct().collect()
-                )
-                if not touched:
-                    return
-                rels = sorted({f"gb={g % 8}" for g in touched})
-                committed = (
-                    sorted(runner.current_manifest("ivmd_sup")["partitions"])
-                    if runner.target_exists("ivmd_sup")
-                    else []
-                )
-                # support probe: ONLY the touched days' buckets, resolved
-                # from the manifest (no scan); the base is never read
-                if committed:
-                    old_sup = runner.read_target("ivmd_sup", rels=rels).select(
-                        "g", "u", "s"
-                    )
-                else:
-                    old_sup = delta.select("g", "u").limit(0).select(
-                        "g", "u", F.lit(0).cast("bigint").alias("s")
-                    )
-                j = delta.join(old_sup, ["g", "u"], "left").select(
-                    "g", "u", "d",
-                    F.coalesce(F.col("s"), F.lit(0)).alias("s_old"),
-                    (F.coalesce(F.col("s"), F.lit(0)) + F.col("d")).alias(
-                        "s_new"
-                    ),
-                )
-                sup_out = j.select(
-                    (F.col("g") * 1000 + F.col("u")).alias("sk"),
-                    "g", "u",
-                    F.col("s_new").alias("s"),
-                    (F.col("g") % 8).alias("gb"),
-                    (F.col("s_new") == 0).alias("__del"),
-                )
-                # foreachBatch redelivery guard (ADVICE r13): if the MV
-                # merge for this batch_id already committed (crash
-                # between the MV commit and the checkpoint commit), the
-                # MV arithmetic below would read POST-merge state and
-                # fire the sanity asserts — skip straight to the support
-                # merge, idempotent via its own ledger.
-                last_mv = (
-                    runner.txn_last_version("ivmd_mv", "ivmd_mv")
-                    if runner.target_exists("ivmd_mv")
-                    else None
-                )
-                if last_mv is not None and last_mv >= bid:
-                    runner.merge_txn(
-                        sup_spec, sup_out, app_id="ivmd_sup", txn_version=bid
-                    )
-                    delta.unpersist()
-                    return
-                # touched-day stats: driver-bounded (<= days in the feed)
-                stats = {
-                    r["g"]: r
-                    for r in j.groupBy("g")
-                    .agg(
-                        F.sum("d").alias("n_delta"),
-                        F.sum(
-                            F.when(
-                                (F.col("s_old") == 0) & (F.col("s_new") > 0),
-                                1,
-                            ).otherwise(0)
-                        ).alias("uinc"),
-                        F.sum(
-                            F.when(
-                                (F.col("s_old") > 0) & (F.col("s_new") == 0),
-                                1,
-                            ).otherwise(0)
-                        ).alias("udec"),
-                        F.sum(
-                            F.when(F.col("s_new") < 0, 1).otherwise(0)
-                        ).alias("neg"),
-                    )
-                    .collect()
-                }
-                assert all(r["neg"] == 0 for r in stats.values()), (
-                    "negative support — feed and state disagree",
-                    stats,
-                )
-                old_mv = (
-                    {
-                        r["g"]: r
-                        for r in runner.read_target("ivmd_mv", rels=rels)
-                        .join(
-                            F.broadcast(
-                                spark.createDataFrame(
-                                    [(g,) for g in touched], "g bigint"
-                                )
-                            ),
-                            "g",
-                            "semi",
-                        )
-                        .collect()
-                    }
-                    if runner.target_exists("ivmd_mv")
-                    else {}
-                )
-                mv_rows = []
-                for g in touched:
-                    st = stats[g]
-                    o = old_mv.get(g)
-                    total_n = (o["total_n"] if o else 0) + st["n_delta"]
-                    uniq_n = (o["uniq_n"] if o else 0) + st["uinc"] - st["udec"]
-                    assert total_n >= 0 and uniq_n >= 0, (g, total_n, uniq_n)
-                    assert (total_n == 0) == (uniq_n == 0), (g, total_n, uniq_n)
-                    mv_rows.append((g, total_n, uniq_n, g % 8, total_n == 0))
-                path_log.append(
-                    (
-                        rels,
-                        committed,
-                        sum(r["uinc"] for r in stats.values()),
-                        sum(r["udec"] for r in stats.values()),
-                    )
-                )
-                # MV first, support second (see docstring: replay safety)
-                runner.merge_txn(
-                    mv_spec,
-                    spark.createDataFrame(
-                        mv_rows,
-                        "g bigint, total_n bigint, uniq_n bigint, "
-                        "gb bigint, __del boolean",
-                    ),
-                    app_id="ivmd_mv",
-                    txn_version=bid,
-                )
-                runner.merge_txn(
-                    sup_spec, sup_out, app_id="ivmd_sup", txn_version=bid
-                )
-                delta.unpersist()
-            finally:
-                rows.unpersist()
-
-        q = (
-            feed.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{root}/_ckpt_ivmd")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300)
-        # CURRENT-state contract (ADVICE r12): the support/MV probes read
-        # CURRENT state = batch-end state only under single-batch
-        # availableNow catch-up — never set maxVersionsPerBatch here.
-        assert len(batches) - hop_start <= 1, batches
-
-    from ..util import timed_phase
-
-    with timed_phase("bootstrap"):
-        runner.run(base_spec, sf_dir)                      # v1 bootstrap
-        hop()                                              # MV = full agg
-    with timed_phase("wave_insert"):
-        runner.run(                                        # insert wave
-            __import__("dataclasses").replace(
-                base_spec, build=base_build(800)
-            ),
-            sf_dir,
-        )
-        hop()                                              # new + repeat users
-    with timed_phase("wave_net"):
-        runner.update_where(base_spec, "k % 89 = 3", {"u": "(u + 5) % 23"})
-        runner.delete_where(base_spec, "k % 37 = 11")
-        hop()                                              # netted catch-up
-    with timed_phase("wave_day_delete"):
-        runner.delete_where(base_spec, "g = 17")           # full-day delete
-        hop()                                              # day tombstones
-    v_mv = runner.current_manifest("ivmd_mv")["version"]
-    with timed_phase("replay"):
-        hop()                                              # replay: no-op
-    assert runner.current_manifest("ivmd_mv")["version"] == v_mv
-    # every probe stayed inside the committed bucket set; the netted
-    # catch-up moved uniques BOTH directions; the day-delete wave opened
-    # exactly ONE of the 8 committed buckets
-    for rels, committed, _, _ in path_log[1:]:
-        assert set(rels) <= set(committed), (rels, committed)
-    assert path_log[2][2] > 0 and path_log[2][3] > 0, path_log
-    assert path_log[3][0] == ["gb=1"] and len(path_log[3][1]) == 8, path_log
-    # the day's state is GONE, not zeroed: MV and support both tombstoned
-    assert (
-        runner.read_target("ivmd_mv").filter(F.col("g") == 17).count() == 0
-    )
-    assert (
-        runner.read_target("ivmd_sup").filter(F.col("g") == 17).count() == 0
-    )
-
-    out = materialize(
-        runner.read_target("ivmd_mv")
-        .select("g", "total_n", "uniq_n")
-        .orderBy("g")
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
-O_IVM_DISTINCT = """
-WITH b AS (
-    SELECT i AS k, i % 40 AS g, (i * i) % 23 AS u
-    FROM UNNEST(range(0, 800)) AS t(i)
-),
-u2 AS (
-    SELECT k, g, CASE WHEN k % 89 = 3 THEN (u + 5) % 23 ELSE u END AS u
-    FROM b
-),
-f AS (SELECT * FROM u2 WHERE k % 37 <> 11 AND g <> 17)
-SELECT g, COUNT(*) AS total_n, COUNT(DISTINCT u) AS uniq_n
-FROM f GROUP BY g ORDER BY g
-"""
-
-
-def _mvr_flow(spark, sf_dir: str, make_maintainer):
-    """The GENERALIZED IVM engine API end-to-end (r13; fixture shared
-    r14 by the SQL-declared twin `sql_create_mv`): one view composing
-    every supported aggregate kind — COUNT, SUM, MIN, MAX,
-    COUNT DISTINCT — maintained by `MaterializedViewMaintainer.refresh`
-    (mycarely_saas_dbt_spark/ivm.py), the engine surface that unifies
-    what the four hand-written IVM entries proved strategy-by-strategy
-    (additive deltas, the minmax cheap/recompute split, the distinct
-    support table). ``make_maintainer(runner)`` binds the definition —
-    the hand-built MVDefinition or ivm_sql's parsed CREATE MATERIALIZED
-    VIEW. The entry is the USER's flow: declare the view, call
-    refresh() after each base commit, read the result — no sink code.
-
-    Waves: bootstrap (asserted ZERO recompute groups — insert-only
-    batches stay on the signed-delta path; the insert-extends-extremes
-    cheap path on EXISTING groups keeps its oracle via the
-    streaming_ivm_minmax sweep entry) -> netted
-    UPDATE(x)+UPDATE(u)+DELETE catch-up (moves extremes AND distinct
-    supports in one batch; asserted to engage the partition-pruned
-    recompute arm) -> whole-group delete (tombstone from counts alone,
-    zero recompute) -> replay no-op (version pinned). Every probe's rel
-    set is asserted inside the committed bucket set via the
-    maintainer's path_log. Final MV hash-matches the five-aggregate
-    GROUP BY oracle — integer-exact."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..incremental import IncrementalRunner, ModelSpec
-    from ..ivm import MaterializedViewMaintainer, MVAggregate, MVDefinition
-    from ..util import materialize
-
-    root = tempfile.mkdtemp(prefix="mycarely_mvr_")
-    runner = IncrementalRunner(spark, root)
-    runner.RETENTION_SECONDS = 3600.0
-
-    def base_build(n):
-        def b(sp, sfd, wm):
-            rows = sp.range(n).select(
-                F.col("id").alias("k"),
-                (F.col("id") % 50).alias("g"),
-                (
-                    (F.col("id") * F.col("id")) % 997
-                    + F.when(
-                        (F.col("id") >= 400) & (F.col("id") % 3 == 0), 1500
-                    ).otherwise(0)
-                ).alias("x"),
-                ((F.col("id") * 3) % 13).alias("u"),
-                ((F.col("id") % 50) % 8).alias("gb"),
-            )
-            if wm is not None:
-                rows = rows.filter(F.col("k") > F.lit(wm))
-            return rows
-
-        return b
-
-    base_spec = ModelSpec(
-        "mvr_base", "k", "k", base_build(600), partition_by=["gb"],
-        change_data=True, cdc_buckets=16,
-    )
-    runner.run(base_spec, sf_dir)                          # v1 bootstrap
-    m = make_maintainer(runner)
-    m.refresh(spark)                                       # MV = full agg
-    runner.update_where(base_spec, "k % 97 = 5", {"x": "x + 2000"})
-    runner.update_where(base_spec, "k % 89 = 3", {"u": "(u + 5) % 13"})
-    runner.delete_where(base_spec, "k % 101 = 7")
-    m.refresh(spark)                                       # extremes hit
-    runner.delete_where(base_spec, "g = 13")               # whole group out
-    m.refresh(spark)                                       # tombstone wave
-    v_mv = runner.current_manifest("mvr_mv")["version"]
-    m.refresh(spark)                                       # replay: no-op
-    assert runner.current_manifest("mvr_mv")["version"] == v_mv
-    # insert-only stays on signed deltas; the netted catch-up engages
-    # the pruned recompute arm; the group tombstone needs no recompute
-    recs = [n for _, _, n in m.path_log]
-    assert recs[0] == 0 and recs[1] > 0 and recs[2] == 0, m.path_log
-    for rels, committed, _ in m.path_log[1:]:
-        assert set(rels) <= set(committed), (rels, committed)
-
-    out = materialize(m.read().orderBy("g"))
-    shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
-def q_mv_incremental_refresh(spark, sf_dir: str):
-    from ..ivm import MaterializedViewMaintainer, MVAggregate, MVDefinition
-
-    def make(runner):
-        mv = MVDefinition(
-            "mvr_mv", "mvr_base", "k", ["g"],
-            [
-                MVAggregate("count", None, "n"),
-                MVAggregate("sum", "x", "sum_x"),
-                MVAggregate("min", "x", "min_x"),
-                MVAggregate("max", "x", "max_x"),
-                MVAggregate("count_distinct", "u", "uniq_u"),
-            ],
-            bucket_expr="g % 8", bucket_col="gb",
-        )
-        return MaterializedViewMaintainer(runner, mv)
-
-    return _mvr_flow(spark, sf_dir, make)
-
-
-MVR_DDL = """
-CREATE MATERIALIZED VIEW mvr_mv
-OPTIONS (base_key 'k', bucket_expr 'g % 8', bucket_col 'gb')
-AS SELECT g, COUNT(*) AS n, SUM(x) AS sum_x, MIN(x) AS min_x,
-          MAX(x) AS max_x, COUNT(DISTINCT u) AS uniq_u
-FROM mvr_base
-GROUP BY g
-"""
-
-
-def q_sql_create_mv(spark, sf_dir: str):
-    """The IVM API's SQL front door end-to-end (r14 — VERDICT r13
-    item 7): the SAME fixture, SAME waves, SAME oracle as
-    mv_incremental_refresh, with the view declared through
-
-        CREATE MATERIALIZED VIEW ... OPTIONS (base_key ..., bucket_expr
-        ..., bucket_col ...) AS SELECT <aggs> FROM <base> GROUP BY <keys>
-
-    parsed by ivm_sql.parse_create_materialized_view into the identical
-    MVDefinition — the dbt user's declarative path to the maintainer.
-    The parser's refusal matrix (joins / WHERE / HAVING / windows /
-    SUM(DISTINCT) / expression group keys / missing aliases) is pinned
-    in tests/test_ivm_sql.py; sharing the hand-built entry's oracle is
-    the proof the SQL path does not change semantics."""
-    from ..ivm_sql import create_materialized_view
-
-    return _mvr_flow(
-        spark, sf_dir,
-        lambda runner: create_materialized_view(runner, MVR_DDL),
-    )
-
-
-O_MV_REFRESH = """
-WITH b AS (
-    SELECT i AS k, i % 50 AS g,
-           (i * i) % 997
-             + CASE WHEN i >= 400 AND i % 3 = 0 THEN 1500 ELSE 0 END AS x,
-           (i * 3) % 13 AS u
-    FROM UNNEST(range(0, 600)) AS t(i)
-),
-s1 AS (
-    SELECT k, g,
-           CASE WHEN k % 97 = 5 THEN x + 2000 ELSE x END AS x,
-           CASE WHEN k % 89 = 3 THEN (u + 5) % 13 ELSE u END AS u
-    FROM b
-),
-f AS (SELECT * FROM s1 WHERE k % 101 <> 7 AND g <> 13)
-SELECT g, COUNT(*) AS n, CAST(SUM(x) AS BIGINT) AS sum_x,
-       MIN(x) AS min_x, MAX(x) AS max_x, COUNT(DISTINCT u) AS uniq_u
-FROM f GROUP BY g ORDER BY g
-"""
-
-
-def q_jv_incremental_refresh(spark, sf_dir: str):
-    """The generalized IVM engine API's JOIN-VIEW side (r13):
-    `JoinViewDefinition` + `JoinViewMaintainer` (ivm.py) maintain a
-    fact ⋈ dim row-level view off a UNION of both tables' change feeds —
-    the delta-join `streaming_ivm_join_pruned` proved as a hand-written
-    sink, now engine surface. SAME fixture, SAME waves, SAME oracle as
-    that entry (the API must not change semantics): ck-bucket-partitioned
-    fact so BOTH base probes resolve via read_target(rels=...) from the
-    change rows alone; the dim-only wave asserts the probe opened exactly
-    1 of the 4 committed rels with every input file under it; the fact
-    UPDATE wave moves ck AND ckb (copy-on-write DML migrates rows across
-    hive partitions); a dim delete tombstones dangling view rows while a
-    simultaneous same-key insert wave stays out (both sources in one
-    refresh); replay is a version-pinned no-op."""
-    import dataclasses
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..incremental import IncrementalRunner, ModelSpec
-    from ..ivm import JoinViewDefinition, JoinViewMaintainer
-    from ..util import materialize
-
-    root = tempfile.mkdtemp(prefix="mycarely_jvr_")
-    runner = IncrementalRunner(spark, root)
-    runner.RETENTION_SECONDS = 3600.0
-
-    def fact_build(n):
-        def b(sp, sfd, wm):
-            rows = sp.range(n).select(
-                F.col("id").alias("k"),
-                (F.col("id") % 20).alias("ck"),
-                ((F.col("id") * F.col("id")) % 1000).alias("amt"),
-                ((F.col("id") % 20) % 4).alias("ckb"),
-            )
-            if wm is not None:
-                rows = rows.filter(F.col("k") > F.lit(wm))
-            return rows
-
-        return b
-
-    def dim_build(sp, sfd, wm):
-        rows = sp.range(20).select(
-            F.col("id").alias("ck"), (F.col("id") % 5).alias("seg")
-        )
-        if wm is not None:
-            rows = rows.filter(F.col("ck") > F.lit(wm))
-        return rows
-
-    fact_spec = ModelSpec(
-        "jvr_fact", "k", "k", fact_build(300), partition_by=["ckb"],
-        change_data=True, cdc_buckets=16,
-    )
-    dim_spec = ModelSpec(
-        "jvr_dim", "ck", "ck", dim_build, change_data=True, cdc_buckets=16
-    )
-    runner.run(fact_spec, sf_dir)                        # bootstrap both
-    runner.run(dim_spec, sf_dir)
-    jv = JoinViewDefinition(
-        "jvr_view", "jvr_fact", "k", "jvr_dim", "ck",
-        fact_cols=["amt"], dim_cols=["seg"],
-        fact_bucket_expr="ck % 4", fact_bucket_col="ckb",
-        view_bucket_expr="k % 8", view_bucket_col="kb",
-    )
-    m = JoinViewMaintainer(runner, jv)
-    m.refresh(spark)                                     # view = full join
-    runner.update_where(dim_spec, "ck % 4 = 1", {"seg": "seg + 10"})
-    m.refresh(spark)                                     # dim-only: pruned
-    runner.update_where(                                 # join key + ckb MOVE
-        fact_spec, "k % 9 = 2",
-        {"amt": "amt + 5000", "ck": "(ck + 7) % 20",
-         "ckb": "((ck + 7) % 20) % 4"},
-    )
-    runner.delete_where(fact_spec, "k % 13 = 4")         # cow DELETE
-    m.refresh(spark)                                     # one netted catch-up
-    runner.delete_where(dim_spec, "ck = 3")              # dangling rows out
-    runner.run(                                          # insert wave 2
-        dataclasses.replace(fact_spec, build=fact_build(600)), sf_dir
-    )
-    m.refresh(spark)  # BOTH sources in one refresh
-    v_mv = runner.current_manifest("jvr_view")["version"]
-    m.refresh(spark)                                     # replay: no-op
-    assert runner.current_manifest("jvr_view")["version"] == v_mv
-    # the dim-only wave read exactly ONE of the 4 committed ckb rels
-    # (ck%4=1 for every changed ck), every input file under it
-    dim_only = [
-        (rels, committed, ok)
-        for rels, committed, ok in m.path_log
-        if ok is not None
-    ]
-    assert dim_only and dim_only[0][2] and len(dim_only[0][0]) == 1, (
-        m.path_log
-    )
-    assert len(dim_only[0][1]) == 4, m.path_log
-
-    out = materialize(m.read().orderBy("k"))
-    shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
-# The reference model's filtered-events projection (traffic_pages_agg's
-# `filtered_events` CTE — reference models/traffic_pages_agg.sql:7-24),
-# engine-portable (runs verbatim in Spark SQL and DuckDB): bot/spider/
-# crawl NOT ILIKE ladder with NULL drop, internal-referrer rejection,
-# page NOT NULL gate. `db` is the day-of-month bucket the IVM state
-# partitions on (derivable from any change row — the pruning key).
-TPV_FE_SQL = """
-SELECT CAST(event_id AS BIGINT) AS eid,
-       CAST(collector_tstamp AS DATE) AS event_date,
-       app_id AS company_domain,
-       domain_userid, page_urlpath,
-       EXTRACT(DAY FROM CAST(collector_tstamp AS DATE)) % 8 AS db
-FROM atomic_events
-WHERE event = 'page_view' AND refr_medium <> 'internal'
-  AND useragent NOT ILIKE '%bot%' AND useragent NOT ILIKE '%spider%'
-  AND useragent NOT ILIKE '%crawl%' AND page_urlpath IS NOT NULL
-"""
-
-
-def q_streaming_ivm_traffic_pages(spark, sf_dir: str):
-    """Exact IVM of the REFERENCE's flagship aggregate (r13 — ties
-    VERDICT r12 item 1 to reference parity): `traffic_pages_agg`'s
-    `page_traffic` CTE — per (date, company_domain, page_urlpath)
-    COUNT(*) AS traffic and COUNT(DISTINCT domain_userid) AS
-    unique_visits (reference models/traffic_pages_agg.sql:27-36) —
-    maintained off the four-type change feed of a CDF-enabled
-    filtered-events table, WITHOUT re-aggregating any base day.
-
-    This is `streaming_ivm_distinct`'s support-count machinery
-    instantiated on the real model shape, with the extra semantics the
-    synthetic entry can't show:
-      * NULL domain_userid rows (the atomic_events feed has them) count
-        toward traffic but NEVER toward unique_visits — they bypass the
-        support table entirely, exactly COUNT(DISTINCT)'s NULL rule;
-      * the group key is COMPOSITE (date, domain, path) — state keys
-        are concat-encoded, the partition bucket (db = day-of-month %
-        8) derives from any change row, so both state probes stay
-        `read_target(rels=[db=...])`-pruned;
-      * per-batch MV arithmetic stays DISTRIBUTED (full-join of total
-        deltas, support transitions, and the pruned old-MV slice) —
-        only the touched-date list and one sanity aggregate collect.
-
-    Waves: bootstrap (incl. NULL-user rows) -> insert wave (eid%5=4
-    backfill) -> netted UPDATE (user reassignment via '_x' suffix —
-    uniq increments AND decrements; NULL users stay NULL and net to
-    zero) + DELETE (bot purge eid%23=9: last-event deletes decrement
-    unique_visits, others only traffic) -> full-BUCKET delete (db=7:
-    every group on days 7/15/23/31 tombstones; probe asserted to open
-    exactly 1 of 8 committed rels) -> replay no-op. Final MV
-    hash-matches the model-shaped GROUP BY oracle over the live rows."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..incremental import IncrementalRunner, ModelSpec
-    from ..sources.registry import register_sources
-    from ..util import materialize
-
-    register_sources(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="mycarely_ivmtp_")
-    runner = IncrementalRunner(spark, root)
-    runner.RETENTION_SECONDS = 3600.0
-    register_manifest_cdf_source(spark)
-    G3 = ["event_date", "company_domain", "page_urlpath"]
-
-    def base_build(pred):
-        def b(sp, sfd, wm):
-            register_sources(sp, sfd)
-            return sp.sql(TPV_FE_SQL).filter(pred)
-
-        return b
-
-    base_spec = ModelSpec(
-        "tpv_base", "eid", "eid", base_build("eid % 5 != 4"),
-        partition_by=["db"], change_data=True, cdc_buckets=16,
-    )
-    sup_spec = ModelSpec(
-        "tpv_sup", "sk", "sk", None, partition_by=["db"],
-        tombstone_col="__del",
-    )
-    mv_spec = ModelSpec(
-        "tpv_mv", "gk", "gk", None, partition_by=["db"],
-        tombstone_col="__del",
-    )
-    path_log: list = []  # (rels, committed, uinc, udec) per batch
-    batches: list = []
-
-    def hop():
-        hop_start = len(batches)
-        feed = (
-            spark.readStream.format("mycarely_manifest_cdf")
-            .option("root", root)
-            .option("model", "tpv_base")
-            .option("key", "eid")
-            .option("preimages", "true")
-            .load()
-        )
-
-        def sink(batch_df, bid):
-            # CURRENT-state contract, enforced BEFORE work (VERDICT r13
-            # item 4): a second batch in one hop means the probes below
-            # would read batch-end state for a mid-stream batch — refuse
-            # at the top of batch 2, with batch 1 fully committed.
-            if len(batches) - hop_start >= 1:
-                raise RuntimeError(
-                    "IVM CURRENT-state contract violated: more than one "
-                    "batch per availableNow hop (maxVersionsPerBatch?)"
-                )
-            batches.append(bid)
-            rows = batch_df.persist()
-            try:
-                if not rows.count():
-                    return
-                sign = F.when(
-                    F.col("_change_type").isin("insert", "update_postimage"),
-                    F.lit(1),
-                ).otherwise(F.lit(-1))
-                ch = rows.select(*G3, "domain_userid", sign.alias("d"))
-                # traffic deltas count EVERY row; support deltas only
-                # non-NULL users (COUNT DISTINCT's NULL rule)
-                tot = ch.groupBy(*G3).agg(F.sum("d").alias("n_delta"))
-                sup_d = (
-                    ch.filter(F.col("domain_userid").isNotNull())
-                    .groupBy(*G3, "domain_userid")
-                    .agg(F.sum("d").alias("d"))
-                    .filter(F.col("d") != 0)
-                )
-                # touched-date list: driver-bounded (<= days in the feed)
-                dates = [
-                    r["event_date"]
-                    for r in tot.select("event_date").distinct().collect()
-                ]
-                rels = sorted({f"db={d.day % 8}" for d in dates})
-                committed = (
-                    sorted(runner.current_manifest("tpv_sup")["partitions"])
-                    if runner.target_exists("tpv_sup")
-                    else []
-                )
-                if committed:
-                    old_sup = runner.read_target("tpv_sup", rels=rels).select(
-                        *G3, "domain_userid", "s"
-                    )
-                else:
-                    old_sup = sup_d.limit(0).select(
-                        *G3, "domain_userid",
-                        F.lit(0).cast("bigint").alias("s"),
-                    )
-                j = sup_d.join(
-                    old_sup, [*G3, "domain_userid"], "left"
-                ).select(
-                    *G3, "domain_userid", "d",
-                    F.coalesce(F.col("s"), F.lit(0)).alias("s_old"),
-                    (F.coalesce(F.col("s"), F.lit(0)) + F.col("d")).alias(
-                        "s_new"
-                    ),
-                ).persist()
-                sup_out = j.select(
-                    F.concat_ws(
-                        "|", F.col("event_date").cast("string"),
-                        "company_domain", "page_urlpath", "domain_userid",
-                    ).alias("sk"),
-                    *G3, "domain_userid",
-                    F.col("s_new").alias("s"),
-                    (F.dayofmonth("event_date") % 8).alias("db"),
-                    (F.col("s_new") == 0).alias("__del"),
-                )
-                # foreachBatch redelivery guard (ADVICE r13): MV already
-                # committed for this batch_id => the MV arithmetic below
-                # would read POST-merge state and fire the sanity assert;
-                # skip to the support merge (ledger-idempotent).
-                last_mv = (
-                    runner.txn_last_version("tpv_mv", "tpv_mv")
-                    if runner.target_exists("tpv_mv")
-                    else None
-                )
-                if last_mv is not None and last_mv >= bid:
-                    runner.merge_txn(
-                        sup_spec, sup_out, app_id="tpv_sup", txn_version=bid
-                    )
-                    j.unpersist()
-                    return
-                trans = j.groupBy(*G3).agg(
-                    F.sum(
-                        F.when(
-                            (F.col("s_old") == 0) & (F.col("s_new") > 0), 1
-                        ).otherwise(0)
-                    ).alias("uinc"),
-                    F.sum(
-                        F.when(
-                            (F.col("s_old") > 0) & (F.col("s_new") == 0), 1
-                        ).otherwise(0)
-                    ).alias("udec"),
-                    F.sum(
-                        F.when(F.col("s_new") < 0, 1).otherwise(0)
-                    ).alias("neg"),
-                )
-                old_mv = (
-                    runner.read_target("tpv_mv", rels=rels).select(
-                        *G3, "traffic", "unique_visits"
-                    )
-                    if runner.target_exists("tpv_mv")
-                    else tot.limit(0).select(
-                        *G3,
-                        F.lit(0).cast("bigint").alias("traffic"),
-                        F.lit(0).cast("bigint").alias("unique_visits"),
-                    )
-                )
-                z = F.lit(0).cast("bigint")
-                # distributed MV arithmetic: touched groups only
-                merged = (
-                    tot.join(trans, G3, "full")
-                    .join(old_mv, G3, "left")
-                    .select(
-                        *G3,
-                        (
-                            F.coalesce(F.col("traffic"), z)
-                            + F.coalesce(F.col("n_delta"), z)
-                        ).alias("traffic"),
-                        (
-                            F.coalesce(F.col("unique_visits"), z)
-                            + F.coalesce(F.col("uinc"), z)
-                            - F.coalesce(F.col("udec"), z)
-                        ).alias("unique_visits"),
-                        F.coalesce(F.col("neg"), z).alias("neg"),
-                        F.coalesce(F.col("uinc"), z).alias("uinc"),
-                        F.coalesce(F.col("udec"), z).alias("udec"),
-                    )
-                    .persist()
-                )
-                sane = merged.agg(
-                    F.sum(
-                        F.when(
-                            (F.col("neg") > 0)
-                            | (F.col("traffic") < 0)
-                            | (F.col("unique_visits") < 0)
-                            | (F.col("unique_visits") > F.col("traffic")),
-                            1,
-                        ).otherwise(0)
-                    ).alias("bad"),
-                    F.sum("uinc").alias("ui"),
-                    F.sum("udec").alias("ud"),
-                ).collect()[0]
-                assert sane["bad"] == 0, "IVM state and feed disagree"
-                path_log.append((rels, committed, sane["ui"], sane["ud"]))
-                mv_out = merged.select(
-                    F.concat_ws(
-                        "|", F.col("event_date").cast("string"),
-                        "company_domain", "page_urlpath",
-                    ).alias("gk"),
-                    *G3, "traffic", "unique_visits",
-                    (F.dayofmonth("event_date") % 8).alias("db"),
-                    (F.col("traffic") == 0).alias("__del"),
-                )
-                # MV first, support second (crash ordering: a replay
-                # recomputes from still-unchanged support; the applied
-                # merge skips via the txn ledger)
-                runner.merge_txn(
-                    mv_spec, mv_out, app_id="tpv_mv", txn_version=bid
-                )
-                runner.merge_txn(
-                    sup_spec, sup_out, app_id="tpv_sup", txn_version=bid
-                )
-                j.unpersist()
-                merged.unpersist()
-            finally:
-                rows.unpersist()
-
-        q = (
-            feed.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{root}/_ckpt_tpv")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, 300)
-        # CURRENT-state contract (ADVICE r12): single-batch catch-up only
-        assert len(batches) - hop_start <= 1, batches
-
-    from ..util import timed_phase
-
-    with timed_phase("bootstrap"):
-        runner.run(base_spec, sf_dir)                      # v1 bootstrap
-        hop()                                              # MV = full agg
-    with timed_phase("wave_insert"):
-        runner.run(                                        # insert backfill
-            __import__("dataclasses").replace(
-                base_spec, build=base_build("eid % 5 = 4")
-            ),
-            sf_dir,
-        )
-        hop()
-    with timed_phase("wave_net"):
-        runner.update_where(                               # user reassignment
-            base_spec, "eid % 31 = 5",
-            {"domain_userid": "concat(domain_userid, '_x')"},
-        )
-        runner.delete_where(base_spec, "eid % 23 = 9")     # bot purge
-        hop()                                              # netted catch-up
-    with timed_phase("wave_bucket_delete"):
-        runner.delete_where(base_spec, "db = 7")           # whole bucket out
-        hop()                                              # tombstone wave
-    v_mv = runner.current_manifest("tpv_mv")["version"]
-    with timed_phase("replay"):
-        hop()                                              # replay: no-op
-    assert runner.current_manifest("tpv_mv")["version"] == v_mv
-    for rels, committed, _, _ in path_log[1:]:
-        assert set(rels) <= set(committed), (rels, committed)
-    # the netted catch-up moved uniques BOTH directions; the bucket
-    # delete opened exactly ONE of the 8 committed rels
-    assert path_log[2][2] > 0 and path_log[2][3] > 0, path_log
-    assert path_log[3][0] == ["db=7"] and len(path_log[3][1]) == 8, path_log
-    assert (
-        runner.read_target("tpv_mv").filter(F.col("db") == 7).count() == 0
-    )
-
-    out = materialize(
-        runner.read_target("tpv_mv")
-        .select(*G3, "traffic", "unique_visits")
-        .orderBy(*G3)
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
-def _ivm_tp_oracle() -> str:
-    from .synthetic import ATOMIC_EVENTS_SQL
-
-    return f"""
-WITH atomic_events AS ({ATOMIC_EVENTS_SQL}),
-fe AS ({TPV_FE_SQL}),
-u2 AS (
-    SELECT eid, event_date, company_domain, page_urlpath, db,
-           CASE WHEN eid % 31 = 5 THEN domain_userid || '_x'
-                ELSE domain_userid END AS domain_userid
-    FROM fe
-),
-f AS (SELECT * FROM u2 WHERE eid % 23 <> 9 AND db <> 7)
-SELECT event_date, company_domain, page_urlpath,
-       COUNT(*) AS traffic,
-       COUNT(DISTINCT domain_userid) AS unique_visits
-FROM f GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
-"""
-
-
-# --- r14: exact IVM of the REFERENCE's traffic_daily_agg DAG ------------
-# The classified-events projection of models/traffic_daily_agg.sql:8-75
-# (filtered_events + classified_events + the col_3/col_4 pickers),
-# engine-portable (runs verbatim in Spark SQL and DuckDB). `db` is the
-# day-of-month bucket the IVM state partitions on.
-TDV_CE_SQL = """
-WITH fe AS (
-    SELECT CAST(event_id AS BIGINT) AS eid,
-           CAST(collector_tstamp AS DATE) AS event_date,
-           app_id, domain_userid, refr_medium, mkt_source, refr_source,
-           mkt_network, mkt_campaign, mkt_term
-    FROM atomic_events
-    WHERE event = 'page_view' AND refr_medium <> 'internal'
-      AND useragent NOT ILIKE '%bot%' AND useragent NOT ILIKE '%spider%'
-      AND useragent NOT ILIKE '%crawl%'
-),
-ce AS (
-    SELECT eid, event_date, app_id, domain_userid,
-           CASE
-               WHEN (refr_medium IN ('cpc', 'ppc', 'paidsearch', 'display',
-                                     'social', 'search', 'email', '',
-                                     'unknown')
-                     AND COALESCE(mkt_network, '') <> '')
-                    OR (refr_medium = 'paid') THEN 'paid'
-               WHEN refr_medium IN ('display', 'social', 'search', 'email',
-                                    '', 'unknown')
-                    AND refr_medium <> 'paid'
-                    AND COALESCE(mkt_network, '') = '' THEN 'organic'
-               ELSE NULL
-           END AS traffic_type,
-           mkt_source, refr_source, mkt_network, mkt_campaign, mkt_term
-    FROM fe
-)
-SELECT eid, event_date, app_id, domain_userid, traffic_type,
-       CASE
-           WHEN traffic_type = 'paid'
-               THEN COALESCE(mkt_source, refr_source, mkt_network, 'unknown')
-           WHEN traffic_type = 'organic'
-               THEN COALESCE(mkt_source, refr_source, 'unknown')
-       END AS col_3,
-       CASE
-           WHEN traffic_type = 'paid' THEN COALESCE(mkt_campaign, 'unknown')
-           WHEN traffic_type = 'organic'
-               THEN COALESCE(mkt_term, mkt_campaign, 'unknown')
-       END AS col_4,
-       EXTRACT(DAY FROM event_date) % 8 AS db
-FROM ce
-WHERE traffic_type IS NOT NULL
-"""
-
-# campaign_spend_data with a row identity: the synthetic campaign_spends
-# derivation (sources/synthetic.py CAMPAIGN_SPENDS_SQL — one row per
-# o_orderkey % 5 = 0) re-expressed with `sid = o_orderkey` so the spend
-# table can be a change-data dim (its own unique key, independent of the
-# fanning (campaign_name, spend_date) join tuple).
-TDV_SP_SQL = """
-SELECT
-    CAST(o_orderkey AS BIGINT)                        AS sid,
-    CAST(o_custkey % 3 + 1 AS INT)                    AS company_id,
-    'domain' || CAST(o_custkey % 3 AS STRING) || '.example.com'
-                                                      AS company_domain,
-    CAST('2024-01-01' AS DATE) + CAST(o_orderkey % 31 AS INT) AS spend_date,
-    CASE CAST(o_orderkey % 7 AS INT)
-         WHEN 0 THEN 'spring_sale'  WHEN 1 THEN 'brand_push'
-         WHEN 2 THEN 'summer_promo' WHEN 3 THEN 'holiday2024'
-         WHEN 4 THEN 'retarget_q1'  WHEN 5 THEN 'generic_cmp'
-         ELSE 'orphan_campaign' END                   AS campaign_name,
-    CASE WHEN o_orderkey % 10 = 0 THEN NULL
-         WHEN o_orderkey % 10 = 1 THEN CAST(0 AS DOUBLE)
-         ELSE CAST(o_orderkey % 400 AS DOUBLE) / 4 END AS spend
-FROM orders
-WHERE o_orderkey % 5 = 0
-"""
-
-
-def q_ivm_traffic_daily(spark, sf_dir: str):
-    """Exact IVM of the reference's ENTIRE traffic_daily_agg DAG (r14 —
-    VERDICT r13 item 1): aggregate-then-LEFT-join, maintained end to
-    end through the generalized IVM API as a CHAIN of maintainers —
-
-      events --(MVDefinition: COUNT + COUNT DISTINCT, emit_changes)-->
-      tdv_et --(JoinViewDefinition: LEFT, composite keys, constant
-                ON-predicate traffic_type='paid', dim_filter spend IS
-                NOT NULL, dim FAN-OUT)--> tdv_join --> read() applies
-      the row-level unpivot + NVL(spend,0) + md5 surrogate key.
-
-    This is the reference's event_traffic CTE (models/
-    traffic_daily_agg.sql:51-76) maintained as a COUNT/COUNT DISTINCT
-    MV whose change feed drives the combined_traffic LEFT JOIN
-    (models/traffic_daily_agg.sql:92-129) as a maintained join view:
-      * a paid group with no spend match stays in the view with NULL
-        spend (LEFT semantics) and flips in place when a matching
-        spend row appears/vanishes;
-      * the ON carries the constant predicate et.traffic_type='paid'
-        — organic groups NEVER probe the dim and keep NULL spend;
-      * (campaign_name, spend_date) FANS OUT (multiple companies spend
-        on the same campaign-day) — the view's merge is delete+insert
-        by fact key, replacing each affected group's row SET;
-      * the spend dim carries its own unique key (sid) for its change
-        feed; dim_filter spend IS NOT NULL is part of the definition,
-        so a spend update crossing NULL<->value flips match state.
-
-    Waves: bootstrap -> spend-only churn pinned to one day bucket
-    (dim-only batch asserted to open EXACTLY 1 of the 8 committed fact
-    rels, every input file under it) -> event insert backfill -> netted
-    user-reassignment UPDATE + bot-purge DELETE (moves unique_visitors
-    both directions through the MV's support table, propagates through
-    the join view) -> replay no-op (both targets version-pinned).
-    Final read hash-matches the full traffic_daily_agg-shaped oracle
-    (id/company/date/traffic/spend/col_1..col_6) over the mutated
-    sources — the reference's TD output maintained incrementally."""
-    import dataclasses
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from ..incremental import IncrementalRunner, ModelSpec
-    from ..ivm import (
-        JoinViewDefinition,
-        JoinViewMaintainer,
-        MaterializedViewMaintainer,
-        MVAggregate,
-        MVDefinition,
-    )
-    from ..functions.dialect import surrogate_key
-    from ..sources.registry import register_sources
-    from ..util import materialize
-
-    register_sources(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="mycarely_ivmtd_")
-    runner = IncrementalRunner(spark, root)
-    runner.RETENTION_SECONDS = 3600.0
-
-    def ev_build(pred):
-        def b(sp, sfd, wm):
-            register_sources(sp, sfd)
-            return sp.sql(TDV_CE_SQL).filter(pred)
-
-        return b
-
-    def sp_build(sp, sfd, wm):
-        register_sources(sp, sfd)
-        return sp.sql(TDV_SP_SQL)
-
-    ev_spec = ModelSpec(
-        "tdv_ev", "eid", "eid", ev_build("eid % 5 != 4"),
-        partition_by=["db"], change_data=True, cdc_buckets=16,
-    )
-    sp_spec = ModelSpec(
-        "tdv_sp", "sid", "sid", sp_build, change_data=True, cdc_buckets=16
-    )
-    runner.run(ev_spec, sf_dir)
-    runner.run(sp_spec, sf_dir)
-
-    mv = MVDefinition(
-        "tdv_et", "tdv_ev", "eid",
-        ["event_date", "app_id", "traffic_type", "col_3", "col_4"],
-        [
-            MVAggregate("count", None, "total_visits"),
-            MVAggregate("count_distinct", "domain_userid", "unique_visitors"),
-        ],
-        bucket_expr="extract(DAY FROM event_date) % 8", bucket_col="db",
-        emit_changes=True,
-    )
-    m_et = MaterializedViewMaintainer(runner, mv)
-    m_et.refresh(spark)                                   # MV = full agg
-    jv = JoinViewDefinition(
-        "tdv_join", "tdv_et", "__gk", "tdv_sp",
-        join_on=[("col_4", "campaign_name"), ("event_date", "spend_date")],
-        fact_cols=[
-            "app_id", "traffic_type", "col_3",
-            "total_visits", "unique_visitors",
-        ],
-        dim_cols=["spend"],
-        how="left",
-        fact_match_pred="traffic_type = 'paid'",
-        dim_filter="spend IS NOT NULL",
-        dim_key="sid",
-        fact_bucket_expr="extract(DAY FROM event_date) % 8",
-        fact_bucket_col="db",
-        view_bucket_expr="pmod(xxhash64(__gk), 8)", view_bucket_col="vb",
-    )
-    m_jv = JoinViewMaintainer(runner, jv)
-    m_jv.refresh(spark)                                   # view = full join
-    # spend-only churn pinned to day-bucket 3: NULL->value flips
-    # (dim_filter boundary), value changes, and deletes
-    runner.update_where(
-        sp_spec, "sid % 13 = 2 AND extract(DAY FROM spend_date) % 8 = 3",
-        {"spend": "coalesce(spend, 0) + 250"},
-    )
-    runner.delete_where(
-        sp_spec, "sid % 17 = 6 AND extract(DAY FROM spend_date) % 8 = 3"
-    )
-    m_jv.refresh(spark)                                   # dim-only: pruned
-    runner.run(                                           # insert backfill
-        dataclasses.replace(ev_spec, build=ev_build("eid % 5 = 4")), sf_dir
-    )
-    m_et.refresh(spark)
-    m_jv.refresh(spark)
-    runner.update_where(                                  # user reassignment
-        ev_spec, "eid % 31 = 5",
-        {"domain_userid": "concat(domain_userid, '_x')"},
-    )
-    runner.delete_where(ev_spec, "eid % 23 = 9")          # bot purge
-    m_et.refresh(spark)                                   # netted catch-up
-    m_jv.refresh(spark)
-    v_et = runner.current_manifest("tdv_et")["version"]
-    v_jv = runner.current_manifest("tdv_join")["version"]
-    m_et.refresh(spark)                                   # replay: no-ops
-    m_jv.refresh(spark)
-    assert runner.current_manifest("tdv_et")["version"] == v_et
-    assert runner.current_manifest("tdv_join")["version"] == v_jv
-    # every MV probe stayed inside the committed bucket set
-    for rels, committed, _ in m_et.path_log[1:]:
-        assert set(rels) <= set(committed), (rels, committed)
-    # the dim-only wave opened EXACTLY one of the 8 committed fact rels,
-    # every input file under it (manifest-resolved pruning, pinned)
-    dim_only = [t for t in m_jv.path_log if t[2] is not None]
-    assert dim_only and dim_only[0][2], m_jv.path_log
-    assert dim_only[0][0] == ["db=3"], m_jv.path_log
-    assert len(dim_only[0][1]) == 8, m_jv.path_log
-
-    # the reference model's tail: UNION-ALL unpivot (single-scan stack)
-    # + NVL(spend, 0) + md5 surrogate key — row-level derived SELECT
-    # over the maintained view (models/traffic_daily_agg.sql:92-145)
-    v = m_jv.read().selectExpr(
-        "999 AS company_id",
-        "app_id AS company_domain",
-        "event_date AS spend_date",
-        "CAST(COALESCE(spend, 0) AS DOUBLE) AS spend",
-        "traffic_type AS col_2",
-        "col_3",
-        "col_4",
-        "stack(2, 'all', total_visits, 'unique', unique_visitors)"
-        " AS (col_1, traffic)",
-        "CAST(NULL AS STRING) AS col_5",
-        "CAST(NULL AS STRING) AS col_6",
-    )
-    out = materialize(
-        v.select(
-            surrogate_key(
-                "company_domain", "spend_date", "col_1", "col_2", "col_3",
-                "col_4",
-            ).alias("id"),
-            "company_id", "company_domain", "spend_date", "traffic",
-            "spend", "col_1", "col_2", "col_3", "col_4", "col_5", "col_6",
-        )
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
-def _ivm_td_oracle() -> str:
-    from ..plans.traffic_daily import _SURROGATE
-    from .synthetic import ATOMIC_EVENTS_SQL
-
-    return f"""
-WITH atomic_events AS ({ATOMIC_EVENTS_SQL}),
-ce AS ({TDV_CE_SQL}),
-ev AS (
-    SELECT eid, event_date, app_id, traffic_type, col_3, col_4,
-           CASE WHEN eid % 31 = 5 THEN domain_userid || '_x'
-                ELSE domain_userid END AS domain_userid
-    FROM ce WHERE eid % 23 <> 9
-),
-et AS (
-    SELECT event_date, app_id, traffic_type, col_3, col_4,
-           COUNT(*) AS total_visits,
-           COUNT(DISTINCT domain_userid) AS unique_visitors
-    FROM ev GROUP BY 1, 2, 3, 4, 5
-),
-sp0 AS ({TDV_SP_SQL}),
-sp1 AS (
-    SELECT sid, company_id, company_domain, spend_date, campaign_name,
-           CASE WHEN sid % 13 = 2 AND EXTRACT(DAY FROM spend_date) % 8 = 3
-                THEN COALESCE(spend, 0) + 250 ELSE spend END AS spend
-    FROM sp0
-    WHERE NOT (sid % 17 = 6 AND EXTRACT(DAY FROM spend_date) % 8 = 3)
-),
-csd AS (SELECT * FROM sp1 WHERE spend IS NOT NULL),
-combined AS (
-    SELECT 999 AS company_id, et.app_id AS company_domain,
-           et.event_date AS spend_date, et.total_visits AS traffic,
-           CAST(COALESCE(csd.spend, 0) AS DOUBLE) AS spend,
-           'all' AS col_1, et.traffic_type AS col_2, et.col_3, et.col_4,
-           CAST(NULL AS STRING) AS col_5, CAST(NULL AS STRING) AS col_6
-    FROM et
-    LEFT JOIN csd
-        ON et.col_4 = csd.campaign_name
-        AND et.event_date = csd.spend_date
-        AND et.traffic_type = 'paid'
-    UNION ALL
-    SELECT 999 AS company_id, et.app_id AS company_domain,
-           et.event_date AS spend_date, et.unique_visitors AS traffic,
-           CAST(COALESCE(csd.spend, 0) AS DOUBLE) AS spend,
-           'unique' AS col_1, et.traffic_type AS col_2, et.col_3, et.col_4,
-           CAST(NULL AS STRING) AS col_5, CAST(NULL AS STRING) AS col_6
-    FROM et
-    LEFT JOIN csd
-        ON et.col_4 = csd.campaign_name
-        AND et.event_date = csd.spend_date
-        AND et.traffic_type = 'paid'
-)
-SELECT __SURROGATE__ AS id,
-       company_id, company_domain, spend_date, traffic, spend,
-       col_1, col_2, col_3, col_4, col_5, col_6
-FROM combined
-""".replace("__SURROGATE__", _SURROGATE)
-
-
-O_IVM_MINMAX = """
-WITH b AS (
-    SELECT i AS k, i % 50 AS g,
-           (i * i) % 997
-             + CASE WHEN i >= 400 AND i % 3 = 0 THEN 1500 ELSE 0 END AS x
-    FROM UNNEST(range(0, 600)) AS u(i)
-),
-u AS (
-    SELECT k, g, CASE WHEN k % 97 = 5 THEN x + 2000 ELSE x END AS x FROM b
-),
-f AS (SELECT * FROM u WHERE k % 101 <> 7 AND g <> 13)
-SELECT g, MIN(x) AS m_min, MAX(x) AS m_max, COUNT(*) AS n
-FROM f GROUP BY g ORDER BY g
-"""
-
-
 def register_queries(register) -> None:
     register("pyds_ledger_rollup", q_pyds_ledger_rollup, O_PYDS_ROLLUP)
     register("pyds_pushdown_slice", q_pyds_pushdown_slice, O_PYDS_PUSHDOWN)
@@ -4004,29 +1890,3 @@ def register_queries(register) -> None:
     register(
         "streaming_cdf_propagate", q_streaming_cdf_propagate, O_CDF_PROPAGATE
     )
-    register(
-        "streaming_ivm_aggregate", q_streaming_ivm_aggregate, O_IVM_AGG
-    )
-    register("streaming_ivm_join", q_streaming_ivm_join, O_IVM_JOIN)
-    # the ck-partitioned fact variant shares the oracle by design:
-    # layout must not change semantics
-    register(
-        "streaming_ivm_join_pruned", q_streaming_ivm_join_pruned, O_IVM_JOIN
-    )
-    register("streaming_ivm_minmax", q_streaming_ivm_minmax, O_IVM_MINMAX)
-    register(
-        "streaming_ivm_distinct", q_streaming_ivm_distinct, O_IVM_DISTINCT
-    )
-    register(
-        "streaming_ivm_traffic_pages",
-        q_streaming_ivm_traffic_pages,
-        _ivm_tp_oracle(),
-    )
-    register("mv_incremental_refresh", q_mv_incremental_refresh, O_MV_REFRESH)
-    # the SQL-declared twin shares the oracle by design: the front door
-    # must not change semantics
-    register("sql_create_mv", q_sql_create_mv, O_MV_REFRESH)
-    register("ivm_traffic_daily", q_ivm_traffic_daily, _ivm_td_oracle())
-    # the join-view API twin shares the hand-written entry's oracle by
-    # design: the API must not change semantics
-    register("jv_incremental_refresh", q_jv_incremental_refresh, O_IVM_JOIN)

@@ -110,8 +110,9 @@ AUDIT = [
     # filters/pruning through the CTE text as the DataFrame build), and
     # the colmap×CDF lifecycle's final read (the sink state after the
     # rename-crossing feed applied). streaming_ivm_join_pruned's probe
-    # pruning is asserted in-entry via inputFiles (rels resolved from
-    # the manifest — no SELECT plan to audit).
+    # pruning is asserted in-entry on JoinViewMaintainer.path_log, which
+    # checks the probe's inputFiles against the rels resolved from the
+    # manifest — no SELECT plan to audit.
     "traffic_pages_agg_hash",
     "sql_api_traffic_pages",
     "colmap_cdf_lifecycle",

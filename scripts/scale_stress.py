@@ -12,8 +12,9 @@ shuffle-heaviest operator families and records wall-clock growth:
   * semdedup                 (centroid blocking; within-cluster N^2/K)
   * training_mix_pipeline    (multi-stage gates + mixture sampling)
   * bm25_index_append_search (corpus tokenize + segment build/append)
-  * IVM-join maintenance hop (dim-churn batch over a ck-partitioned
-                              fact — the claim is CHANGE-PROPORTIONAL
+  * IVM-join maintenance hop (dim-churn JoinViewMaintainer refresh
+                              over a ck-partitioned fact — the claim
+                              is CHANGE-PROPORTIONAL
                               work: near-FLAT growth while the fact
                               grows 10x, r12 item 4's pruning)
 
@@ -251,26 +252,24 @@ def timed(fn, *args, reps: int = 2, spark=None) -> tuple[float, dict]:
 
 
 def ivm_hop_seconds(spark, n_fact: int) -> tuple[float, dict]:
-    """One dim-churn maintenance hop over a ck-partitioned fact of
-    ``n_fact`` rows (the streaming_ivm_join_pruned sink verbatim, minus
-    the assertions): bootstrap the MV, then time ONLY the dim-update
-    hop. The claim: this cost is change-proportional (the ΔD probe
-    opens one of four ckb partitions), so it grows FAR slower than the
-    fact."""
-    import dataclasses
-
+    """One dim-churn refresh of a ``JoinViewMaintainer`` over a
+    ck-partitioned fact of ``n_fact`` rows (the streaming_ivm_join_pruned
+    view definition): bootstrap the view, then time ONLY the refresh
+    after a dim update. The claim: this cost is change-proportional (the
+    ΔD probe opens one of four ckb partitions), so it grows FAR slower
+    than the fact."""
     from pyspark.sql import functions as F
 
     from mycarely_saas_dbt_spark.incremental import IncrementalRunner, ModelSpec
-    from mycarely_saas_dbt_spark.sources.pydatasource import (
-        register_manifest_cdf_source,
+    from mycarely_saas_dbt_spark.ivm import (
+        JoinViewDefinition,
+        JoinViewMaintainer,
     )
 
     root = tempfile.mkdtemp(prefix="mycarely_scale_ivm_")
     try:
         runner = IncrementalRunner(spark, root)
         runner.RETENTION_SECONDS = 3600.0
-        register_manifest_cdf_source(spark)
 
         def fact_build(sp, sfd, wm):
             rows = sp.range(n_fact).select(
@@ -296,99 +295,21 @@ def ivm_hop_seconds(spark, n_fact: int) -> tuple[float, dict]:
             change_data=True,
         )
         dim_spec = ModelSpec("sc_dim", "ck", "ck", dim_build, change_data=True)
-        mv_spec = ModelSpec(
-            "sc_mv", "k", "k", None, partition_by=["kb"],
-            tombstone_col="__del",
-        )
-
-        def cdf(model, key):
-            return (
-                spark.readStream.format("mycarely_manifest_cdf")
-                .option("root", root)
-                .option("model", model)
-                .option("key", key)
-                .option("preimages", "true")
-                .load()
-            )
-
-        def hop():
-            fs = cdf("sc_fact", "k").select(
-                "k", "ck", F.lit("fact").alias("_src"), "_change_type"
-            )
-            ds = cdf("sc_dim", "ck").select(
-                F.lit(None).cast("long").alias("k"), "ck",
-                F.lit("dim").alias("_src"), "_change_type",
-            )
-
-            def sink(batch_df, bid):
-                rows = batch_df.persist()
-                try:
-                    if not rows.count():
-                        return
-                    f_rows = rows.filter(F.col("_src") == "fact")
-                    d_cks = [
-                        r["ck"]
-                        for r in rows.filter(F.col("_src") == "dim")
-                        .select("ck").distinct().collect()
-                    ]
-                    f_cks = [
-                        r["ck"]
-                        for r in f_rows.select("ck").distinct().collect()
-                    ]
-                    fc_keys = f_rows.select("k").distinct()
-                    dim = runner.read_target("sc_dim")
-                    d_rels = sorted({f"ckb={ck % 4}" for ck in d_cks})
-                    if d_cks:
-                        fslice = runner.read_target("sc_fact", rels=d_rels)
-                        d_cks_df = (
-                            rows.filter(F.col("_src") == "dim")
-                            .select("ck").distinct()
-                        )
-                        k_dim = fslice.join(
-                            F.broadcast(d_cks_df), "ck", "semi"
-                        ).select("k")
-                        keys = fc_keys.unionByName(k_dim).distinct()
-                    else:
-                        keys = fc_keys
-                    k_rels = sorted(
-                        {f"ckb={ck % 4}" for ck in f_cks}
-                        | set(d_rels if d_cks else [])
-                    )
-                    fact = runner.read_target("sc_fact", rels=k_rels)
-                    new = (
-                        fact.join(F.broadcast(keys), "k", "semi")
-                        .join(dim, "ck", "inner")
-                        .select("k", "ck", "amt", "seg")
-                    )
-                    apply = keys.join(new, "k", "left").select(
-                        "k", "ck", "amt", "seg",
-                        (F.col("k") % 8).alias("kb"),
-                        F.col("ck").isNull().alias("__del"),
-                    )
-                    runner.merge_txn(
-                        mv_spec, apply, app_id="sc_ivm", txn_version=bid
-                    )
-                finally:
-                    rows.unpersist()
-
-            q = (
-                fs.unionByName(ds)
-                .writeStream.foreachBatch(sink)
-                .option("checkpointLocation", f"{root}/_ckpt_sc")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(600)
-
         runner.run(fact_spec, "x")
         runner.run(dim_spec, "x")
-        hop()  # bootstrap MV (not timed — that's build cost, linear)
+        m = JoinViewMaintainer(runner, JoinViewDefinition(
+            "sc_mv", "sc_fact", "k", "sc_dim", "ck",
+            fact_cols=["amt"], dim_cols=["seg"],
+            fact_bucket_expr="ck % 4", fact_bucket_col="ckb",
+            view_bucket_expr="k % 8", view_bucket_col="kb",
+        ))
+        m.refresh()  # bootstrap the view (not timed — build cost, linear)
         best, best_work = None, None
-        for _ in range(2):  # min-of-2 dim-churn hops, same churn size
+        for _ in range(2):  # min-of-2 dim-churn refreshes, same churn size
             runner.update_where(dim_spec, "ck % 4 = 1", {"seg": "seg + 10"})
             w0 = work_snapshot(spark)
             t0 = time.monotonic()
-            hop()  # the dim-churn maintenance hop — the measured quantity
+            m.refresh()  # the dim-churn maintenance refresh — measured
             dt = time.monotonic() - t0
             if best is None or dt < best:
                 best = dt

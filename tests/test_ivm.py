@@ -105,11 +105,7 @@ def test_maintained_view_equals_batch_group_by(spark, target_root):
         MaterializedViewMaintainer,
         MVAggregate,
     )
-    from mycarely_saas_dbt_spark.sources.pydatasource import (
-        register_manifest_cdf_source,
-    )
 
-    register_manifest_cdf_source(spark)
     r = IncrementalRunner(spark, target_root)
     r.RETENTION_SECONDS = 3600.0
     spec = _base_spec()
@@ -196,11 +192,7 @@ def test_join_view_equals_batch_join(spark, target_root):
         JoinViewDefinition,
         JoinViewMaintainer,
     )
-    from mycarely_saas_dbt_spark.sources.pydatasource import (
-        register_manifest_cdf_source,
-    )
 
-    register_manifest_cdf_source(spark)
     r = IncrementalRunner(spark, target_root)
     r.RETENTION_SECONDS = 3600.0
     fact_spec = _base_spec()
@@ -261,11 +253,7 @@ def test_mv_bucket_name_differs_from_base_partition(spark, target_root):
         MaterializedViewMaintainer,
         MVAggregate,
     )
-    from mycarely_saas_dbt_spark.sources.pydatasource import (
-        register_manifest_cdf_source,
-    )
 
-    register_manifest_cdf_source(spark)
     r = IncrementalRunner(spark, target_root)
     r.RETENTION_SECONDS = 3600.0
     spec = _base_spec()
@@ -308,11 +296,7 @@ def test_sum_avg_over_double_keep_fraction(spark, target_root):
         MVAggregate,
         MVDefinition,
     )
-    from mycarely_saas_dbt_spark.sources.pydatasource import (
-        register_manifest_cdf_source,
-    )
 
-    register_manifest_cdf_source(spark)
     r = IncrementalRunner(spark, target_root)
     r.RETENTION_SECONDS = 3600.0
 
@@ -410,11 +394,7 @@ def test_state_key_pipe_and_null_collision_free(spark, target_root):
         MVAggregate,
         MVDefinition,
     )
-    from mycarely_saas_dbt_spark.sources.pydatasource import (
-        register_manifest_cdf_source,
-    )
 
-    register_manifest_cdf_source(spark)
     r = IncrementalRunner(spark, target_root)
     r.RETENTION_SECONDS = 3600.0
 
@@ -454,11 +434,7 @@ def test_replay_after_partial_commit_recovers(spark, target_root):
         MaterializedViewMaintainer,
         MVAggregate,
     )
-    from mycarely_saas_dbt_spark.sources.pydatasource import (
-        register_manifest_cdf_source,
-    )
 
-    register_manifest_cdf_source(spark)
     r = IncrementalRunner(spark, target_root)
     r.RETENTION_SECONDS = 3600.0
     spec = _base_spec()
@@ -584,11 +560,7 @@ def test_left_join_view_composite_fanout(spark, target_root):
         JoinViewDefinition,
         JoinViewMaintainer,
     )
-    from mycarely_saas_dbt_spark.sources.pydatasource import (
-        register_manifest_cdf_source,
-    )
 
-    register_manifest_cdf_source(spark)
     r = IncrementalRunner(spark, target_root)
     r.RETENTION_SECONDS = 3600.0
     fs, ds = _jvg_fact_spec(), _spend_dim_spec()
@@ -691,11 +663,7 @@ def test_aggregate_over_join_composition(spark, target_root):
         MVAggregate,
         MVDefinition,
     )
-    from mycarely_saas_dbt_spark.sources.pydatasource import (
-        register_manifest_cdf_source,
-    )
 
-    register_manifest_cdf_source(spark)
     r = IncrementalRunner(spark, target_root)
     r.RETENTION_SECONDS = 3600.0
     fs = _jvg_fact_spec(name="aoj_fact")
@@ -778,7 +746,9 @@ def test_refresh_applies_whole_pending_range_once(
     batch id is the range-end base version — the consumed position each
     target commits in its own txn ledger. The result equals the batch
     GROUP BY, and a refresh with nothing pending commits no version on
-    the MV or its support table."""
+    the MV or its support table. Neither does a refresh over a base
+    commit whose change set is empty; the next real change still
+    applies."""
     from mycarely_saas_dbt_spark.incremental import IncrementalRunner
     from mycarely_saas_dbt_spark.ivm import (
         MaterializedViewMaintainer,
@@ -806,15 +776,19 @@ def test_refresh_applies_whole_pending_range_once(
     assert calls == [1, end]
     for name, app in m.ledgers.values():
         assert r.txn_last_version(name, app) == end, name
-    expected = (
-        r.read_target("ivm_b")
-        .groupBy("g")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.min("x").cast("bigint").alias("min_x"),
-            F.count_distinct("u").cast("bigint").alias("uniq_u"),
+
+    def recompute():
+        return (
+            r.read_target("ivm_b")
+            .groupBy("g")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n"),
+                F.min("x").cast("bigint").alias("min_x"),
+                F.count_distinct("u").cast("bigint").alias("uniq_u"),
+            )
         )
-    )
+
+    expected = recompute()
     got = m.read()
     assert got.count() == expected.count()
     assert got.exceptAll(expected).count() == 0
@@ -823,6 +797,21 @@ def test_refresh_applies_whole_pending_range_once(
     m.refresh(spark)  # nothing pending
     assert calls == [1, end]
     assert {n: r.current_manifest(n)["version"] for n in versions} == versions
+
+    # an empty change set: x = x rewrites rows but changes none, so the
+    # base commits no change files and the refresh commits no version
+    r.update_where(spec, "k % 3 = 0", {"x": "x"})
+    assert r.current_manifest("ivm_b")["cdc"]["files"] == []
+    m.refresh(spark)
+    assert {n: r.current_manifest(n)["version"] for n in versions} == versions
+    # the next real change still applies, re-reading the empty version
+    # with it, and the MV equals the batch recompute
+    r.update_where(spec, "k % 5 = 1", {"x": "x + 3", "u": "(u + 2) % 5"})
+    m.refresh(spark)
+    assert calls == [1, end, end + 1, end + 2]
+    got, expected = m.read(), recompute()
+    assert got.count() == expected.count()
+    assert got.exceptAll(expected).count() == 0
 
 
 def test_join_view_catch_up_and_dim_only_refresh(
@@ -833,7 +822,9 @@ def test_join_view_catch_up_and_dim_only_refresh(
     probe, fact position unchanged), then a catch-up over several fact
     AND dim versions, each equal to the batch join; both positions
     commit in the view's manifest, and nothing pending commits
-    nothing."""
+    nothing. Empty change sets on both feeds commit no view version
+    and leave the positions where they were; the next real change
+    still applies."""
     from mycarely_saas_dbt_spark.incremental import (
         IncrementalRunner,
         ModelSpec,
@@ -900,6 +891,28 @@ def test_join_view_catch_up_and_dim_only_refresh(
     assert calls == [1, 2, 3]
     assert r.current_manifest("jv_t")["version"] == v
 
+    # empty change sets: a zero-match dim update commits nothing, and an
+    # identity update on each side commits a version with no change
+    # files; the refresh reads an empty batch over both feeds and
+    # commits no view version
+    dim_v = r.current_manifest("jv_dim")["version"]
+    r.update_where(dim_spec, "g > 100", {"label": "concat(label, '_z')"})
+    assert r.current_manifest("jv_dim")["version"] == dim_v
+    r.update_where(fact_spec, "k % 3 = 0", {"x": "x"})
+    r.update_where(dim_spec, "g = 7", {"label": "label"})
+    for t in ("ivm_b", "jv_dim"):
+        assert r.current_manifest(t)["cdc"]["files"] == [], t
+    m.refresh(spark)
+    assert calls == [1, 2, 3, 4]
+    assert r.current_manifest("jv_t")["version"] == v
+    assert positions() == {"fact": 3, "dim": 5}
+    # the next real change still applies, and the view equals the join
+    r.update_where(dim_spec, "g = 3", {"label": "concat(label, '_d')"})
+    m.refresh(spark)
+    assert calls == [1, 2, 3, 4, 4]
+    assert positions() == {"fact": 4, "dim": 7}
+    check()
+
 
 def test_mv_maintainer_races_disjoint_writer(spark, target_root, monkeypatch):
     """r14 (VERDICT r13 item 6): the disjoint-footprint rebase proven
@@ -918,11 +931,7 @@ def test_mv_maintainer_races_disjoint_writer(spark, target_root, monkeypatch):
         MaterializedViewMaintainer,
         MVAggregate,
     )
-    from mycarely_saas_dbt_spark.sources.pydatasource import (
-        register_manifest_cdf_source,
-    )
 
-    register_manifest_cdf_source(spark)
     runner = IncrementalRunner(spark, target_root)   # the maintainer
     racer = IncrementalRunner(spark, target_root)    # unrelated writer
     runner.RETENTION_SECONDS = 3600.0
