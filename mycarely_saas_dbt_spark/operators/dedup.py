@@ -8,12 +8,17 @@ each operator has a byte-matching DuckDB oracle.
 
 Scale notes (100 TB):
   * exact dedup = one shuffle on the fingerprint key (map-side combinable).
-  * MinHash+LSH is the classic scale path: per-doc signature (narrow),
-    band -> bucket shuffle keyed by (band, band_key) — candidate pairs only
-    within buckets, never the O(n²) cross join; the verify step touches
-    candidates only. Band/row counts (4x3 of 12 hashes) tune the jaccard
-    S-curve; at ~0.5 target similarity the false-candidate rate at corpus
-    scale stays sub-percent (see prototype numbers in the repo history).
+  * MinHash+LSH is the classic scale path. Each doc's features — its
+    distinct shingle array, 12 minhashes and shingle count — come from
+    ONE narrow projection (`doc_signatures`): no shingle-row explode, no
+    shuffle. Bands -> bucket join keyed by (band, band_key): candidate
+    pairs only within buckets, never the O(n²) cross join. The verify
+    step touches candidates only: it re-shingles just the candidate
+    members (broadcast id set) and intersects their arrays in-row, no
+    shingle-equality join. Band/row counts (4x3 of 12 hashes) tune the
+    jaccard S-curve; at ~0.5 target similarity the false-candidate rate
+    at corpus scale stays sub-percent (see prototype numbers in the repo
+    history).
   * SimHash gives a single 16-bit bucket key — one shuffle, near-free;
     widen to 64 bits for real corpora.
   * n-gram Jaccard uses (lang, n_chars) blocking to bound the quadratic
@@ -75,41 +80,128 @@ FROM documents GROUP BY md5(text)
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
-def _shingles(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) — distinct character shingles, k=8 stride 4."""
-    expr = (
-        f"transform(sequence(1, greatest(length(text) - {SHINGLE_LEN - 1}, 1),"
-        f" {SHINGLE_STRIDE}), i -> substring(text, i, {SHINGLE_LEN}))"
+def doc_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, sh, n_sh): each doc's distinct character shingles (k=8,
+    stride 4) as one array, and its size — one narrow projection, no
+    explode, no shuffle. NULL text yields [NULL]: one NULL "shingle", the
+    row the exploded SQL form (and the oracle) gives it."""
+    sh = F.expr(
+        "array_distinct(transform(sequence(1, greatest(length(text) - "
+        f"{SHINGLE_LEN - 1}, 1), {SHINGLE_STRIDE}), "
+        f"i -> substring(text, i, {SHINGLE_LEN})))"
     )
-    return docs.select(
-        "doc_id", F.explode(F.expr(expr)).alias("s")
-    ).distinct()
+    return docs.select("doc_id", sh.alias("sh")).withColumn(
+        "n_sh", F.size("sh").cast("long")
+    )
 
 
-def _hashed_shingles(docs: DataFrame) -> DataFrame:
-    """(doc_id, s, h1, h2): ONE md5 per shingle, split into two independent
-    60-bit halves reduced mod MINHASH_P. The N_HASHES minhash family is then
-    pure bigint arithmetic (h1 + i*h2) mod P — no per-hash string hashing,
-    and signatures shuffle as longs instead of 32-char hex strings."""
-    m = F.md5("s")
-    return _shingles(docs).select(
+def doc_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, sh, mh0..mhN-1, n_sh): per-doc MinHash signature in one
+    narrow pass. ONE md5 per shingle, split into two independent 60-bit
+    halves reduced mod MINHASH_P (h1, h2); the N_HASHES family is then
+    pure bigint arithmetic, mh_i = array_min((h1 + i*h2) mod P) over the
+    doc's shingles — the per-doc min the exploded form took with a
+    groupBy, without the shingle-row shuffle. The hashed array is its own
+    column, so each md5 runs once, not once per hash."""
+    hashed = (
+        "transform(transform(sh, s -> md5(s)), m -> named_struct("
+        f"'h1', CAST(conv(substring(m, 1, 15), 16, 10) AS BIGINT) % {MINHASH_P}, "
+        f"'h2', CAST(conv(substring(m, 17, 15), 16, 10) AS BIGINT) % {MINHASH_P}))"
+    )
+    return doc_shingles(docs).withColumn("__hh", F.expr(hashed)).select(
         "doc_id",
-        "s",
-        (F.conv(F.substring(m, 1, 15), 16, 10).cast("long") % MINHASH_P).alias("h1"),
-        (F.conv(F.substring(m, 17, 15), 16, 10).cast("long") % MINHASH_P).alias("h2"),
+        "sh",
+        *[
+            F.expr(
+                f"array_min(transform(__hh, x -> (x.h1 + {i} * x.h2) % {MINHASH_P}))"
+            ).alias(f"mh{i}")
+            for i in range(N_HASHES)
+        ],
+        "n_sh",
     )
 
 
-def _minhash_aggs():
-    return [
-        F.min((F.col("h1") + F.lit(i) * F.col("h2")) % MINHASH_P).alias(f"mh{i}")
-        for i in range(N_HASHES)
-    ]
+def _sig_with_nsh(docs: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mhN-1, n_sh) — the committed signature-index row:
+    minhashes for banding plus the distinct-shingle count."""
+    return doc_signatures(docs).drop("sh")
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """One row per doc with N_HASHES bigint minhash columns mh0..mhN-1."""
-    return _hashed_shingles(docs).groupBy("doc_id").agg(*_minhash_aggs())
+def _bands_of(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, band_key): the signature stacked into N_BANDS bucket
+    keys of ROWS_PER_BAND minhashes each. A signature with no hash (NULL
+    text) gets NULL keys, which no equi-join matches — md5('') would
+    otherwise bucket every such doc together as false candidates. (The
+    guard sits inside the key, not in a filter on mh0: Catalyst would
+    push such a filter below the signature projection and evaluate the
+    whole signature twice.)"""
+    band_exprs = ", ".join(
+        "{b}, md5(nullif(concat_ws('_', {cols}), ''))".format(
+            b=b,
+            cols=", ".join(
+                f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
+            ),
+        )
+        for b in range(N_BANDS)
+    )
+    return sig.selectExpr(
+        "doc_id", f"stack({N_BANDS}, {band_exprs}) AS (band, band_key)"
+    )
+
+
+def _banded_candidates(
+    sig: DataFrame, batch: DataFrame | None = None
+) -> DataFrame:
+    """Distinct candidate pairs (doc_a, doc_b) sharing a (band, band_key)
+    bucket — an equi-join, NEVER an all-pairs comparison. Without
+    ``batch``: the self-pairs doc_a < doc_b of ``sig``. With it: every
+    (sig doc, batch doc) pair, the batch-sized bands broadcast so the
+    ``sig`` side never shuffles."""
+    a = _bands_of(sig).alias("a")
+    on = (F.col("a.band") == F.col("b.band")) & (
+        F.col("a.band_key") == F.col("b.band_key")
+    )
+    if batch is None:
+        b = _bands_of(sig).alias("b")
+        on = on & (F.col("a.doc_id") < F.col("b.doc_id"))
+    else:
+        b = F.broadcast(_bands_of(batch).alias("b"))
+    return (
+        a.join(b, on)
+        .select(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .distinct()
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame | None = None
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the candidate pairs whose exact shingle
+    Jaccard reaches the threshold: |A ∩ B| = size(array_intersect) of the
+    members' distinct shingle arrays, |A ∪ B| = n_a + n_b - |A ∩ B|.
+    ``sh_a`` / ``sh_b`` are doc_shingles relations (doc_a's side and
+    doc_b's side; one relation serves both when omitted), expected
+    restricted to candidate members — verify touches candidates only."""
+    # sides keep their column names, so when both are one relation a
+    # shuffled join reuses one exchange for them
+    x = sh_a.alias("x")
+    y = (sh_a if sh_b is None else sh_b).alias("y")
+    n_inter = F.size(F.array_intersect("x.sh", "y.sh"))
+    jac = n_inter.cast("double") / (F.col("x.n_sh") + F.col("y.n_sh") - n_inter)
+    return (
+        cand.join(x, F.col("doc_a") == F.col("x.doc_id"))
+        .join(y, F.col("doc_b") == F.col("y.doc_id"))
+        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= MINHASH_JACCARD_THRESHOLD)
+    )
+
+
+def _candidate_shingles(docs: DataFrame, ids: DataFrame) -> DataFrame:
+    """doc_shingles of the docs whose id is in ``ids`` (doc_id), the id
+    set broadcast: the rest of the corpus is never re-shingled."""
+    return doc_shingles(docs.join(F.broadcast(ids), "doc_id", "left_semi"))
 
 
 def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,72 +211,29 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     This relation is INDEX-shaped: derived from the full corpus but tiny
     (only near-dup members appear), and consumed by four registered
     queries (`dedup_minhash_lsh`, `dedup_cc_clusters`,
-    `dedup_canonical_keep`, `training_mix_pipeline`). r6's shape rebuilt
-    signatures → bands → candidates → verify eagerly on EVERY invocation
-    — the named floor of the two heaviest bench entries (VERDICT r6 #1).
-    The production boundary is build-once/consume-many (on a lake: a
-    manifest-committed target, like the ANN index); in-session the
-    equivalent is one eager localCheckpoint memoized per (session,
-    sf_dir, input-file stat) — `session_memo` in util.py. Cold-path
-    semantics are identical (MYCARELY_SESSION_MEMO=0 rebuilds every
-    call; scripts/ab_minhash.py is the paired A/B)."""
+    `dedup_canonical_keep`, `training_mix_pipeline`). The production
+    boundary is build-once/consume-many (on a lake: a manifest-committed
+    target, like the ANN index); in-session the equivalent is one eager
+    localCheckpoint memoized per (session, sf_dir, input-file stat) —
+    `session_memo` in util.py — and it is the build's only persist.
+    Cold-path semantics are identical (MYCARELY_SESSION_MEMO=0 rebuilds
+    every call; scripts/ab_minhash.py is the paired A/B)."""
     register_sources(spark, sf_dir)
-    pairs = session_memo(
+    return session_memo(
         "minhash:pairs",
         sf_dir,
         ("documents.parquet",),
         lambda: _build_minhash_pairs(spark),
     )
-    # the builder's scaffolding persists (shingles/sig/candidates) have
-    # served their purpose once the pair relation is checkpointed
-    release_persists("minhash:shingles")
-    release_persists("minhash:sig")
-    release_persists("minhash:candidates")
-    release_persists("minhash:cand_shingles")
-    return pairs
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs, verified by true shingle Jaccard.
 
-    shingle -> 12 minhashes -> 4 bands of 3 -> bucket join on
+    per-doc shingles -> 12 minhashes -> 4 bands of 3 -> bucket join on
     (band, band_key) -> candidate pairs -> exact Jaccard >= 0.5.
     """
     return minhash_pairs(spark, sf_dir)
-
-
-def _banded_candidates(sig: DataFrame) -> DataFrame:
-    """Banded LSH candidate pairs from a signature relation: stack the
-    signature into (band, band_key) rows and equi-self-join — NEVER an
-    all-pairs comparison. Shared by the dedup operator and the scale
-    suite's candidate counter."""
-    band_exprs = ", ".join(
-        "{b}, md5(concat_ws('_', {cols}))".format(
-            b=b,
-            cols=", ".join(
-                f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-            ),
-        )
-        for b in range(N_BANDS)
-    )
-    # bands is a cheap stack-explode over the (caller-cached) sig — no
-    # separate persist needed; each join side re-reads the sig cache.
-    bands = sig.selectExpr(
-        "doc_id", f"stack({N_BANDS}, {band_exprs}) AS (band, band_key)"
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
 
 
 def minhash_candidate_count(spark: SparkSession, sf_dir: str) -> int:
@@ -193,76 +242,29 @@ def minhash_candidate_count(spark: SparkSession, sf_dir: str) -> int:
     LSH banding claim is pinned in PAIRS at the size where a quadratic
     tail would first show — at a fixed planted near-dup rate the count
     must grow ~linearly in N, far below the N^2/2 all-pairs bound."""
-    from mycarely_saas_dbt_spark.sources.registry import register_sources
-
     register_sources(spark, sf_dir)
-    docs = spark.table("documents")
-    sig = _hashed_shingles(docs).groupBy("doc_id").agg(*_minhash_aggs())
-    return _banded_candidates(sig).count()
+    return _banded_candidates(_sig_with_nsh(spark.table("documents"))).count()
 
 
-def _build_minhash_pairs(spark: SparkSession) -> DataFrame:
-    docs = spark.table("documents")
+def _build_minhash_pairs(
+    spark: SparkSession, docs: DataFrame | None = None
+) -> DataFrame:
+    """Signatures -> banded candidates -> exact-Jaccard verify.
 
-    # The shingle set feeds signatures AND the Jaccard verify, and the band
-    # relation is self-joined — persist both so the text scan + explode and
-    # the min-agg run once, not 20x (on a production lake these
-    # intermediates would be checkpointed to the object store instead).
-    sh = bounded_persist(_hashed_shingles(docs), "minhash:shingles")
-    # n_sh rides along in the SAME groupBy shuffle as the minhash mins —
-    # the Jaccard union sizes come for free instead of a second aggregate
-    # over the shingle relation.
-    sig = bounded_persist(
-        sh.groupBy("doc_id").agg(
-            *_minhash_aggs(), F.count(F.lit(1)).alias("n_sh")
-        ),
-        "minhash:sig",
-    )
-    candidates = _banded_candidates(sig)
-    # reused by the doc-set, intersection, and final joins
-    candidates = bounded_persist(candidates, "minhash:candidates")
-
-    # Verify only the docs that appear in some candidate pair: broadcast
-    # the (tiny) candidate doc set and semi-restrict the shingle relation
-    # before the shingle-equality join — at 100 TB the full corpus's
-    # shingles never enter the verify stage. One explode pass over the
-    # cached candidates (not a union of two scans), and the restricted
-    # shingle relation is ITSELF persisted: it has three consumers (sizes,
-    # both sides of the intersection join), and without the persist each
-    # one re-ran the broadcast hash join over the full shingle cache —
-    # the BENCH_r04 2.28x local regression.
-    cand_docs = (
-        candidates.select(
-            F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-        ).distinct()
-    )
-    sh_c = bounded_persist(
-        sh.join(F.broadcast(cand_docs), "doc_id"), "minhash:cand_shingles"
-    )
-    sizes = sig.join(F.broadcast(cand_docs), "doc_id").select("doc_id", "n_sh")
-    inter = (
-        candidates.join(sh_c.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            sh_c.alias("sb"),
-            (F.col("doc_b") == F.col("sb.doc_id"))
-            & (F.col("sa.s") == F.col("sb.s")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        candidates.join(inter, ["doc_a", "doc_b"], "left")
-        .withColumn("n_inter", F.coalesce("n_inter", F.lit(0)))
-        .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "nb"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= MINHASH_JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    The signature stage is one narrow projection per doc (no shingle
+    explode, no exchange below the band join); both sides of the band
+    self-join are one plan, so a shuffled join reuses one exchange (a
+    small corpus broadcasts one side instead). Verify touches candidates
+    only: the candidate member set is broadcast against a second
+    documents scan, so only those docs are re-shingled, and their
+    intersection is an in-row array_intersect — no shingle-equality
+    join. ``docs`` overrides the source table (degenerate-doc tests)."""
+    docs = spark.table("documents") if docs is None else docs
+    cand = _banded_candidates(doc_signatures(docs))
+    members = cand.select(
+        F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
+    ).distinct()
+    return _jaccard_verify(cand, _candidate_shingles(docs, members))
 
 
 def _minhash_oracle() -> str:
@@ -669,10 +671,11 @@ def connected_components(edges: DataFrame, max_iter: int = CC_MAX_ITER) -> DataF
     MapReduce and Beyond", SoCC'14) — same join primitives, O(log n)
     rounds. The driver-side loop only checks a changed-row COUNT per round
     (a scalar), it never collects the data.
+
+    ``edges`` should be cheap to re-read (the near-dup pair relation is
+    a checkpoint already): the driver path reads it twice, and only the
+    distributed loop materializes its own symmetric copy.
     """
-    # materialize the edge list once — the iteration re-reads it every
-    # round, and upstream (e.g. an LSH candidate join) must not re-run
-    edges = edges.localCheckpoint()
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     # Driver-side union-find fast path: the near-dup PAIR list after LSH
@@ -710,6 +713,9 @@ def connected_components(edges: DataFrame, max_iter: int = CC_MAX_ITER) -> DataF
         return edges.sparkSession.createDataFrame(
             sorted(labels), "u bigint, label bigint"
         )
+    # the iteration re-reads the edge list every round: materialize it
+    # once, so upstream lineage never re-runs inside the loop
+    edges = edges.localCheckpoint()
     sym = edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint()
@@ -861,75 +867,14 @@ INGEST_SPLIT_FRACTION = 0.7  # batch 1 (bootstrap corpus) = first 70% of ids
 MINHASH_INDEX_NAME = "minhash_sig_index"
 
 
-def _sig_with_nsh(docs: DataFrame) -> DataFrame:
-    """(doc_id, mh0..mhN-1, n_sh) — the signature-index row: minhashes for
-    banding plus the distinct-shingle count so Jaccard union sizes never
-    need the old doc's text again."""
-    return _hashed_shingles(docs).groupBy("doc_id").agg(
-        *_minhash_aggs(), F.count(F.lit(1)).alias("n_sh")
-    )
-
-
-def _bands_of(sig: DataFrame) -> DataFrame:
-    band_exprs = ", ".join(
-        "{b}, md5(concat_ws('_', {cols}))".format(
-            b=b,
-            cols=", ".join(
-                f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-            ),
-        )
-        for b in range(N_BANDS)
-    )
-    return sig.selectExpr(
-        "doc_id", f"stack({N_BANDS}, {band_exprs}) AS (band, band_key)"
-    )
-
-
-def _jaccard_verify(
-    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame,
-    nsh_a: DataFrame, nsh_b: DataFrame,
-) -> DataFrame:
-    """Exact-Jaccard filter of candidate pairs (doc_a, doc_b): intersection
-    via shingle-equality join, union via the two n_sh relations. Shingle
-    inputs are expected pre-restricted to candidate members."""
-    inter = (
-        cand.join(sh_a.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            sh_b.alias("sb"),
-            (F.col("doc_b") == F.col("sb.doc_id"))
-            & (F.col("sa.s") == F.col("sb.s")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        cand.join(inter, ["doc_a", "doc_b"], "left")
-        .withColumn("n_inter", F.coalesce("n_inter", F.lit(0)))
-        .join(
-            nsh_a.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")),
-            "doc_a",
-        )
-        .join(
-            nsh_b.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")),
-            "doc_b",
-        )
-        .filter(
-            F.col("n_inter").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("n_inter"))
-            >= MINHASH_JACCARD_THRESHOLD
-        )
-        .select("doc_a", "doc_b")
-    )
-
-
 def dedup_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase incremental near-dup gate. Phase 1 commits the bootstrap
     corpus's (first 70% of doc_ids) signature index as a manifest target.
     Phase 2 ingests the remaining 30% as an arriving batch: the batch's
     bands probe the COMMITTED index (batch side broadcast — the index
     never shuffles), cross candidates are verified by exact shingle
-    Jaccard (old docs' text fetched from the corpus store for candidates
-    only; old union sizes come from the index's stored n_sh), within-batch
+    Jaccard (old docs' text fetched from the corpus store and re-shingled
+    for candidates only), within-batch
     candidates are verified batch-internally, and each new doc is graded
     `dup_of_index` / `dup_within_batch` (a verified pair with a
     smaller-id batch doc — the greedy non-chained rule) / `kept`. Kept
@@ -962,58 +907,26 @@ def dedup_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = runner.read_target(MINHASH_INDEX_NAME)
 
     new_docs = docs.filter(F.col("doc_id") >= split)
-    new_sh = bounded_persist(_hashed_shingles(new_docs), "ingest:new_shingles")
-    # one groupBy shuffle yields minhashes AND n_sh (same trick as the
-    # batch path)
-    new_sig = bounded_persist(
-        new_sh.groupBy("doc_id").agg(
-            *_minhash_aggs(), F.count(F.lit(1)).alias("n_sh")
-        ),
-        "ingest:new_sig",
-    )
-    new_bands = _bands_of(new_sig)
+    # the batch's signatures (with their shingle arrays) feed both band
+    # joins, both verifies and the append — persist the batch once
+    new_sig = bounded_persist(doc_signatures(new_docs), "ingest:new_sig")
+    new_sh = new_sig.select("doc_id", "sh", "n_sh")
 
     # cross candidates: index bands ⋈ broadcast batch bands
-    idx_bands = _bands_of(idx).alias("ib")
-    cand_x = (
-        idx_bands.join(
-            F.broadcast(new_bands.alias("nb")), ["band", "band_key"]
-        )
-        .select(
-            F.col("ib.doc_id").alias("doc_a"),
-            F.col("nb.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    cand_x = bounded_persist(cand_x, "ingest:cand_x")
+    cand_x = bounded_persist(_banded_candidates(idx, new_sig), "ingest:cand_x")
     # candidate old docs' shingles: fetched from the corpus store, the
     # broadcast-semi restriction keeps the re-shingle candidate-sized
-    old_ids = cand_x.select(F.col("doc_a").alias("doc_id")).distinct()
-    old_sh = _hashed_shingles(docs.join(F.broadcast(old_ids), "doc_id"))
-    dup_of_index = _jaccard_verify(
-        cand_x, old_sh, new_sh, idx.select("doc_id", "n_sh"),
-        new_sig.select("doc_id", "n_sh"),
-    ).select(F.col("doc_b").alias("doc_id")).distinct()
-
-    # within-batch candidates + verify (batch-internal, tiny)
-    a, b = new_bands.alias("a"), new_bands.alias("b")
-    cand_n = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
+    old_sh = _candidate_shingles(
+        docs, cand_x.select(F.col("doc_a").alias("doc_id")).distinct()
+    )
+    dup_of_index = (
+        _jaccard_verify(cand_x, old_sh, new_sh)
+        .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
+    # within-batch candidates + verify (batch-internal, tiny)
     dup_within = (
-        _jaccard_verify(
-            cand_n, new_sh, new_sh, new_sig.select("doc_id", "n_sh"),
-            new_sig.select("doc_id", "n_sh"),
-        )
+        _jaccard_verify(_banded_candidates(new_sig), new_sh)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
@@ -1037,12 +950,12 @@ def dedup_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = status.filter(F.col("status") == "kept").select("doc_id")
 
     def append(sp, sfd, wm):
-        return new_sig.join(kept, "doc_id")
+        return new_sig.drop("sh").join(kept, "doc_id")
 
     runner.run(ModelSpec(MINHASH_INDEX_NAME, "doc_id", "doc_id", append), sf_dir)
 
     out = status.orderBy("doc_id")
-    release_persists("ingest:new_shingles")
+    release_persists("ingest:new_sig")
     release_persists("ingest:cand_x")
     return out
 

@@ -323,39 +323,35 @@ FROM starts
 """
 
 
-def gopher_quality(
-    spark: SparkSession, sf_dir: str, *, docs: DataFrame | None = None
-) -> DataFrame:
-    """Gopher-style repetition/shape filters (Rae et al. 2021, "Scaling
-    Language Models: ... Gopher", §A1.1): top-bigram repetition fraction,
-    symbol-to-char ratio, mean token length, and the combined keep flag.
-    The repetition stat needs each doc's TOP bigram multiplicity — the
-    old plan exploded every bigram of the corpus into a (doc, gram)
-    count shuffle, a second rollup exchange and a join back; a per-doc
-    count is per-row work, so r15 (guide §2.4) computes it with a
-    sort+run-length fold over the bigram array inside the scan — the op
-    is now one narrow pass with ZERO exchanges. max(multiplicity) and
-    the gram total are exact integers whatever order equal elements
-    group in, and the final double division is the same
-    exact-int / exact-int division as before, so the fractions are
-    bit-identical. ``docs`` overrides the source table (degenerate-doc
-    regression tests)."""
-    if docs is None:
-        register_sources(spark, sf_dir)
-        docs = spark.table("documents")
-    d = docs.withColumn("__toks", _toks())
+def _let(value: str, var: str, body: str) -> str:
+    """SQL for ``body`` with ``var`` bound to ONE evaluation of ``value``:
+    a lambda over a one-element array. Catalyst copies a projected
+    expression into every filter or projection that references it, but
+    it never splits a lambda, so whatever ``body`` derives from ``var``
+    shares that one evaluation wherever the whole expression lands."""
+    return f"transform(array({value}), {var} -> {body})[0]"
+
+
+def gopher_features() -> F.Column:
+    """One struct per doc (symbol_ratio, mean_token_len, top_bigram_frac,
+    passes_gopher), every field derived from a SINGLE split(text, ' ').
+
+    The repetition stat needs the doc's TOP bigram multiplicity: a
+    sort+run-length fold over the bigram array, per-row work (r15,
+    guide §2.4). max(multiplicity) and the gram total are exact integers
+    whatever order equal elements group in, and each fraction is the
+    same exact-int / exact-int double division as the oracle's."""
     # size<2 guard: sequence(0, -1) would yield [0, -1] (negative step
     # default), fabricating a NULL bigram and top_bigram_frac=1.0 for a
     # single-token doc, where DuckDB's generate_series(1, 0) is empty —
     # both engines must agree the doc has no bigrams (frac 0.0).
     bigrams = (
-        "CASE WHEN size(__toks) >= 2 THEN "
-        "transform(sequence(0, size(__toks) - 2), i -> "
-        "concat(__toks[i], ' ', __toks[i + 1])) "
-        "ELSE array() END"
+        "CASE WHEN size(toks) >= 2 THEN "
+        "transform(sequence(0, size(toks) - 2), i -> "
+        "concat(toks[i], ' ', toks[i + 1])) ELSE array() END"
     )
     top_run = (
-        "aggregate(array_sort(__grams), "
+        "aggregate(array_sort(grams), "
         "struct(CAST(NULL AS STRING) AS prev, CAST(0 AS BIGINT) AS run, "
         "CAST(0 AS BIGINT) AS top), "
         "(acc, x) -> struct(x AS prev, "
@@ -364,27 +360,52 @@ def gopher_quality(
         "CAST(1 AS BIGINT))) AS top), "
         "acc -> acc.top)"
     )
-    out = d.withColumn("__grams", F.expr(bigrams)).select(
-        "doc_id",
-        (
-            F.length(F.regexp_replace("text", "[a-z0-9 ]", "")).cast("double")
-            / F.length("text")
-        ).alias("symbol_ratio"),
-        (
-            F.expr("aggregate(transform(__toks, t -> length(t)), 0, (a, x) -> a + x)")
-            .cast("double")
-            / F.size("__toks")
-        ).alias("mean_token_len"),
-        F.when(F.size("__grams") == 0, F.lit(0.0))
-        .otherwise(F.expr(top_run).cast("double") / F.size("__grams"))
-        .alias("top_bigram_frac"),
+    stats = (
+        "named_struct('symbol_ratio', CAST(length(regexp_replace(text, "
+        "'[a-z0-9 ]', '')) AS DOUBLE) / length(text), "
+        "'mean_token_len', CAST(aggregate(transform(toks, t -> length(t)), "
+        "0, (a, x) -> a + x) AS DOUBLE) / size(toks), "
+        "'top_bigram_frac', CASE WHEN size(grams) = 0 THEN 0.0D "
+        f"ELSE CAST({top_run} AS DOUBLE) / size(grams) END)"
     )
     keep = (
-        (F.col("top_bigram_frac") <= 0.2)
-        & (F.col("symbol_ratio") <= 0.1)
-        & F.col("mean_token_len").between(2.0, 12.0)
+        "named_struct('symbol_ratio', s.symbol_ratio, "
+        "'mean_token_len', s.mean_token_len, "
+        "'top_bigram_frac', s.top_bigram_frac, "
+        "'passes_gopher', s.top_bigram_frac <= 0.2D AND s.symbol_ratio <= 0.1D "
+        "AND s.mean_token_len BETWEEN 2.0D AND 12.0D)"
     )
-    return out.withColumn("passes_gopher", keep)
+    return F.expr(
+        _let("split(text, ' ')", "toks",
+             _let(bigrams, "grams", _let(stats, "s", keep)))
+    )
+
+
+def gopher_quality(
+    spark: SparkSession, sf_dir: str, *, docs: DataFrame | None = None
+) -> DataFrame:
+    """Gopher-style repetition/shape filters (Rae et al. 2021, "Scaling
+    Language Models: ... Gopher", §A1.1): top-bigram repetition fraction,
+    symbol-to-char ratio, mean token length, and the combined keep flag.
+
+    One narrow pass with ZERO exchanges: every stat comes from the
+    per-doc `gopher_features` struct, which splits each text once. A
+    filter on ``passes_gopher`` (training_mix_pipeline's keep-list) is
+    pushed into the scan as that one struct expression, so it too
+    splits each row once; separately projected stat columns would not
+    hold, as Catalyst copies a projection's expressions into a filter
+    pushed through it, one copy per reference. ``docs`` overrides the
+    source table (degenerate-doc regression tests)."""
+    if docs is None:
+        register_sources(spark, sf_dir)
+        docs = spark.table("documents")
+    return docs.select("doc_id", gopher_features().alias("g")).select(
+        "doc_id",
+        "g.symbol_ratio",
+        "g.mean_token_len",
+        "g.top_bigram_frac",
+        "g.passes_gopher",
+    )
 
 
 O_GOPHER = """

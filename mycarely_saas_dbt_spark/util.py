@@ -26,7 +26,7 @@ _MAT_DIRS: deque[str] = deque()
 # intermediate (exploded shingles/fingerprints, candidate pairs) persist
 # it; without cleanup, every registered-query invocation leaks its cached
 # blocks for the life of the session (160-query driver sweep). Keyed per
-# frame ("minhash:shingles"): the NEXT invocation under the same key
+# frame ("ingest:new_sig"): the NEXT invocation under the same key
 # unpersists the previous frame — bounded at one live generation per
 # frame, while the current invocation's (lazy) plan stays cached until
 # its consumer runs.

@@ -15,6 +15,25 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _nodes(plan: str) -> list[tuple[int, str]]:
+    """(depth, text) per node line of a plan tree string; depth is the
+    column where the node's text starts."""
+    out = []
+    for ln in plan.splitlines():
+        body = ln.lstrip(" :+-")
+        if body:
+            out.append((len(ln) - len(body), body))
+    return out
+
+
+def _subtree(nodes: list[tuple[int, str]], i: int) -> list[tuple[int, str]]:
+    """The node lines below node ``i``."""
+    j = i + 1
+    while j < len(nodes) and nodes[j][0] > nodes[i][0]:
+        j += 1
+    return nodes[i + 1 : j]
+
+
 def test_traffic_daily_small_sides_broadcast(spark):
     """TD joins the (tiny) spend/company dims — they must ride as
     broadcasts, never a shuffled sort-merge join."""
@@ -79,6 +98,70 @@ def test_minhash_lsh_has_no_cross_product(spark):
     register_sources(spark, SF_DIR)
     plan = _plan(_build_minhash_pairs(spark))
     assert "CartesianProduct" not in plan, plan
+
+
+def test_minhash_signature_stage_is_narrow(spark):
+    """The signature stage is one per-document projection: no Generate
+    over shingles anywhere in the pair build (the only generators are
+    the band stack and the candidate-member explode), and no Exchange
+    below the band join's own input exchanges — the signature needs no
+    shuffle."""
+    from mycarely_saas_dbt_spark.operators.dedup import _build_minhash_pairs
+    from mycarely_saas_dbt_spark.sources.registry import register_sources
+
+    register_sources(spark, SF_DIR)
+    plan = _plan(_build_minhash_pairs(spark))
+    nodes = _nodes(plan)
+    gens = [t for _, t in nodes if t.startswith("Generate ")]
+    assert gens, plan
+    assert all(
+        t.startswith(("Generate stack(", "Generate explode(array(doc_a"))
+        for t in gens
+    ), gens
+    joins = [i for i, (_, t) in enumerate(nodes) if "Join [band#" in t]
+    assert joins, plan
+    for i in joins:
+        sub = _subtree(nodes, i)
+        for k, (_, t) in enumerate(sub):
+            if "Exchange" not in t:
+                continue
+            assert t.startswith("BroadcastExchange") or "hashpartitioning(band#" in t, t
+            below = [u for _, u in _subtree(sub, k) if "Exchange" in u]
+            assert not below, below
+
+
+def test_training_mix_splits_each_document_once(spark):
+    """Each scan of `documents.text` in training_mix_pipeline's executed
+    plan evaluates split( at most once per row: the gopher keep-list
+    filter is one struct-valued feature expression, not 16 inlined
+    copies of the tokenization (the scan's own DataFilters listing is
+    metadata, not evaluated, and not counted)."""
+    from mycarely_saas_dbt_spark.operators.textops import training_mix_pipeline
+
+    df = training_mix_pipeline(spark, SF_DIR)
+    df.collect()
+    plan = _plan(df).split("== Initial Plan ==")[0]
+    nodes = _nodes(plan)
+    scans = [
+        i for i, (_, t) in enumerate(nodes)
+        if t.startswith("FileScan parquet [") and "text#" in t.split("]")[0]
+    ]
+    assert len(scans) >= 2, plan
+    per_scan = []
+    for i in scans:
+        # walk up the scan's pipeline to its stage boundary
+        n, depth, j = 0, nodes[i][0], i - 1
+        while j >= 0:
+            d, t = nodes[j]
+            if d < depth:
+                if "Exchange" in t or "QueryStage" in t:
+                    break
+                n += t.count("split(")
+                depth = d
+            j -= 1
+        per_scan.append(n)
+    assert max(per_scan) <= 1, (per_scan, plan)
+    assert sum(per_scan) >= 2, (per_scan, plan)  # gopher filter + token sum
 
 
 def test_partitioned_incremental_target_prunes_on_date(spark, tmp_path):
