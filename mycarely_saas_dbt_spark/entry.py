@@ -219,8 +219,9 @@ def register(name: str, fn: QueryFn, oracle: str | None = None) -> None:
 # `bloom_point_lookup` (2 artifacts; the file-skipping family stays via
 # in-window gen_prune_read and pyds_pushdown_slice; the bloom sidecars
 # keep their pytest plan gates). An eighth first-timer joins for the
-# r10 positional-DV build: `dv_pos_reinsert_read` (the writer-matrix
-# flips proven in a driver artifact) in the slot of `cdc_apply_changes`
+# r10 deletion-vector build: `dv_pos_reinsert_read` (writers that
+# see through a pending vector, proven end to end) in the slot of
+# `cdc_apply_changes`
 # (3 artifacts; the tombstone-hard-delete merge path runs in-window
 # inside streaming_cdc_apply's foreachBatch sink and both CDF streaming
 # entries' tombstone-merge hops).
@@ -268,8 +269,8 @@ def register(name: str, fn: QueryFn, oracle: str | None = None) -> None:
 # (timestampAsOf resolution + DESCRIBE HISTORY provenance — a travel
 # path that reads the current snapshot flips the hash) in the slot of
 # `dv_delete_read` (2 artifacts r9+r10; the DV family stays in-window
-# via the strictly harder dv_pos_reinsert_read, and key-mode DV keeps
-# its writer matrix + oracle in pytest/full sweep).
+# via the strictly harder dv_pos_reinsert_read, and the DV writer
+# cells keep their pytest gates + oracle in the full sweep).
 # And a third: `rename_column_lifecycle` (column mapping — metadata-only
 # RENAME, refusal-while-pending, compact absorption, post-absorb DML all
 # hash-gated in one entry) in the slot of `medallion_multihop`
@@ -426,8 +427,8 @@ def register(name: str, fn: QueryFn, oracle: str | None = None) -> None:
 # CDF->index maintenance with strictly harder semantics),
 # `bm25_index_append_search` (4 artifacts; the append path runs as a
 # measured PHASE inside in-window bm25_index_tiered_search's fixture),
-# `dv_pos_reinsert_read` (4 artifacts; the positional-DV writer matrix
-# keeps its pytest gates and the reinsert oracle stays in the sweep),
+# `dv_pos_reinsert_read` (4 artifacts; the DV writer cells keep their
+# pytest gates and the reinsert oracle stays in the sweep),
 # `sessionize_session_window` (3 artifacts; streaming stateful
 # semantics keep five in-window entries incl. the
 # applyInPandasWithState profile and state-store dedup),

@@ -55,6 +55,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mycarely_saas_dbt_spark.util import dv_dead_rows, dv_rels, fs_path
+
 log = logging.getLogger("mycarely.incremental")
 
 EPOCH_FALLBACK = dt.date(1900, 1, 1)
@@ -1064,26 +1066,16 @@ class IncrementalRunner:
                     raise RuntimeError(f"{name}: empty target with no schema")
                 ddl = ", ".join(f"`{n}` {t}" for n, t in dtypes)
                 return self.spark.createDataFrame([], schema=ddl)
-            df = self._read_files(path, manifest, files, dtypes=dtypes)
-            # POSITIONAL deletion vector (mode="dv_pos"): tombstoned
-            # (file, row-ordinal) pairs vanish via a broadcast anti-join
-            # on the scan's metadata columns — applied on the raw scan
-            # frame (``_metadata`` unreachable after the cast-select)
-            if self._dv_is_positional(manifest):
-                df = self._apply_dv_positions(
-                    df, self._dv_positions(name, manifest)
-                )
+            # deletion vector: tombstoned (file, row-ordinal) pairs vanish
+            # via a broadcast anti-join on the scan's metadata columns —
+            # applied on the raw scan frame (``_metadata`` unreachable
+            # after the cast-select); file lists and pruning are untouched
+            df = self._apply_dv(
+                self._read_files(path, manifest, files, dtypes=dtypes),
+                self._dv_frame(name, manifest),
+            )
             if dtypes and {n for n, _ in dtypes} == set(df.columns):
                 df = df.select(*[F.col(n).cast(t).alias(n) for n, t in dtypes])
-            # KEY-based deletion vector (delete_where mode="dv"):
-            # tombstoned keys vanish at read via a broadcast anti-join —
-            # file lists and pruning are untouched
-            if not self._dv_is_positional(manifest):
-                dv = self._dv_keys(name, manifest)
-                if dv is not None:
-                    df = df.join(
-                        F.broadcast(dv), manifest["dv"]["key"], "left_anti"
-                    )
             return df
         if version is not None:
             raise RuntimeError(f"{name}: target has no manifest (legacy layout)")
@@ -1195,16 +1187,6 @@ class IncrementalRunner:
                 *[F.col(colmap.get(n, n)).alias(n) for n, _t in dtypes]
             )
         return out
-
-    @staticmethod
-    def _fs_path(uri: str) -> str:
-        """``_metadata.file_path`` comes back URI-style (file:///...);
-        normalize to a plain filesystem path for manifest-entry lookup."""
-        if "://" in uri or uri.startswith("file:"):
-            from urllib.parse import unquote, urlparse
-
-            return unquote(urlparse(uri).path)
-        return uri
 
     def _watermark_from_stats(self, name: str, col: str) -> dt.date | None:
         """MAX(col) resolved from the manifest's per-file stats alone —
@@ -1550,7 +1532,10 @@ class IncrementalRunner:
         forward verbatim, so the set of partitions whose lists differ
         between the two manifests is exactly the write footprint — only
         those partitions' files are opened on either side, however large
-        the table. Within the footprint, rows are matched on ``key`` and
+        the table. A deletion-vector commit changes no file list: the
+        rels holding files its sidecars name join the footprint, each
+        side read through its own vector. Within the footprint, rows are
+        matched on ``key`` and
         unchanged rows (rewritten byte-identical) are dropped via a
         null-sentineled md5 fingerprint over the non-key columns.
 
@@ -1681,64 +1666,20 @@ class IncrementalRunner:
                     "post-rename version, or enable spec.change_data "
                     "(write-time change files net across renames)"
                 )
+        # a deletion-vector commit changes no file list: rels holding
+        # files named by the sidecars that only one end lists join the
+        # diff, and each end reads through its own vector — a key deleted
+        # and re-inserted inside the range then nets like any other
+        # rewrite (the vector names physical rows, never keys)
         changed = sorted(
             _rels_differing(m_from["partitions"], m_to["partitions"])
+            | self._dv_changed_rels(name, m_from, m_to)
         )
         old = self.read_target(name, version=from_version, rels=changed)
         new = self.read_target(
             name, version=m_to["version"], rels=changed
         )
-        cols = [c for c in new.columns]
-        out = _changes_between(old, new, key, preimages=preimages)
-        # deletion-vector deletes: keys added to the DV between the two
-        # versions never change any file list, so the footprint diff above
-        # can't see them. Emit them from the FROM snapshot's row images
-        # (they were live there) and exclude them from the file-diff leg
-        # so a key that was both DV'd and partition-rewritten isn't
-        # double-reported.
-        dv_files_from = set(((m_from.get("dv") or {}).get("files")) or [])
-        dv_files_to = set(((m_to.get("dv") or {}).get("files")) or [])
-        if (
-            (m_from.get("dv") or {}).get("positional")
-            or (m_to.get("dv") or {}).get("positional")
-        ) and dv_files_to != dv_files_from:
-            # a positional-DV commit inside the range without change
-            # files: writers may have re-inserted deleted keys, which a
-            # key-based snapshot diff cannot represent — refuse rather
-            # than emit a wrong feed (enable spec.change_data: the DV
-            # delete then emits its change rows and the fast path above
-            # serves the feed exactly)
-            raise RuntimeError(
-                f"{name}: change feed across a positional-DV commit "
-                "requires change_data (write-time change files)"
-            )
-        if dv_files_to and dv_files_to != dv_files_from:
-            dv_key = m_to["dv"]["key"]  # the table's unique_key column
-            new_dv = self._dv_keys(name, m_to)
-            dv_from = self._dv_keys(name, m_from)
-            if dv_from is not None:
-                new_dv = new_dv.join(F.broadcast(dv_from), dv_key, "left_anti")
-            # Keep the read metadata-bounded: the new-DV key set is sidecar
-            # scale (KBs), so one tiny agg over it yields min/max bounds
-            # that stats-prune the from-snapshot read — a DV over one day's
-            # keys opens one day's files, not the whole table.
-            lo, hi = new_dv.agg(
-                F.min(dv_key), F.max(dv_key)
-            ).first()
-            if lo is not None:
-                dv_rows = (
-                    self.read_target(
-                        name,
-                        version=m_from["version"],
-                        prune={dv_key: (lo, hi)},
-                    )
-                    .join(F.broadcast(new_dv), dv_key)
-                    .select(*cols, F.lit("delete").alias("_change_type"))
-                )
-                out = out.join(
-                    F.broadcast(new_dv), dv_key, "left_anti"
-                ).unionByName(dv_rows)
-        return out
+        return _changes_between(old, new, key, preimages=preimages)
 
     def txn_last_version(self, name: str, app_id: str) -> int | None:
         """The highest transaction version committed for ``app_id`` —
@@ -2925,12 +2866,10 @@ class IncrementalRunner:
         partition column (same key => same partition), so cross-partition
         key collisions cannot exist.
 
-        Pending deletion vector: allowed iff the batch keys are disjoint
-        from the vector (``_dv_guard_batch`` — checked against the STAGED
-        batch so the build isn't evaluated twice); the commit carries the
-        vector forward and rewritten partitions absorb their share of it
-        (target read is through the vector), which the read-time anti-join
-        then no-ops over."""
+        Pending deletion vector: the target read goes through it, so
+        rewritten partitions absorb their share; the commit carries the
+        vector forward and its entries over the replaced files go stale
+        (new files have new names — a re-inserted key is a new row)."""
         self._require_no_colmap(
             spec.name, self.current_manifest(spec.name),
             "partition-scoped merge",
@@ -2968,15 +2907,6 @@ class IncrementalRunner:
                 staged_all = self.spark.read.parquet(stage).select(*new.columns)
                 staged = staged_all
                 staged_tomb = None
-            # disjoint-from-vector check on the staged (on-disk) batch:
-            # tombstones are exempt (deleting an already-DV'd key is a
-            # no-op, never a resurrection)
-            self._dv_guard_batch(
-                spec,
-                live_pre,
-                staged,
-                "incremental merge",
-            )
             # BLIND-APPEND fast path (r14 opt, guide §1.2: remove a full
             # pass): when every touched partition holds ZERO committed
             # files, the merge is provably the staged batch itself
@@ -3100,9 +3030,9 @@ class IncrementalRunner:
                 if meta is not None:
                     manifest["meta"] = meta
                 if base.get("dv"):
-                    # pending vector rides forward (the batch passed the
-                    # disjoint-keys guard, so re-applying it at read is
-                    # correct — and a no-op on every rewritten partition)
+                    # pending vector rides forward: untouched partitions
+                    # keep their deletes, entries over rewritten files
+                    # no-op
                     manifest["dv"] = base["dv"]
                 if base.get("dropped"):
                     # untouched files still hold bytes under the dropped
@@ -3231,12 +3161,11 @@ class IncrementalRunner:
                 f"{name}: row-level {op} needs a manifest-committed target"
             )
         self._require_no_colmap(name, live, f"row-level {op}")
-        # positional vector: CoW DML proceeds — the candidate scan and
-        # the rewrite read THROUGH the vector, so rewritten files absorb
-        # their share physically; carried entries over the replaced
-        # files go stale and no-op (new files have new names)
-        self._require_no_dv(name, live, f"row-level {op}", allow_positional=True)
-        dv_pos = self._dv_positions(name, live)
+        # pending deletion vector: the candidate scan and the rewrite
+        # read THROUGH it, so rewritten files absorb their share
+        # physically; carried entries over the replaced files go stale
+        # and no-op (new files have new names)
+        dv = self._dv_frame(name, live)
         root = self.target_path(name)
         cand = self.resolved_files(name, prune=prune, manifest=live)
         dtypes = live.get("dtypes")
@@ -3250,40 +3179,16 @@ class IncrementalRunner:
         if not cand:
             return result
         cond = F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
-        # explicit committed schema: files written before a metadata-only
-        # ADD COLUMN lack the new column and must NULL-fill it here just
-        # like the snapshot read — footer inference would leave the
-        # rewrite's declared-schema cast unresolvable
-        raw = self._read_files(root, live, cand, dtypes=dtypes).select(
-            "*",
-            F.col("_metadata.file_path").alias("__fp"),
-            *(
-                [F.col("_metadata.row_index").alias("__dv_p")]
-                if dv_pos is not None
-                else []
-            ),
-        )
-        if dv_pos is not None:
-            raw = raw.join(
-                F.broadcast(
-                    dv_pos.select(F.col("__dv_f").alias("__fp"), "__dv_p")
-                ),
-                ["__fp", "__dv_p"],
-                "left_anti",
-            ).drop("__dv_p")
-        if dtypes and {n for n, _ in dtypes} == set(raw.columns) - {"__fp"}:
-            raw = raw.select(
-                *[F.col(n).cast(t).alias(n) for n, t in dtypes], "__fp"
-            )
+        raw = self._scan_with_path(root, live, cand, dtypes, dv)
         hits = raw.filter(cond).groupBy("__fp").count().collect()
         if not hits:
             return result
-        touched = {self._fs_path(r["__fp"]) for r in hits}
+        touched = {fs_path(r["__fp"]) for r in hits}
         result["rows_matched"] = sum(r["count"] for r in hits)
         emap = self._entry_lookup(name, root, live, touched)
-        tdf = self._apply_dv_positions(
+        tdf = self._apply_dv(
             self._read_files(root, live, sorted(touched), dtypes=dtypes),
-            dv_pos,
+            dv,
         )
         if dtypes and {n for n, _ in dtypes} == set(tdf.columns):
             tdf = tdf.select(*[F.col(n).cast(t).alias(n) for n, t in dtypes])
@@ -3296,15 +3201,48 @@ class IncrementalRunner:
             )
         manifest = self._commit_file_rewrite(
             spec, live, emap, touched, out_df,
-            # positional vector rides forward: entries over the replaced
-            # files are stale no-ops, entries over untouched files keep
-            # their deletes (the rewrite only absorbed its own share)
-            carry_dv=dv_pos is not None,
             cdc_old=tdf if spec.change_data else None,
         )
         result["files_rewritten"] = len(touched)
         result["version"] = manifest["version"]
         return result
+
+    def _scan_with_path(
+        self,
+        root: str,
+        live: dict,
+        files: list[str],
+        dtypes: list | None,
+        dv: DataFrame | None,
+    ) -> DataFrame:
+        """The CoW writers' candidate scan: the files' live rows (read
+        through the pending vector) under the committed dtypes, plus
+        ``__fp`` — the ``_metadata.file_path`` each row came from. The
+        explicit committed schema NULL-fills columns that files written
+        before a metadata-only ADD COLUMN lack, just like the snapshot
+        read."""
+        raw = self._read_files(root, live, files, dtypes=dtypes).select(
+            "*",
+            F.col("_metadata.file_path").alias("__fp"),
+            *(
+                [F.col("_metadata.row_index").alias("__dv_p")]
+                if dv is not None
+                else []
+            ),
+        )
+        if dv is not None:
+            raw = raw.join(
+                F.broadcast(
+                    dv.select(F.col("__dv_f").alias("__fp"), "__dv_p")
+                ),
+                ["__fp", "__dv_p"],
+                "left_anti",
+            ).drop("__dv_p")
+        if dtypes and {n for n, _ in dtypes} == set(raw.columns) - {"__fp"}:
+            raw = raw.select(
+                *[F.col(n).cast(t).alias(n) for n, t in dtypes], "__fp"
+            )
+        return raw
 
     def _entry_lookup(
         self, name: str, root: str, live: dict, touched: set[str]
@@ -3354,7 +3292,7 @@ class IncrementalRunner:
         touched: set[str],
         out_df: DataFrame,
         dtypes_out: list | None = None,
-        carry_dv: bool = False,
+        carry_dv: bool = True,
         cdc_old: DataFrame | None = None,
         cdc_empty: bool = False,
         meta_out: dict | None = None,
@@ -3364,7 +3302,10 @@ class IncrementalRunner:
         brand-new rows), ingest the files, delist exactly the touched
         entries, overlay the manifest O(touched), commit partition-scoped,
         vacuum. Untouched files — even in touched partitions — carry
-        forward BY NAME.
+        forward BY NAME. A pending deletion vector rides forward
+        (``carry_dv``; only its absorb clears it): the writers read
+        through it, so entries over the replaced files go stale and
+        no-op while untouched files keep their deletes.
 
         ``cdc_old`` (change_data tables): the OLD live rows of the touched
         files — the commit's change rows are diff(cdc_old, written files)
@@ -3441,9 +3382,6 @@ class IncrementalRunner:
             if meta_eff is not None:
                 manifest["meta"] = meta_eff
             if carry_dv and live.get("dv"):
-                # opted in only by writers that passed a DV guard
-                # (insert-only merge with disjoint keys); absorb/DML
-                # rely on the default DROPPING the vector
                 manifest["dv"] = live["dv"]
             if live.get("dropped"):
                 # untouched files still hold bytes under the dropped
@@ -3481,10 +3419,9 @@ class IncrementalRunner:
         the rewrite must be CONTENT-PRESERVING modulo layout (same rows,
         possibly different partition values/files) — on change_data
         tables the commit carries an EMPTY change descriptor on that
-        basis. A pending deletion vector of EITHER mode refuses: a
-        positional vector names the replaced files (blind carry would
-        resurrect their dead rows in the new files), and a key vector's
-        writers are frozen anyway — absorb first."""
+        basis. A pending deletion vector refuses: it names the replaced
+        files (blind carry would resurrect their dead rows in the new
+        files) — absorb first."""
         name = spec.name
         live = self.current_manifest(name)
         if live is None:
@@ -3523,36 +3460,22 @@ class IncrementalRunner:
         ``mode="cow"`` (default): Delta's copy-on-write DELETE — files
         containing matches are rewritten without the rows.
 
-        ``mode="dv"``: DELETION-VECTOR delete (Delta DVs' economics with
-        a KEY-based vector instead of row positions): NO data file is
-        rewritten; the matched rows' unique keys land in a tiny parquet
-        sidecar referenced by the new manifest version, and every
-        ``read_target`` anti-joins the broadcast vector — deleting 100
-        rows from a 100 TB table commits one KB-scale sidecar + one JSON.
-        ``absorb_deletion_vectors`` rewrites the affected files and
-        clears the vector (Delta's compaction-absorbs-DVs move). While a
-        KEY vector is pending, ambiguous writers (re-inserting merges,
-        raw-snapshot CoW, shallow clone) REFUSE — a key-based vector
-        would silently erase a re-inserted row with the same key.
-
-        ``mode="dv_pos"`` (r10 — VERDICT r9 item 7): POSITION-based
-        vector, Delta's actual semantics: the sidecar records
-        (file, row-ordinal, key) of each matched PHYSICAL row. Because a
-        position can never name a row written later, re-insertion is
-        unambiguous and EVERY writer proceeds under a pending positional
-        vector (the key mode's refusal cells flip to working): merges
-        read through it and carry it (stale entries over rewritten files
-        no-op — new files have new names), CoW DML reads through it and
-        absorbs its share physically, backfill replaces ranges wholesale.
-        The one composition rule: the CHANGE FEED across a positional-DV
-        commit requires ``spec.change_data`` (the delete emits its change
-        rows at delete time) — a key-based snapshot diff cannot represent
-        delete-then-reinsert, so the feed refuses rather than guesses.
-        Modes cannot mix on one table."""
+        ``mode="dv"``: DELETION-VECTOR delete, Delta's semantics: NO data
+        file is rewritten; the (file, row-ordinal) of each matched
+        PHYSICAL row lands in a tiny parquet sidecar referenced by the
+        new manifest version, and every read anti-joins the broadcast
+        vector on the scan's ``_metadata`` — deleting 100 rows from a
+        100 TB table commits one KB-scale sidecar + one JSON. A position
+        never names a row written later, so re-inserting a deleted key is
+        unambiguous and every writer proceeds under a pending vector:
+        merges and CoW DML read through it and carry it (entries over
+        rewritten files go stale and no-op — new files have new names),
+        backfill replaces ranges wholesale, and the change feed diffs the
+        rels the vector touched, each end through its own vector.
+        ``absorb_deletion_vectors`` rewrites the named files and clears
+        the vector (Delta's compaction-absorbs-DVs move)."""
         if mode == "dv":
             return self._delete_dv(spec, condition, prune=prune)
-        if mode == "dv_pos":
-            return self._delete_dv(spec, condition, prune=prune, positional=True)
         if mode != "cow":
             raise ValueError(f"unknown delete mode: {mode!r}")
         return self._dml_rewrite(
@@ -3565,53 +3488,40 @@ class IncrementalRunner:
 
     _DV_DIR = "_dv"
 
-    def _dv_keys(self, name: str, manifest: dict | None) -> DataFrame | None:
-        """The manifest version's deletion vector as a 1-column DataFrame
-        (named after the table's unique key), or None when the version
-        carries no vector. Sidecars are tiny by design — callers
-        broadcast the result. Positional sidecars also carry the key
-        column, so the key view works for BOTH modes (the delete feeds
-        use it); the read-through path for positional vectors is
-        ``_dv_positions``."""
-        dv = (manifest or {}).get("dv")
-        if not dv or not dv.get("files"):
+    def _dv_frame(self, name: str, manifest: dict | None) -> DataFrame | None:
+        """The manifest version's deletion vector as a broadcastable
+        (file, row-ordinal) frame — columns ``__dv_f`` (the scan's
+        ``_metadata.file_path`` form) and ``__dv_p``
+        (``_metadata.row_index``); None when the version carries no
+        vector. Sidecars are tiny by design — callers broadcast it."""
+        paths = self._dv_sidecars(name, manifest)
+        if not paths:
             return None
-        root = os.path.join(self.target_path(name), self._DV_DIR)
-        paths = [os.path.join(root, f) for f in dv["files"]]
-        return self.spark.read.parquet(*paths).select(dv["key"]).distinct()
-
-    def _dv_positions(self, name: str, manifest: dict | None) -> DataFrame | None:
-        """POSITION-based deletion vector (Delta's actual DV semantics,
-        VERDICT r9 item 7) as a broadcastable (file, row-ordinal) frame —
-        columns ``__dv_f`` (the scan's ``_metadata.file_path`` form) and
-        ``__dv_p`` (``_metadata.row_index``). None when the version's
-        vector is absent or key-based. Because positions name PHYSICAL
-        rows, a later re-insert of a deleted key is unambiguous — the
-        property that lets every writer proceed under a pending
-        positional vector (the key-based mode's refusal cells)."""
-        dv = (manifest or {}).get("dv")
-        if not dv or not dv.get("files") or not dv.get("positional"):
-            return None
-        root = os.path.join(self.target_path(name), self._DV_DIR)
-        paths = [os.path.join(root, f) for f in dv["files"]]
         return (
             self.spark.read.parquet(*paths)
             .select(F.col("file").alias("__dv_f"), F.col("pos").alias("__dv_p"))
             .distinct()
         )
 
-    @staticmethod
-    def _dv_is_positional(manifest: dict | None) -> bool:
-        dv = (manifest or {}).get("dv")
-        return bool(dv and dv.get("files") and dv.get("positional"))
+    def _dv_sidecars(self, name: str, manifest: dict | None) -> list[str]:
+        files = ((manifest or {}).get("dv") or {}).get("files") or []
+        root = os.path.join(self.target_path(name), self._DV_DIR)
+        return [os.path.join(root, f) for f in files]
 
-    def _apply_dv_positions(
-        self, df: DataFrame, pos: DataFrame | None
-    ) -> DataFrame:
+    def _dv_changed_rels(self, name: str, m_a: dict, m_b: dict) -> set[str]:
+        """Rels holding files named by the sidecars that only one of two
+        versions lists — the rows whose liveness a DV commit (or its
+        absorb / restore) changed without touching any file list."""
+        diff = set(self._dv_sidecars(name, m_a)) ^ set(
+            self._dv_sidecars(name, m_b)
+        )
+        return dv_rels(self.target_path(name), sorted(diff)) if diff else set()
+
+    def _apply_dv(self, df: DataFrame, dv: DataFrame | None) -> DataFrame:
         """Anti-join a RAW file-scan frame (``_metadata`` still reachable)
-        against a positional vector; returns the frame with the helper
-        columns dropped. No-op when ``pos`` is None."""
-        if pos is None:
+        against a deletion vector (``_dv_frame``); returns the frame with
+        the helper columns dropped. No-op when ``dv`` is None."""
+        if dv is None:
             return df
         return (
             df.select(
@@ -3619,7 +3529,7 @@ class IncrementalRunner:
                 F.col("_metadata.file_path").alias("__dv_f"),
                 F.col("_metadata.row_index").alias("__dv_p"),
             )
-            .join(F.broadcast(pos), ["__dv_f", "__dv_p"], "left_anti")
+            .join(F.broadcast(dv), ["__dv_f", "__dv_p"], "left_anti")
             .drop("__dv_f", "__dv_p")
         )
 
@@ -3682,99 +3592,31 @@ class IncrementalRunner:
                 "files": [],
             }
 
-    def _require_no_dv(
-        self,
-        name: str,
-        manifest: dict | None,
-        op: str,
-        *,
-        allow_positional: bool = False,
-    ) -> None:
+    def _require_no_dv(self, name: str, manifest: dict | None, op: str) -> None:
+        """Writers that cannot carry a pending vector refuse: shallow
+        clone (the sidecars live under the source table), replace_rels
+        (a layout rewrite of the named files would resurrect their dead
+        rows) and rename column."""
         dv = (manifest or {}).get("dv")
         if dv and dv.get("files"):
-            if allow_positional and dv.get("positional"):
-                # positional vectors name PHYSICAL rows: no writer can be
-                # confused by them, callers that read through + carry may
-                # proceed (the r10 matrix-cell flips)
-                return
             raise RuntimeError(
                 f"{name}: {op} refused — the table has a pending deletion "
                 f"vector ({len(dv['files'])} sidecar(s)); run "
-                "absorb_deletion_vectors() first (key-based vectors cannot "
-                "distinguish a re-inserted key from a deleted one)"
-            )
-
-    def _dv_guard_batch(
-        self, spec: ModelSpec, manifest: dict | None, batch: DataFrame, op: str
-    ) -> None:
-        """Loosened DV writer guard (VERDICT r8 item 6). A pending
-        KEY-based deletion vector only becomes ambiguous when a writer
-        re-introduces a deleted key (is the key deleted, or re-inserted?).
-        Insert/upsert batches whose keys are DISJOINT from the vector are
-        provably safe: the target side is read THROUGH the vector, the
-        commit carries the vector forward, and the read-time anti-join
-        stays a no-op on every rewritten row. So instead of the blanket
-        refusal, anti-check the batch keys against the (broadcast-scale)
-        vector and refuse only on intersection — detectable per-batch,
-        exactly the absorb-first case. Writers whose key column differs
-        from the vector's keep the hard refusal."""
-        dv = (manifest or {}).get("dv")
-        if not dv or not dv.get("files"):
-            return
-        if dv.get("positional"):
-            # positional vector: re-inserting a key is unambiguous (the
-            # dead PHYSICAL rows stay dead by (file, ordinal)); any batch
-            # is safe — the target side reads through the vector and the
-            # commit carries it forward
-            return
-        if not spec.unique_key or dv.get("key") != spec.unique_key:
-            self._require_no_dv(spec.name, manifest, op)
-        hit = (
-            batch.select(spec.unique_key)
-            .join(
-                F.broadcast(self._dv_keys(spec.name, manifest)),
-                spec.unique_key,
-            )
-            .first()
-        )
-        if hit is not None:
-            raise RuntimeError(
-                f"{spec.name}: {op} refused — the batch re-inserts key(s) "
-                "pending in the deletion vector (key-based vectors cannot "
-                "distinguish a re-inserted key from a deleted one); run "
-                "absorb_deletion_vectors() first, then retry the batch"
+                "absorb_deletion_vectors() first"
             )
 
     def _delete_dv(
-        self,
-        spec: ModelSpec,
-        condition: str,
-        *,
-        prune: dict | None = None,
-        positional: bool = False,
+        self, spec: ModelSpec, condition: str, *, prune: dict | None = None
     ) -> dict:
         name = spec.name
         live = self.current_manifest(name)
         if live is None:
             raise RuntimeError(f"{name}: DV delete needs a manifest-committed target")
         self._require_no_colmap(name, live, "deletion-vector DELETE")
-        if not spec.unique_key:
-            raise RuntimeError(f"{name}: DV delete needs a unique_key (row identity)")
-        key = spec.unique_key
-        if live.get("dv") and live["dv"].get("key") != key:
-            raise RuntimeError(f"{name}: existing deletion vector keyed differently")
-        if live.get("dv") and live["dv"].get("files") and (
-            bool(live["dv"].get("positional")) != positional
-        ):
-            raise RuntimeError(
-                f"{name}: existing deletion vector is "
-                f"{'positional' if live['dv'].get('positional') else 'key-based'}"
-                " — modes cannot mix on one table; absorb first"
-            )
         root = self.target_path(name)
         cand = self.resolved_files(name, prune=prune, manifest=live)
         result = {
-            "op": "delete-dv-pos" if positional else "delete-dv",
+            "op": "delete-dv",
             "files_scanned": len(cand),
             "files_rewritten": 0,
             "rows_matched": 0,
@@ -3784,90 +3626,75 @@ class IncrementalRunner:
             return result
         dtypes = live.get("dtypes")
         cond = F.coalesce(F.expr(condition).cast("boolean"), F.lit(False))
-        raw = self._read_files(root, live, cand, dtypes=dtypes)
-        if positional:
-            # capture physical row identity BEFORE any cast-select (the
-            # metadata pseudo-column is only reachable on the scan frame)
+        # capture physical row identity BEFORE any cast-select (the
+        # metadata pseudo-column is only reachable on the scan frame)
+        raw = self._read_files(root, live, cand, dtypes=dtypes).select(
+            "*",
+            F.col("_metadata.file_path").alias("__dv_f"),
+            F.col("_metadata.row_index").alias("__dv_p"),
+        )
+        if dtypes and {n for n, _ in dtypes} == set(raw.columns) - {
+            "__dv_f", "__dv_p"
+        }:
             raw = raw.select(
-                "*",
-                F.col("_metadata.file_path").alias("__dv_f"),
-                F.col("_metadata.row_index").alias("__dv_p"),
+                *[F.col(n).cast(t).alias(n) for n, t in dtypes],
+                "__dv_f",
+                "__dv_p",
             )
-        if dtypes and {n for n, _ in dtypes} == set(raw.columns) - (
-            {"__dv_f", "__dv_p"} if positional else set()
-        ):
-            extra = ["__dv_f", "__dv_p"] if positional else []
-            raw = raw.select(
-                *[F.col(n).cast(t).alias(n) for n, t in dtypes], *extra
-            )
-        if positional:
-            prior_pos = self._dv_positions(name, live)
-            if prior_pos is not None:
-                raw = raw.join(
-                    F.broadcast(prior_pos), ["__dv_f", "__dv_p"], "left_anti"
-                )
-        else:
-            prior = self._dv_keys(name, live)
-            if prior is not None:
-                raw = raw.join(F.broadcast(prior), key, "left_anti")
-        if positional:
-            matched = raw.filter(cond).select(
-                F.col("__dv_f").alias("file"),
-                F.col("__dv_p").alias("pos"),
-                F.col(key),
-            )
-        else:
-            matched = raw.filter(cond).select(key).distinct()
-        dvdir = os.path.join(root, self._DV_DIR)
-        os.makedirs(dvdir, exist_ok=True)
+        prior = self._dv_frame(name, live)
+        if prior is not None:
+            raw = raw.join(F.broadcast(prior), ["__dv_f", "__dv_p"], "left_anti")
+        matched = raw.filter(cond).select(
+            F.col("__dv_f").alias("file"), F.col("__dv_p").alias("pos")
+        )
         # the vector writes at full parallelism — dv["files"] is a LIST,
-        # so a massive delete's keys never funnel through one task; AQE
-        # coalesces the usual tiny case down to one file anyway
+        # so a massive delete's positions never funnel through one task;
+        # AQE coalesces the usual tiny case down to one file anyway. The
+        # staging dir is a sibling of the table, so a delete matching no
+        # row leaves no trace (not even an empty _dv/)
         stem = f"dv-{uuid.uuid4().hex[:12]}"
-        tmp = os.path.join(dvdir, f".{stem}.tmp")
-        matched.write.mode("overwrite").parquet(tmp)
-        n = self.spark.read.parquet(tmp).count()
-        if n == 0:
+        tmp = f"{root}.tmp-{stem}"
+        try:
+            matched.write.mode("overwrite").parquet(tmp)
+            n = self.spark.read.parquet(tmp).count()
+            if n == 0:
+                return result
+            dvdir = os.path.join(root, self._DV_DIR)
+            os.makedirs(dvdir, exist_ok=True)
+            names = []
+            for i, part in enumerate(
+                sorted(
+                    f for f in os.listdir(tmp)
+                    if f.endswith(".parquet") and not f.startswith((".", "_"))
+                )
+            ):
+                fname = f"{stem}-{i:04d}.parquet"
+                os.replace(os.path.join(tmp, part), os.path.join(dvdir, fname))
+                names.append(fname)
+        finally:
             shutil.rmtree(tmp, ignore_errors=True)
-            return result
-        names = []
-        for i, part in enumerate(
-            sorted(
-                f for f in os.listdir(tmp)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
-        ):
-            fname = f"{stem}-{i:04d}.parquet"
-            os.replace(os.path.join(tmp, part), os.path.join(dvdir, fname))
-            names.append(fname)
-        shutil.rmtree(tmp, ignore_errors=True)
         cdc = None
         if spec.change_data:
             # the rows being DV-deleted were already materialized by the
             # match scan above — emit their full images as delete events,
             # so change-feed readers never re-open base files to discover
             # what a metadata-only DV commit deleted
-            images = raw.filter(cond)
-            if positional:
-                images = images.drop("__dv_f", "__dv_p")
             cdc = self._write_change_data(
                 name,
-                images.withColumn("_change_type", F.lit("delete")),
-                key,
+                raw.filter(cond)
+                .drop("__dv_f", "__dv_p")
+                .withColumn("_change_type", F.lit("delete")),
+                spec.unique_key,
                 spec.cdc_buckets,
             )
-        old_dv = live.get("dv") or {"key": key, "files": []}
+        prior_files = (live.get("dv") or {}).get("files") or []
         manifest = {
             "version": live["version"] + 1,
             "partition_by": list(live.get("partition_by") or []),
             "dtypes": dtypes,
             "partitions": live["partitions"],
             "stats": live.get("stats") or {},
-            "dv": {
-                "key": key,
-                "files": [*old_dv["files"], *names],
-                **({"positional": True} if positional else {}),
-            },
+            "dv": {"files": [*prior_files, *names]},
         }
         if cdc is not None:
             manifest["cdc"] = cdc
@@ -3880,16 +3707,16 @@ class IncrementalRunner:
 
     @_records_op("REORG")
     def absorb_deletion_vectors(self, spec: ModelSpec) -> dict:
-        """Rewrite the files that contain DV-deleted keys and commit with
-        the vector CLEARED (Delta's compaction-absorbs-DVs). Same two-job
-        copy-on-write economics as ``delete_where``: only files actually
-        containing vector keys are rewritten; everything else rides
-        forward by name."""
+        """Rewrite exactly the live files the pending vector names (stale
+        entries over already-delisted files are skipped), dropping the
+        tombstoned ordinals, and commit with the vector CLEARED (Delta's
+        compaction-absorbs-DVs). Same two-job copy-on-write economics as
+        ``delete_where``: everything else rides forward by name. No
+        pending vector: nothing is committed."""
         name = spec.name
         live = self.current_manifest(name)
         if live is None:
             raise RuntimeError(f"{name}: absorb needs a manifest-committed target")
-        keys = self._dv_keys(name, live)
         result = {
             "op": "absorb-dv",
             "files_scanned": 0,
@@ -3897,81 +3724,21 @@ class IncrementalRunner:
             "rows_deleted": 0,
             "version": live["version"],
         }
-        if keys is None:
+        dvp = self._dv_frame(name, live)
+        if dvp is None:
             return result
-        if self._dv_is_positional(live):
-            return self._absorb_dv_positional(spec, live, result)
-        key = live["dv"]["key"]
         root = self.target_path(name)
-        cand = self.resolved_files(name, manifest=live)
-        result["files_scanned"] = len(cand)
-        dtypes = live.get("dtypes")
-        raw = self._read_files(root, live, cand, dtypes=dtypes).select(
-            "*", F.col("_metadata.file_path").alias("__fp")
-        )
-        hits = (
-            raw.join(F.broadcast(keys), key)
-            .groupBy("__fp")
-            .count()
-            .collect()
-        )
-        touched = {self._fs_path(r["__fp"]) for r in hits}
-        result["rows_deleted"] = int(sum(r["count"] for r in hits))
-        if not touched:
-            # vector keys no longer exist in any file — commit the clear.
-            # cdc must NOT ride forward from live (it describes live's own
-            # commit); this clear changes nothing, so an empty descriptor
-            manifest = {
-                k: v
-                for k, v in live.items()
-                if k not in ("version", "dv", "cdc")
-            }
-            manifest["version"] = live["version"] + 1
-            manifest["cdc"] = {
-                "key": key, "buckets": int(spec.cdc_buckets), "files": []
-            }
-            manifest = self._commit_manifest(name, manifest)
-            self._vacuum(name, manifest)
-            result["version"] = manifest["version"]
-            return result
-        tdf = self._read_files(root, live, sorted(touched), dtypes=dtypes)
-        if dtypes and {n for n, _ in dtypes} == set(tdf.columns):
-            tdf = tdf.select(*[F.col(n).cast(t).alias(n) for n, t in dtypes])
-        out_df = tdf.join(F.broadcast(keys), key, "left_anti")
-        emap = self._entry_lookup(name, root, live, touched)
-        # _commit_file_rewrite rebuilds the manifest WITHOUT the dv field —
-        # absorption and clearing are one atomic commit. cdc_empty: the
-        # absorbed rows were ALREADY logically deleted (and their delete
-        # events already fed, at DV time), so this commit changes nothing
-        manifest = self._commit_file_rewrite(
-            spec, live, emap, touched, out_df, cdc_empty=True
-        )
-        result.update(
-            files_rewritten=len(touched), version=manifest["version"]
-        )
-        return result
-
-    def _absorb_dv_positional(
-        self, spec: ModelSpec, live: dict, result: dict
-    ) -> dict:
-        """Absorb a POSITIONAL vector: rewrite exactly the live files the
-        sidecar names (stale entries over already-delisted files are
-        skipped), dropping the tombstoned ordinals; commit with the
-        vector cleared. Same two-job CoW economics as the key path."""
-        name = spec.name
-        root = self.target_path(name)
-        dvp = self._dv_positions(name, live)
         live_files = set(self.resolved_files(name, manifest=live))
         result["files_scanned"] = len(live_files)
-        sidecar_files = {
-            self._fs_path(r["__dv_f"])
-            for r in dvp.select("__dv_f").distinct().collect()
-        }
-        touched = sidecar_files & live_files
-        dtypes = live.get("dtypes")
+        # sidecars are KB-scale: which files they name, and how many dead
+        # rows each holds, is a driver-side read — no Spark job
+        dead = dv_dead_rows(self._dv_sidecars(name, live))
+        touched = set(dead) & live_files
         if not touched:
             # every entry stale (all named files already rewritten away):
-            # commit the clear, metadata-only
+            # commit the clear, metadata-only. cdc must NOT ride forward
+            # from live (it describes live's own commit); this clear
+            # changes nothing, so an empty descriptor
             manifest = {
                 k: v
                 for k, v in live.items()
@@ -3987,15 +3754,9 @@ class IncrementalRunner:
             self._vacuum(name, manifest)
             result["version"] = manifest["version"]
             return result
-        scan = self._read_files(root, live, sorted(touched), dtypes=dtypes)
-        meta_scan = scan.select(
-            F.col("_metadata.file_path").alias("__dv_f"),
-            F.col("_metadata.row_index").alias("__dv_p"),
-        )
-        result["rows_deleted"] = int(
-            meta_scan.join(F.broadcast(dvp), ["__dv_f", "__dv_p"]).count()
-        )
-        out_df = self._apply_dv_positions(
+        result["rows_deleted"] = sum(len(dead[f]) for f in touched)
+        dtypes = live.get("dtypes")
+        out_df = self._apply_dv(
             self._read_files(root, live, sorted(touched), dtypes=dtypes), dvp
         )
         if dtypes and {n for n, _ in dtypes} == set(out_df.columns):
@@ -4003,8 +3764,12 @@ class IncrementalRunner:
                 *[F.col(n).cast(t).alias(n) for n, t in dtypes]
             )
         emap = self._entry_lookup(name, root, live, touched)
+        # _commit_file_rewrite rebuilds the manifest WITHOUT the dv field —
+        # absorption and clearing are one atomic commit. cdc_empty: the
+        # absorbed rows were ALREADY logically deleted (and their delete
+        # events already fed, at DV time), so this commit changes nothing
         manifest = self._commit_file_rewrite(
-            spec, live, emap, touched, out_df, cdc_empty=True
+            spec, live, emap, touched, out_df, carry_dv=False, cdc_empty=True
         )
         result.update(
             files_rewritten=len(touched), version=manifest["version"]
@@ -4116,21 +3881,11 @@ class IncrementalRunner:
         if live is None:
             raise RuntimeError(f"{name}: MERGE needs a manifest-committed target")
         self._require_no_colmap(name, live, "MERGE INTO")
-        # Pending deletion vector (VERDICT r8 item 6): INSERT-ONLY merges
-        # compose safely — dead rows are invisible to the match (the
-        # anti-join reads through the vector, Delta's position-DV
-        # semantics) and the appended keys are checked disjoint from the
-        # vector below. KEY-based matched / by-source merges keep the
-        # hard refusal (raw-snapshot CoW); a POSITIONAL vector (r10)
-        # lifts it — every candidate/target read below goes through the
-        # (file, ordinal) anti-join, rewritten files absorb their share,
-        # the vector rides forward, and re-used keys are unambiguous.
-        dv_pos = self._dv_positions(name, live)
-        dv_pending = self._dv_keys(name, live) if dv_pos is None else None
-        if dv_pending is not None and (matched or not_matched_by_source):
-            self._require_no_dv(
-                name, live, "MERGE INTO (matched / by-source clauses)"
-            )
+        # pending deletion vector: every candidate/target read below goes
+        # through the (file, ordinal) anti-join, rewritten files absorb
+        # their share and the vector rides forward; a re-used key is a
+        # new physical row no position can name
+        dv = self._dv_frame(name, live)
         root = self.target_path(name)
         dtypes = live.get("dtypes")
         tcols = [n for n, _ in dtypes] if dtypes else None
@@ -4150,27 +3905,7 @@ class IncrementalRunner:
         insert_only = not matched and not not_matched_by_source
         src_eff = source
         if cand:
-            raw = self._read_files(root, live, cand, dtypes=dtypes).select(
-                "*",
-                F.col("_metadata.file_path").alias("__fp"),
-                *(
-                    [F.col("_metadata.row_index").alias("__dv_p")]
-                    if dv_pos is not None
-                    else []
-                ),
-            )
-            if dv_pos is not None:
-                raw = raw.join(
-                    F.broadcast(
-                        dv_pos.select(F.col("__dv_f").alias("__fp"), "__dv_p")
-                    ),
-                    ["__fp", "__dv_p"],
-                    "left_anti",
-                ).drop("__dv_p")
-            if tcols and set(tcols) == set(raw.columns) - {"__fp"}:
-                raw = raw.select(
-                    *[F.col(n).cast(t).alias(n) for n, t in dtypes], "__fp"
-                )
+            raw = self._scan_with_path(root, live, cand, dtypes, dv)
             if insert_only:
                 # Delta's insert-only fast path: matched target rows are
                 # untouched, so no file is rewritten AT ALL — filter the
@@ -4178,18 +3913,11 @@ class IncrementalRunner:
                 # prunes the target read to the ON columns) and append.
                 # Also the fix for the duplicate-source fan-out: the
                 # full-outer join below never sees matched rows.
+                # The anti-join reads through the vector: a source row
+                # matching only a dead row is genuinely new.
                 touched = set()
-                anti_t = raw
-                if dv_pending is not None:
-                    # read THROUGH the vector: a source row matching only
-                    # a dead row is genuinely new (it will then hit the
-                    # re-inserted-key refusal below if it reuses the key)
-                    dvk = live["dv"]["key"]
-                    if dvk not in raw.columns:
-                        self._require_no_dv(name, live, "MERGE INTO")
-                    anti_t = raw.join(F.broadcast(dv_pending), dvk, "left_anti")
                 src_eff = source.alias("s").join(
-                    anti_t.alias("t"), F.expr(on), "left_anti"
+                    raw.alias("t"), F.expr(on), "left_anti"
                 )
             elif not_matched_by_source:
                 # these clauses must SEE every candidate target row
@@ -4205,14 +3933,14 @@ class IncrementalRunner:
                     .distinct()
                     .collect()
                 )
-                touched = {self._fs_path(r["__fp"]) for r in hit}
+                touched = {fs_path(r["__fp"]) for r in hit}
         else:
             touched = set()
 
         tgt = (
-            self._apply_dv_positions(
+            self._apply_dv(
                 self._read_files(root, live, sorted(touched), dtypes=dtypes),
-                dv_pos,
+                dv,
             )
             if touched
             else None
@@ -4407,24 +4135,6 @@ class IncrementalRunner:
                 return F.lit(False)
             return F.col("__action").isin(*sorted(tags))
 
-        if dv_pending is not None:
-            # insert-only path (the only one that reaches here with a
-            # pending vector): the rows about to be INSERTED must not
-            # re-use a vector key — they'd be killed by the read-time
-            # anti-join the moment they land. Checked on the pre-observe
-            # frame so the metrics Observation below still sees exactly
-            # one (complete) action.
-            dvk = live["dv"]["key"]
-            if dvk not in out_cols:
-                self._require_no_dv(name, live, "MERGE INTO")
-            ins_keys = j.filter(_in(ins_tags)).select(_value(dvk))
-            if ins_keys.join(F.broadcast(dv_pending), dvk).first() is not None:
-                raise RuntimeError(
-                    f"{name}: MERGE INTO refused — insert re-uses key(s) "
-                    "pending in the deletion vector; run "
-                    "absorb_deletion_vectors() first, then retry"
-                )
-
         obs = Observation(f"merge-{uuid.uuid4().hex[:6]}")
         j = j.observe(
             obs,
@@ -4451,7 +4161,6 @@ class IncrementalRunner:
             # evolved commit: manifest dtypes gain the new columns so
             # readers schema-merge (untouched files NULL-fill them)
             dtypes_out=[list(p) for p in out_df.dtypes] if new_cols else None,
-            carry_dv=dv_pending is not None or dv_pos is not None,
             # change feed: old side = the touched files' rows (None on the
             # insert-only fast path — every written row is then an insert,
             # which is exactly right: matched target rows were untouched)
@@ -4660,12 +4369,6 @@ class IncrementalRunner:
             raise RuntimeError(
                 f"{name}: cannot drop partition column {col!r} — the hive "
                 "dir names are the physical layout"
-            )
-        dv = live.get("dv") or {}
-        if dv.get("files") and dv.get("key") == col:
-            raise RuntimeError(
-                f"{name}: column {col!r} keys the pending deletion vector "
-                "— absorb_deletion_vectors() first"
             )
         gen = (live.get("meta") or {}).get("generated_columns") or {}
         touched_gen = [g for g, d in gen.items() if col == g or col in str(d)]
@@ -4901,12 +4604,6 @@ class IncrementalRunner:
         )
         final = self.target_path(spec.name)
         live = self.current_manifest(spec.name)
-        # positional vector: safe — the rebuilt range's files are NEW
-        # (their entries can't exist in the vector), replaced files'
-        # entries go stale, out-of-range files keep their deletes via
-        # the carried vector below. Key-based vectors still refuse (a
-        # range rebuild re-emitting a deleted key would resurrect it).
-        self._require_no_dv(spec.name, live, "backfill", allow_positional=True)
         base = live or self._manifest_from_layout(
             spec.name, spec.partition_by
         )
@@ -4949,9 +4646,10 @@ class IncrementalRunner:
             )
             if meta is not None:
                 manifest["meta"] = meta
-            if self._dv_is_positional(base):
-                # carried positional vector: out-of-range files keep
-                # their deletes; entries over replaced files stale-no-op
+            if base.get("dv"):
+                # carried vector: the rebuilt range's files are NEW (no
+                # entry can name them), out-of-range files keep their
+                # deletes, entries over replaced files stale-no-op
                 manifest["dv"] = base["dv"]
             manifest = self._commit_manifest(
                 spec.name,
@@ -5158,7 +4856,7 @@ class IncrementalRunner:
         # cdc_empty: compaction is a pure layout rewrite — change-feed
         # readers skip this version without diffing anything
         manifest = self._commit_file_rewrite(
-            spec, live, emap, touched, out_df, carry_dv=True, cdc_empty=True
+            spec, live, emap, touched, out_df, cdc_empty=True
         )
         return {
             "op": "optimize-incremental",

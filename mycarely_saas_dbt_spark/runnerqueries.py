@@ -1238,10 +1238,11 @@ ORDER BY o_orderkey
 def dv_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deletion-vector DELETE (r8 — Delta DV economics): bootstrap a
     status-partitioned orders target, DV-delete one key slice (ZERO data
-    files rewritten — the matched keys land in a KB-scale parquet sidecar
-    and a metadata-only manifest commit), read back through the
-    DV-applying reader, then ABSORB the vector (copy-on-write rewrite of
-    only the affected files, vector cleared in the same commit) and prove
+    files rewritten — the matched rows' (file, row-ordinal) positions land
+    in a KB-scale parquet sidecar and a metadata-only manifest commit),
+    read back through the DV-applying reader, then ABSORB the vector
+    (copy-on-write rewrite of only the affected files, vector cleared in
+    the same commit) and prove
     the absorbed state reads identically. The oracle is the plain
     relational DELETE semantics — one result for both phases, so a reader
     that misses the vector OR an absorb that loses rows hash-mismatches."""
@@ -1278,11 +1279,11 @@ ORDER BY o_orderkey
 
 
 def dv_pos_reinsert_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """POSITION-based deletion vectors end-to-end (r10 — Delta's actual
-    DV semantics, VERDICT r9 item 7): DV-delete a key slice with
-    ``mode="dv_pos"`` (zero files rewritten; the sidecar records
-    (file, row-ordinal, key)), then exercise the three writer cells the
-    KEY-based mode REFUSES — all under the still-pending vector:
+    """Deletion vectors under later writers (r10 — Delta's DV
+    semantics, VERDICT r9 item 7): DV-delete a key slice with
+    ``mode="dv"`` (zero files rewritten; the sidecar records each dead
+    row's (file, row-ordinal)), then exercise three writer cells that
+    must see through the vector — all while it is still pending:
 
     1. an incremental merge that RE-INSERTS a subset of the deleted keys
        (unambiguous: positions name physical rows, the new rows live),
@@ -1303,7 +1304,7 @@ def dv_pos_reinsert_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         runner = IncrementalRunner(spark, root)
         spec = _dml_boot_spec("dvp_orders")
         runner.run(spec, sf_dir)
-        res = runner.delete_where(spec, "o_orderkey % 10 = 7", mode="dv_pos")
+        res = runner.delete_where(spec, "o_orderkey % 10 = 7", mode="dv")
         assert res["files_rewritten"] == 0 and res["rows_matched"] > 0
         # re-insert the % 100 = 7 subset of the DELETED keys (new values)
         batch = (
@@ -1318,8 +1319,8 @@ def dv_pos_reinsert_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         runner.merge_txn(spec, batch, app_id="dvp", txn_version=1)
-        assert runner.current_manifest("dvp_orders")["dv"]["positional"]
-        # cow UPDATE while the vector still pends (key mode refuses this)
+        assert runner.current_manifest("dvp_orders")["dv"]["files"]
+        # cow UPDATE while the vector still pends
         runner.update_where(
             spec, "o_orderkey % 10 = 1", {"o_custkey": "o_custkey + 1000000"}
         )

@@ -274,3 +274,45 @@ def await_or_raise(q, timeout: float) -> None:
         f"streaming query {q.id} did not terminate within {timeout}s; "
         f"exception={exc!r}; lastProgress={prog!r}"
     )
+
+
+def fs_path(uri: str) -> str:
+    """Spark's ``_metadata.file_path`` comes back URI-style (``file:/x``,
+    ``file:///x``, percent-encoded); normalize it to the plain filesystem
+    path that manifest entries and pyarrow readers use. The one rule for
+    both the batch reader and the stream source: a second spelling would
+    silently stop deletion-vector positions from matching their files."""
+    if "://" in uri or uri.startswith("file:"):
+        from urllib.parse import unquote, urlparse
+
+        return unquote(urlparse(uri).path)
+    return uri
+
+
+def dv_dead_rows(sidecars) -> dict[str, set[int]]:
+    """Deletion-vector sidecars -> {data file path: {dead row ordinals}}.
+    Sidecars are KB-scale ``(file, pos)`` parquet files, read with pyarrow
+    on the driver (feed planning, absorb) or inside a stream task."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, set[int]] = {}
+    for p in sidecars:
+        t = pq.read_table(p, columns=["file", "pos"])
+        for f, pos in zip(
+            t.column("file").to_pylist(), t.column("pos").to_pylist()
+        ):
+            out.setdefault(fs_path(f), set()).add(pos)
+    return out
+
+
+def dv_rels(root: str, sidecars) -> set[str]:
+    """Partition rels (dirs relative to the table ``root``; ``""`` for an
+    unpartitioned table) of the data files the sidecars name."""
+    import os
+
+    root = os.path.abspath(root)
+    rels = set()
+    for f in dv_dead_rows(sidecars):
+        rel = os.path.relpath(os.path.dirname(f), root)
+        rels.add("" if rel == "." else rel)
+    return rels

@@ -84,8 +84,8 @@ AUDIT = [
     # slice across seg= levels post-forceMerge), the retrained ANN read,
     # the binned interval join (hash-not-nested-loop), the stdlib PNG
     # decode pipeline (two Arrow-batched narrow passes), and the
-    # positional-DV read (broadcast (file, ordinal) anti-join composed on
-    # the partitioned scan). The CDF change-file paths materialize
+    # deletion-vector read (broadcast (file, ordinal) anti-join composed
+    # on the partitioned scan). The CDF change-file paths materialize
     # through stream checkpoints/commits — their no-base-file plan shape
     # is pinned in tests/test_pydatasource.py.
     "bm25_index_optimize_search",

@@ -1,12 +1,34 @@
-"""POSITION-based deletion vectors (r10 — VERDICT r9 item 7): the
-sidecar records (file, row-ordinal, key) of each deleted PHYSICAL row,
-so re-inserting a deleted key is unambiguous and every writer in the
-r8 matrix's REFUSAL cells proceeds — with the same read-through
-guarantees the key mode gives. The change feed across a positional-DV
-commit requires change_data (a key-based snapshot diff cannot represent
-delete-then-reinsert) and refuses otherwise."""
+"""Deletion vectors: ``delete_where(mode="dv")`` records the
+(file, row-ordinal) of each deleted PHYSICAL row in a sidecar, Delta's
+semantics. A position never names a row written later, so re-inserting a
+deleted key is unambiguous and every writer below proceeds under a
+pending vector with read-through guarantees:
+
+| writer                                   | pending DV behavior           |
+|------------------------------------------|-------------------------------|
+| incremental merge / merge_txn            | works (re-inserted keys live);|
+|                                          | vector rides forward          |
+| MERGE INTO insert-only                   | works; 0 files rewritten      |
+| MERGE INTO matched / by-source clauses   | works; reads live rows only   |
+| row-level DELETE/UPDATE (cow)            | works; absorbs its share      |
+| backfill                                 | works; out-of-range deletes   |
+|                                          | survive                       |
+| full refresh (CTAS)                      | absorbs: authoritative        |
+|                                          | rebuild drops the vector      |
+| incremental full-rewrite (unpartitioned) | absorbs: rewrite reads        |
+|                                          | through the vector            |
+| compact / optimize_incremental           | absorb / carry (test_dml.py,  |
+|                                          | test_optimize_incremental.py) |
+| shallow clone, replace_rels, rename      | refuse until absorbed         |
+|                                          | (test_dml.py)                 |
+
+The change feed across a DV commit works with or without change_data:
+without it, rels holding files named by sidecars added in the range join
+the snapshot diff, each end read through its own vector."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,7 +40,7 @@ def _mk(spark, rows):
     return spark.createDataFrame(rows, "k long, day string, v long")
 
 
-def _boot(spark, root, name, **spec_kw):
+def _boot(spark, root, name, partitioned=True, **spec_kw):
     from mycarely_saas_dbt_spark.incremental import IncrementalRunner, ModelSpec
 
     def build(sp, sfd, wm):
@@ -26,19 +48,28 @@ def _boot(spark, root, name, **spec_kw):
             sp, [(i, "d1" if i % 2 == 0 else "d2", i * 10) for i in range(40)]
         )
 
-    spec = ModelSpec(name, "k", "k", build, partition_by=["day"], **spec_kw)
+    spec = ModelSpec(
+        name, "k", "k", build,
+        partition_by=["day"] if partitioned else [], **spec_kw,
+    )
     runner = IncrementalRunner(spark, root)
     runner.run(spec, SF_DIR)
-    res = runner.delete_where(spec, "k % 10 = 3", mode="dv_pos")
+    res = runner.delete_where(spec, "k % 10 = 3", mode="dv")
     assert res["files_rewritten"] == 0 and res["rows_matched"] == 4
-    assert runner.current_manifest(name)["dv"]["positional"] is True
+    # the vector is its sidecar list; sidecars hold (file, pos) only
+    dv = runner.current_manifest(name)["dv"]
+    assert set(dv) == {"files"} and dv["files"]
+    side = spark.read.parquet(
+        *[os.path.join(root, name, "_dv", f) for f in dv["files"]]
+    )
+    assert side.columns == ["file", "pos"]
     return runner, spec
 
 
 def test_reinserted_key_works_and_other_deletes_survive(spark, tmp_path):
-    """The r8 matrix's 'incremental merge re-inserts DV key' refusal
-    cell flips to WORKING: the new row lives (new file — no position can
-    name it), the other deleted rows stay dead by (file, ordinal)."""
+    """An incremental merge re-inserting a deleted key: the new row
+    lives (new file — no position can name it), the other deleted rows
+    stay dead by (file, ordinal), and the vector rides forward."""
     runner, spec = _boot(spark, str(tmp_path / "t"), "p1")
     r = runner.merge_txn(
         spec, _mk(spark, [(3, "d2", 999), (100, "d1", 1)]),
@@ -49,13 +80,27 @@ def test_reinserted_key_works_and_other_deletes_survive(spark, tmp_path):
     assert [tuple(x) for x in out.filter("k = 3").collect()] == [(3, "d2", 999)]
     assert out.filter("k IN (13, 23, 33)").count() == 0
     assert out.count() == 36 + 2
-    assert runner.current_manifest("p1")["dv"]["positional"]
+    assert runner.current_manifest("p1")["dv"]["files"]
+
+
+def test_incremental_merge_disjoint_keys_allowed_vector_survives(
+    spark, tmp_path
+):
+    runner, spec = _boot(spark, str(tmp_path / "t"), "m1")
+    batch = _mk(spark, [(100, "d1", 1), (101, "d2", 2)])
+    r = runner.merge_txn(spec, batch, app_id="a", txn_version=1)
+    assert not r.get("skipped")
+    m = runner.current_manifest("m1")
+    assert (m.get("dv") or {}).get("files"), "vector must ride forward"
+    out = runner.read_target("m1")
+    assert out.filter("k % 10 = 3").count() == 0, "deleted keys stay dead"
+    assert out.filter("k >= 100").count() == 2
+    assert out.count() == 40 - 4 + 2
 
 
 def test_merge_into_matched_by_source_and_reused_insert_work(spark, tmp_path):
-    """Three more refusal cells flip: matched UPDATE, by-source DELETE,
-    and insert-only re-using a deleted key all proceed reading through
-    the positional vector."""
+    """Matched UPDATE, by-source DELETE, and an insert-only merge
+    re-using a deleted key all proceed reading through the vector."""
     runner, spec = _boot(spark, str(tmp_path / "t"), "p2")
     runner.merge_into(
         spec, _mk(spark, [(0, "d1", 555)]),
@@ -81,6 +126,23 @@ def test_merge_into_matched_by_source_and_reused_insert_work(spark, tmp_path):
     )
     out = runner.read_target("p2")
     assert out.filter("k = 2").count() == 0 and out.count() == 36
+
+
+def test_merge_into_insert_only_disjoint_allowed_zero_rewrites(
+    spark, tmp_path
+):
+    runner, spec = _boot(spark, str(tmp_path / "t"), "m3")
+    src = _mk(spark, [(200, "d1", 5), (201, "d2", 6)])
+    res = runner.merge_into(
+        spec, src, on="t.k = s.k", not_matched=[("insert", None, None)]
+    )
+    assert res["files_rewritten"] == 0
+    assert res["rows_inserted"] == 2
+    m = runner.current_manifest("m3")
+    assert (m.get("dv") or {}).get("files"), "vector must ride forward"
+    out = runner.read_target("m3")
+    assert out.filter("k % 10 = 3").count() == 0
+    assert out.count() == 36 + 2
 
 
 def test_row_level_dml_works_and_absorbs_its_share(spark, tmp_path):
@@ -114,7 +176,7 @@ def test_backfill_in_range_rebuild_keeps_out_of_range_deletes(
     spec = ModelSpec("p4", "k", "k", build, partition_by=["day"])
     runner = IncrementalRunner(spark, str(tmp_path / "t"))
     runner.run(spec, SF_DIR)
-    runner.delete_where(spec, "k % 10 = 3", mode="dv_pos")
+    runner.delete_where(spec, "k % 10 = 3", mode="dv")
     runner.backfill(spec, SF_DIR, d1, d1)  # rebuild ONLY the d1 partition
     out = runner.read_target("p4")
     # d1 rebuilt authoritative (k=...even... no even k ends in 3, so d1
@@ -135,68 +197,61 @@ def test_absorb_positional_rewrites_named_files_then_clears(spark, tmp_path):
     assert runner.absorb_deletion_vectors(spec)["rows_deleted"] == 0
 
 
-def test_feed_refuses_without_change_data_and_works_with_it(
+def _stream_rows(reader, s, e):
+    return sorted(
+        tuple(b.to_pylist()[i].values())
+        for p in reader.partitions({"version": s}, {"version": e})
+        for b in reader.read(p)
+        for i in range(b.num_rows)
+    )
+
+
+def test_feed_works_without_change_data_and_with_it(
     spark, tmp_path, monkeypatch
 ):
-    """Composition rule: positional DV + change feed requires
-    change_data. Without it both the batch and streaming feeds refuse;
-    with it the delete's change rows serve the feed exactly — including
-    the delete-then-reinsert net (an update, which no key-based DV leg
-    could represent)."""
-    import dataclasses
-
+    """The change feed across a DV commit, with and without
+    change_data: batch table_changes and the streaming reader agree on
+    every range, and a key deleted then re-inserted inside the range
+    nets to an UPDATE. Without change files the snapshot diff serves it
+    — the rel the new sidecar names joins the diff, each end read
+    through its own vector."""
     from mycarely_saas_dbt_spark.incremental import IncrementalRunner
     from mycarely_saas_dbt_spark.sources.pydatasource import (
         ManifestCDFStreamReader,
     )
 
     monkeypatch.setattr(IncrementalRunner, "RETAIN_VERSIONS", 10)
-    # ---- without change_data: refuse
-    runner, spec = _boot(spark, str(tmp_path / "a"), "p6")
-    with pytest.raises(RuntimeError, match="requires change_data"):
-        runner.table_changes("p6", "k", 1, 2).collect()
-    r = ManifestCDFStreamReader(
-        {"root": str(tmp_path / "a"), "model": "p6", "key": "k"}
-    )
-    with pytest.raises(RuntimeError, match="requires change_data"):
-        r.partitions({"version": 1}, {"version": 2})
-
-    # ---- with change_data: exact feed incl. delete-then-reinsert
-    runner2, spec2 = _boot(
-        spark, str(tmp_path / "b"), "p7", change_data=True, cdc_buckets=3
-    )
-    runner2.merge_txn(
-        spec2, _mk(spark, [(3, "d2", 999)]), app_id="a", txn_version=1
-    )  # v3: re-insert a key deleted at v2
-    ch = {
-        (r["k"], r["_change_type"]): r["v"]
-        for r in runner2.table_changes("p7", "k", 1, 3).collect()
-    }
-    # net over (v1, v3]: k=3 deleted (image 30) then re-inserted (999)
-    # -> UPDATE; 13/23/33 -> plain deletes
-    assert ch[(3, "update_postimage")] == 999
-    assert ch[(13, "delete")] == 130
-    assert (3, "delete") not in ch
-    r2 = ManifestCDFStreamReader(
-        {"root": str(tmp_path / "b"), "model": "p7", "key": "k"}
-    )
-    rows = sorted(
-        tuple(b.to_pylist()[i].values())
-        for p in r2.partitions({"version": 1}, {"version": 3})
-        for b in r2.read(p)
-        for i in range(b.num_rows)
-    )
-    want = sorted(
-        tuple(row)
-        for row in runner2.table_changes("p7", "k", 1, 3).collect()
-    )
-    assert rows == want
+    for i, change_data in enumerate((False, True)):
+        root, name = str(tmp_path / f"t{i}"), f"p6{i}"
+        kw = {"change_data": True, "cdc_buckets": 3} if change_data else {}
+        runner, spec = _boot(spark, root, name, **kw)  # v1 boot, v2 DV
+        runner.merge_txn(
+            spec, _mk(spark, [(3, "d2", 999)]), app_id="a", txn_version=1
+        )  # v3: re-insert a key deleted at v2
+        r = ManifestCDFStreamReader({"root": root, "model": name, "key": "k"})
+        for s, e in [(1, 2), (2, 3), (1, 3)]:
+            want = sorted(
+                tuple(row) for row in runner.table_changes(name, "k", s, e).collect()
+            )
+            assert _stream_rows(r, s, e) == want, (change_data, s, e)
+        ch = {
+            (row["k"], row["_change_type"]): row["v"]
+            for row in runner.table_changes(name, "k", 1, 3).collect()
+        }
+        # net over (v1, v3]: k=3 deleted (image 30) then re-inserted
+        # (999) -> UPDATE; 13/23/33 -> plain deletes
+        assert ch == {
+            (3, "update_postimage"): 999,
+            (13, "delete"): 130,
+            (23, "delete"): 230,
+            (33, "delete"): 330,
+        }, (change_data, ch)
 
 
 def test_streaming_fallback_reads_through_unchanged_positional_vector(
     spark, tmp_path, monkeypatch
 ):
-    """A NON-change-data commit after a positional delete (dv unchanged
+    """A NON-change-data commit after a DV delete (dv unchanged
     across the batch): the rel-diff fallback must read both snapshots
     through the (file, ordinal) map — a reader that ignored positions
     would emit spurious deletes for the rewritten partition's dead
@@ -214,12 +269,7 @@ def test_streaming_fallback_reads_through_unchanged_positional_vector(
     r = ManifestCDFStreamReader(
         {"root": str(tmp_path / "t"), "model": "p8", "key": "k"}
     )
-    rows = sorted(
-        tuple(b.to_pylist()[i].values())
-        for p in r.partitions({"version": 2}, {"version": 3})
-        for b in r.read(p)
-        for i in range(b.num_rows)
-    )
+    rows = _stream_rows(r, 2, 3)
     assert rows == [(100, "d1", 1, "insert")], rows
 
 
@@ -298,7 +348,7 @@ def test_rebase_carries_cdc_and_refuses_concurrent_dv_change(
     def inject2(name, manifest, **kw):
         if not fired2:
             fired2["x"] = 1
-            rc.delete_where(boot2, "k = 0", mode="dv_pos")  # DV lands mid-race
+            rc.delete_where(boot2, "k = 0", mode="dv")  # DV lands mid-race
         return orig2(name, manifest, **kw)
 
     monkeypatch.setattr(rd, "_commit_manifest", inject2)
@@ -330,29 +380,86 @@ def test_streaming_fallback_drops_dead_ordinals_in_diffed_rel(
     r = ManifestCDFStreamReader(
         {"root": str(tmp_path / "t"), "model": "p9", "key": "k"}
     )
-    rows = sorted(
-        tuple(b.to_pylist()[i].values())
-        for p in r.partitions({"version": 2}, {"version": 3})
-        for b in r.read(p)
-        for i in range(b.num_rows)
-    )
+    rows = _stream_rows(r, 2, 3)
     assert rows == [(101, "d2", 1, "insert")], rows
 
 
-def test_strip_scheme_matches_fs_path_on_all_uri_forms():
+def test_fs_path_normalizes_every_uri_spelling():
     """The sidecar 'file' column is Spark's _metadata.file_path verbatim;
-    the streaming reader's normalization must agree with the batch
-    reader's (IncrementalRunner._fs_path) on every Hadoop path spelling
-    — file:/x, file:///x, percent-encoded — or positional tombstones
-    silently stop applying on one path (ADVICE r10)."""
-    from mycarely_saas_dbt_spark.incremental import IncrementalRunner
-    from mycarely_saas_dbt_spark.sources.pydatasource import _strip_scheme
+    the batch reader and the stream source both map it through the one
+    util.fs_path rule, which must turn every Hadoop path spelling —
+    file:/x, file:///x, percent-encoded — into the plain path manifests
+    and pyarrow readers use."""
+    from mycarely_saas_dbt_spark.util import fs_path
 
-    for u in [
-        "/plain/path/part-0.parquet",
-        "file:/root/t/day=d2/part-0.parquet",
-        "file:///root/t/day=d2/part-0.parquet",
-        "file:/root/t/day=d%202/part-0.parquet",
-        "file:///root/t/day=d%202/part-0.parquet",
-    ]:
-        assert _strip_scheme(u) == IncrementalRunner._fs_path(u), u
+    table = [
+        ("/plain/path/part-0.parquet", "/plain/path/part-0.parquet"),
+        ("file:/data/t/day=d2/part-0.parquet", "/data/t/day=d2/part-0.parquet"),
+        ("file:///data/t/day=d2/part-0.parquet", "/data/t/day=d2/part-0.parquet"),
+        ("file:/data/t/day=d%202/part-0.parquet", "/data/t/day=d 2/part-0.parquet"),
+        ("file:///data/t/day=d%202/part-0.parquet", "/data/t/day=d 2/part-0.parquet"),
+    ]
+    for uri, want in table:
+        assert fs_path(uri) == want, uri
+
+
+def test_full_refresh_absorbs_vector(spark, tmp_path):
+    runner, spec = _boot(spark, str(tmp_path / "t"), "m7")
+    runner.run(spec, SF_DIR, full_refresh=True)
+    m = runner.current_manifest("m7")
+    assert not (m.get("dv") or {}).get("files")
+    # authoritative rebuild: the build fn's rows are the table
+    assert runner.read_target("m7").count() == 40
+
+
+def test_unpartitioned_incremental_rewrite_absorbs_vector(spark, tmp_path):
+    """The full-rewrite incremental path reads the target THROUGH the
+    vector and commits a fresh file set: the vector is absorbed in the
+    same commit (deleted rows stay gone, the manifest drops `dv`)."""
+    import dataclasses
+
+    runner, spec = _boot(spark, str(tmp_path / "t"), "m8", partitioned=False)
+
+    def build2(sp, sfd, wm):
+        return _mk(sp, [(300, "d1", 1)])
+
+    runner.run(dataclasses.replace(spec, build=build2), SF_DIR)
+    m = runner.current_manifest("m8")
+    assert not (m.get("dv") or {}).get("files"), "full rewrite absorbs"
+    out = runner.read_target("m8")
+    assert out.filter("k % 10 = 3").count() == 0
+    assert out.count() == 36 + 1
+
+
+def test_degenerate_dv_shapes_commit_nothing(spark, tmp_path):
+    """A DV delete matching no row, a DV delete whose prune excludes
+    every file, and an absorb with no pending vector each commit no
+    version and leave no sidecar, staging dir or empty ``_dv/``; the
+    retired ``dv_pos`` mode is an unknown mode."""
+    from mycarely_saas_dbt_spark.incremental import IncrementalRunner, ModelSpec
+
+    root = str(tmp_path / "t")
+
+    def build(sp, sfd, wm):
+        return _mk(sp, [(i, "d1" if i % 2 == 0 else "d2", i) for i in range(10)])
+
+    spec = ModelSpec("g", "k", "k", build, partition_by=["day"])
+    runner = IncrementalRunner(spark, root)
+    runner.run(spec, SF_DIR)
+    v = runner.current_manifest("g")["version"]
+    before = sorted(os.listdir(root)), sorted(os.listdir(runner.target_path("g")))
+
+    res = runner.delete_where(spec, "k > 1000", mode="dv")
+    assert res["rows_matched"] == 0 and res["version"] == v
+    res = runner.delete_where(spec, "k = 1", mode="dv", prune={"k": (500, 600)})
+    assert res["files_scanned"] == 0 and res["version"] == v
+    res = runner.absorb_deletion_vectors(spec)
+    assert res["files_rewritten"] == 0 and res["version"] == v
+
+    assert runner.current_manifest("g")["version"] == v
+    assert "dv" not in runner.current_manifest("g")
+    after = sorted(os.listdir(root)), sorted(os.listdir(runner.target_path("g")))
+    assert after == before, (before, after)
+    with pytest.raises(ValueError, match="unknown delete mode"):
+        runner.delete_where(spec, "k = 1", mode="dv_pos")
+    assert runner.read_target("g").count() == 10
