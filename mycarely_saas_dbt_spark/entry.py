@@ -310,10 +310,11 @@ def register(name: str, fn: QueryFn, oracle: str | None = None) -> None:
 # test_merge_into and the merge writers run in-window inside every
 # incremental_* entry and dml_restore_clone), `bm25_index_search`
 # (4 artifacts; four sibling BM25 lifecycle entries stay in-window —
-# append/optimize/tiered/maintenance — all running the same query path
-# against the same oracle), `ann_pq_index_recall` (4 artifacts; the
-# IVFADC build+search is the fixture of the in-window retrain and
-# maintenance entries), `streaming_cdc_apply` (4 artifacts; tombstone
+# append/optimize/tiered/maintenance — running the same segmented build
+# and query path, of which this entry is the one-segment case),
+# `ann_pq_index_recall` (4 artifacts; the IVFADC build+search is the
+# fixture of the in-window retrain and maintenance entries),
+# `streaming_cdc_apply` (4 artifacts; tombstone
 # CDC application through merge_txn runs in-window inside
 # colmap_cdf_lifecycle's sink and the IVM maintainers' view merges),
 # `bm25_index_delete_aware` (4 artifacts; delete-awareness stays via

@@ -859,23 +859,6 @@ ANN_RETRAIN_FRAC = 0.5
 _INDEX_ROOTS: dict = {}
 
 
-def _corpus_fingerprint(sf_dir: str) -> list:
-    """JSON-serializable identity of the embeddings input (path + mtime +
-    size) recorded in the committed index and checked on reuse — a
-    rewritten corpus invalidates the index the same way session_memo's
-    input-stat key invalidates the minhash memo."""
-    import os
-
-    from ..util import _input_stat
-
-    return [
-        list(t)
-        for t in _input_stat(
-            os.path.realpath(sf_dir), ("embeddings.parquet",)
-        )
-    ] + [os.path.realpath(sf_dir)]
-
-
 def ann_index_build(
     spark: SparkSession,
     sf_dir: str,
@@ -911,10 +894,11 @@ def ann_index_build(
     snapshot, strictly more metadata); a ``base=X`` call requires X
     recorded."""
     from ..incremental import IncrementalRunner, ModelSpec
+    from ..util import corpus_fingerprint
 
     runner = IncrementalRunner(spark, root)
     cur = runner.current_manifest(ANN_INDEX_NAME)
-    fp = _corpus_fingerprint(sf_dir)
+    fp = corpus_fingerprint(sf_dir, "embeddings.parquet")
     ann = ((cur or {}).get("meta") or {}).get("ann")
     if (
         ann is not None
@@ -1018,6 +1002,7 @@ def ann_index_append(
     import numpy as np
 
     from ..incremental import IncrementalRunner, ModelSpec
+    from ..util import corpus_fingerprint
 
     runner = IncrementalRunner(spark, root)
     cur = runner.current_manifest(ANN_INDEX_NAME)
@@ -1044,7 +1029,7 @@ def ann_index_append(
     n_trained = int(ann.get("n_trained") or 0)
     n_total = int(ann.get("n") or 0) + int(n_new)
     frac = (n_total - n_trained) / n_total if n_total else 0.0
-    fp = _corpus_fingerprint(sf_dir)
+    fp = corpus_fingerprint(sf_dir, "embeddings.parquet")
     if n_trained and frac >= threshold:
         extra: dict = {}
         if ann.get("base") is not None:
@@ -1124,6 +1109,7 @@ def ann_index_apply_changes(
     import numpy as np
 
     from ..incremental import ModelSpec
+    from ..util import corpus_fingerprint
 
     last = runner.txn_last_version(ANN_INDEX_NAME, app_id)
     if last is not None and txn_version <= last:
@@ -1153,7 +1139,7 @@ def ann_index_apply_changes(
             e = _with_norm(runner.read_target(ann["base"]))
             _ann_train_commit(
                 spark, runner, e, sf_dir,
-                _corpus_fingerprint(sf_dir), None,
+                corpus_fingerprint(sf_dir, "embeddings.parquet"), None,
                 {"base": ann["base"], "base_version": base_m["version"]},
                 retrain_frac=thr,
                 extra_meta={

@@ -1548,20 +1548,33 @@ QUALIFY rank <= {BM25_TOP_K}
 # Persistent BM25 inverted index through the manifest protocol (r7): the
 # text sibling of the ANN index. Postings are the committed data files —
 # hive-partitioned by a term-hash bucket so a query's term set prunes to
-# its buckets' files (the Lucene segment/term-dictionary read pattern);
-# df and dl are DENORMALIZED into each posting row (the norms/term-dict
-# payload) and the two corpus scalars (S, N) ride in the manifest meta,
-# so query time is ONE pruned scan + a broadcast query join + the
-# per-query top-k window — zero corpus aggregates.
+# its buckets' files (the Lucene segment/term-dictionary read pattern) —
+# and the two corpus scalars (S, N) ride in the manifest meta. The index
+# is SEGMENTED (see bm25_seg_index_build below); a whole-corpus build is
+# its one-segment case, so every index entry shares one build and one
+# query path.
 # ---------------------------------------------------------------------------
 
-BM25_INDEX_NAME = "bm25_postings"
 BM25_BUCKETS = 16
 _BM25_ROOTS: dict = {}
 
 
 def _bm25_bucket() -> F.Column:
     return F.pmod(F.xxhash64("term"), F.lit(BM25_BUCKETS)).cast("int")
+
+
+def _bm25_session_root(spark: SparkSession, sf_dir: str) -> str:
+    """The per-(application, corpus) root holding the session's
+    committed BM25 index and quality prior — the warm path of both
+    builds needs the same root across calls."""
+    import tempfile
+
+    key = (spark.sparkContext.applicationId, sf_dir)
+    root = _BM25_ROOTS.get(key)
+    if root is None:
+        root = tempfile.mkdtemp(prefix="mycarely_bm25_idx_")
+        _BM25_ROOTS[key] = root
+    return root
 
 
 def _source_max_doc_id(spark: SparkSession, sf_dir: str) -> int:
@@ -1599,20 +1612,11 @@ def _bm25_query_buckets(spark: SparkSession) -> list[int]:
     return _BM25_QBUCKET_CACHE
 
 
-def _bm25_postings(docs: DataFrame, *, with_df: bool = True) -> tuple:
-    """Denormalized postings (term, doc_id, tf, dl[, df], bucket) plus the
-    two corpus scalars (S, N) from any (doc_id, text) relation — shared
-    by the corpus-fingerprinted build and the committed-base build.
-
-    ``with_df=False`` (r15, guide §1.2 — don't compute what you throw
-    away): the SEGMENTED index never consumes a stored df — its query
-    path recomputes exact global df from the pruned slice because a
-    segment-local df is stale the moment a second segment exists — yet
-    every seg build/append was paying the df aggregation (a full
-    per-term shuffle of tf) plus the join just to write a dead column
-    into every posting row. Seg callers skip it; the flat index (whose
-    query path reads the stored df precisely to avoid any query-time
-    corpus aggregate) keeps it."""
+def _bm25_postings(docs: DataFrame) -> tuple:
+    """Postings (term, doc_id, tf, dl, bucket) plus the two corpus
+    scalars (S, N) from any (doc_id, text) relation. No df column: a
+    segment-local df is stale the moment a second segment exists, so the
+    query counts exact global df over its pruned slice instead."""
     from mycarely_saas_dbt_spark.util import bounded_persist
 
     tf = bounded_persist(
@@ -1625,137 +1629,30 @@ def _bm25_postings(docs: DataFrame, *, with_df: bool = True) -> tuple:
     S, N = dl.agg(
         F.sum("dl").cast("long"), F.count(F.lit(1)).cast("long")
     ).first()
-    postings = tf.join(dl, "doc_id")
-    if with_df:
-        df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        postings = postings.join(df_, "term").select(
-            "term", "doc_id", "tf", "dl", "df"
-        )
-    else:
-        postings = postings.select("term", "doc_id", "tf", "dl")
-    postings = postings.withColumn("bucket", _bm25_bucket())
+    postings = (
+        tf.join(dl, "doc_id")
+        .select("term", "doc_id", "tf", "dl")
+        .withColumn("bucket", _bm25_bucket())
+    )
     # S is NULL on an empty relation (SUM over zero rows) — normalize so
     # the empty-append no-op path sees (0, 0)
     return postings, int(S) if S is not None else 0, int(N)
 
 
-def bm25_index_build(spark: SparkSession, sf_dir: str, root: str) -> dict:
-    """Build-or-reuse the committed postings index; returns the manifest.
-    Warm path (fingerprint match) is one manifest JSON read — zero Spark
-    jobs, zero tokenization. unique_key is nominal: the index rebuilds
-    full-refresh on corpus change (postings are derived data; the
-    incremental shape for them is the dedup_index_ingest one)."""
-    import os
-
-    from mycarely_saas_dbt_spark.incremental import IncrementalRunner, ModelSpec
-    from mycarely_saas_dbt_spark.util import _input_stat
-
-    runner = IncrementalRunner(spark, root)
-    cur = runner.current_manifest(BM25_INDEX_NAME)
-    fp = [
-        list(t)
-        for t in _input_stat(os.path.realpath(sf_dir), ("documents.parquet",))
-    ] + [os.path.realpath(sf_dir)]
-    meta = ((cur or {}).get("meta") or {}).get("bm25")
-    if meta is not None and meta.get("corpus") == fp:
-        return cur
-
-    register_sources(spark, sf_dir)
-    docs = spark.table("documents").select("doc_id", "text")
-    from mycarely_saas_dbt_spark.util import release_persists
-
-    postings, S, N = _bm25_postings(docs)
-    spec = ModelSpec(
-        name=BM25_INDEX_NAME,
-        unique_key="term",
-        watermark_col="doc_id",
-        build=lambda sp, sfd, wm: postings,
-        partition_by=["bucket"],
-        manifest_meta={"bm25": {"corpus": fp, "S": int(S), "N": int(N)}},
-    )
-    runner.run(spec, sf_dir, full_refresh=True)
-    release_persists("bm25index:tf")
-    return runner.current_manifest(BM25_INDEX_NAME)
-
-
 def bm25_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Query the COMMITTED inverted index: the query terms' buckets are
-    driver-known (a handful of hashes), so the postings read carries an
-    IN-filter on the bucket PARTITION column — static partition pruning,
-    only the query terms' buckets' files open. Scoring consumes the
-    denormalized (tf, dl, df) straight off the postings with (S, N) from
-    the manifest meta: no corpus aggregate, no second join — then the
-    same integer Okapi scorer and per-query top-k as bm25_search (whose
+    """Query the COMMITTED inverted index over the whole corpus: one
+    segment built per session root and corpus fingerprint (a warm call is
+    one manifest read), then the shared segmented query path — the query
+    terms' buckets are driver-known, so the postings read carries an
+    IN-filter on the bucket PARTITION column (static partition pruning),
+    df is counted over that slice and (S, N) come from the meta. Same
+    integer Okapi scorer and per-query top-k as bm25_search (whose
     oracle this entry shares)."""
-    import tempfile
-
     from mycarely_saas_dbt_spark.incremental import IncrementalRunner
-    from pyspark.sql import Window
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    root = _BM25_ROOTS.get(key)
-    if root is None:
-        root = tempfile.mkdtemp(prefix="mycarely_bm25_idx_")
-        _BM25_ROOTS[key] = root
-    m = bm25_index_build(spark, sf_dir, root)
-    return _bm25_index_query(spark, IncrementalRunner(spark, root), m)
-
-
-def _bm25_index_query(spark: SparkSession, runner, manifest: dict) -> DataFrame:
-    """The committed-index query path shared by ``bm25_index_search`` and
-    the delete-aware lifecycle entry. When the index meta names a BASE
-    table (``base`` + ``base_version``), the postings read is anti-joined
-    against the keys DELETED from that base since the index was built
-    (``deleted_keys_since`` — the Delta deletion-vector-at-read shape):
-    the broadcast deleted set filters candidate postings BEFORE scoring
-    and ranking, so deleted docs can neither appear in results nor hold a
-    rank slot, while df/dl/S/N keep their committed values until the next
-    rebuild re-absorbs the deletions (exactly how Lucene/Delta treat
-    tombstoned docs between merges)."""
-    from pyspark.sql import Window
-
-    meta = manifest["meta"]["bm25"]
-    S, N = meta["S"], meta["N"]
-
-    q = spark.createDataFrame(
-        [(qid, t) for qid, terms in BM25_QUERIES for t in terms],
-        "qid bigint, term string",
-    )
-    buckets = _bm25_query_buckets(spark)
-    post = runner.read_target(BM25_INDEX_NAME).filter(
-        F.col("bucket").isin(buckets)
-    )
-    if meta.get("base") is not None:
-        deleted = runner.deleted_keys_since(
-            meta["base"], "doc_id", meta["base_version"]
-        )
-        if deleted is not None:
-            post = post.join(F.broadcast(deleted), "doc_id", "left_anti")
-    scored = (
-        F.broadcast(q)
-        .join(post, "term")
-        .select(
-            "qid",
-            "doc_id",
-            F.expr(
-                f"(2*{N} - 2*df + 1) * 44 * {S} * tf * {BM25_SCALE} DIV "
-                f"((2*df + 1) * (20*{S}*tf + 6*{S} + 18*dl*{N}))"
-            ).alias("term_score"),
-        )
-        .groupBy("qid", "doc_id")
-        .agg(
-            F.sum("term_score").cast("long").alias("score_k"),
-            F.count(F.lit(1)).cast("long").alias("n_hit"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score_k").desc(), F.col("n_hit").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= BM25_TOP_K)
-        .select("qid", "doc_id", "score_k", "n_hit", "rank")
-    )
+    root = _bm25_session_root(spark, sf_dir)
+    bm25_seg_index_build(spark, sf_dir, root)
+    return _bm25_seg_query(spark, IncrementalRunner(spark, root))
 
 
 RRF_K = 60                 # the standard reciprocal-rank-fusion constant
@@ -1773,18 +1670,13 @@ def quality_prior_build(spark: SparkSession, sf_dir: str, root: str) -> dict:
     rank is computed with ``util.global_rank`` (range-partition + local
     rank + broadcast offsets) — never an unpartitioned Window over the
     corpus. Warm path (corpus fingerprint match) is one manifest JSON
-    read, zero jobs — the ``bm25_index_build`` pattern."""
-    import os
-
+    read, zero jobs — the ``bm25_seg_index_build`` warm path."""
     from mycarely_saas_dbt_spark.incremental import IncrementalRunner, ModelSpec
-    from mycarely_saas_dbt_spark.util import _input_stat, global_rank
+    from mycarely_saas_dbt_spark.util import corpus_fingerprint, global_rank
 
     runner = IncrementalRunner(spark, root)
     cur = runner.current_manifest(QPRIOR_NAME)
-    fp = [
-        list(t)
-        for t in _input_stat(os.path.realpath(sf_dir), ("documents.parquet",))
-    ] + [os.path.realpath(sf_dir)]
+    fp = corpus_fingerprint(sf_dir, "documents.parquet")
     meta = ((cur or {}).get("meta") or {}).get("qprior")
     if meta is not None and meta.get("corpus") == fp:
         return cur
@@ -1835,25 +1727,19 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     IN-filter on the prior's partition column, so only the candidates'
     buckets' files open; the fused re-rank is a per-query window over
     <= k rows."""
-    import tempfile
-
     from pyspark.sql import Window
 
     from mycarely_saas_dbt_spark.incremental import IncrementalRunner
 
     bm = bm25_search(spark, sf_dir)  # qid, doc_id, score_k, n_hit, rank
-    key = (spark.sparkContext.applicationId, sf_dir)
-    root = _BM25_ROOTS.get(key)
-    if root is None:
-        root = tempfile.mkdtemp(prefix="mycarely_bm25_idx_")
-        _BM25_ROOTS[key] = root
+    root = _bm25_session_root(spark, sf_dir)
     quality_prior_build(spark, sf_dir, root)
     runner = IncrementalRunner(spark, root)
 
     # bounded collect: the BM25 leg's own result — <= n_queries * top_k
     # rows (a few dozen) — becomes a local relation so its buckets are
     # driver-known for partition pruning, the same shape as the
-    # query-term bucket collect in _bm25_index_query.
+    # query-term buckets of _bm25_query_buckets.
     cand = spark.createDataFrame(bm.collect(), bm.schema)
     buckets = sorted(
         {
@@ -1990,7 +1876,8 @@ def bm25_index_delete_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     4. search through the delete-aware read: the postings anti-join the
        broadcast deleted-key set from ``deleted_keys_since`` so deleted
        docs never appear in (or displace ranks of) results, while the
-       corpus statistics keep their committed values until a rebuild.
+       corpus statistics keep their committed values until a rebuild —
+       ``_bm25_seg_query`` counts df BEFORE the anti-join.
 
     Scale notes: the deleted-set read is CDF-footprint-bounded (here the
     toy base is unpartitioned so the footprint is the table; a production
@@ -2004,8 +1891,6 @@ def bm25_index_delete_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from mycarely_saas_dbt_spark.incremental import IncrementalRunner, ModelSpec
-    from mycarely_saas_dbt_spark.util import release_persists
-
     from mycarely_saas_dbt_spark.util import timed_phase
 
     register_sources(spark, sf_dir)
@@ -2020,49 +1905,24 @@ def bm25_index_delete_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with timed_phase("build"):
         runner.run(base_spec, sf_dir)
-        base_v = runner.current_manifest(BM25_BASE_NAME)["version"]
-
-        postings, S, N = _bm25_postings(runner.read_target(BM25_BASE_NAME))
-        runner.run(
-            ModelSpec(
-                BM25_INDEX_NAME,
-                "term",
-                "doc_id",
-                lambda sp, sfd, wm: postings,
-                partition_by=["bucket"],
-                manifest_meta={
-                    "bm25": {
-                        "S": S,
-                        "N": N,
-                        "base": BM25_BASE_NAME,
-                        "base_version": base_v,
-                    }
-                },
-            ),
-            sf_dir,
-            full_refresh=True,
-        )
-        release_persists("bm25index:tf")
-
+        bm25_seg_index_build(spark, sf_dir, root, base=BM25_BASE_NAME)
     with timed_phase("mutate"):
         runner.delete_where(base_spec, BM25_DELETE_PRED)
-    return _bm25_index_query(
-        spark, runner, runner.current_manifest(BM25_INDEX_NAME)
-    )
+    return _bm25_seg_query(spark, runner)
 
 
 # ---------------------------------------------------------------------------
 # SEGMENTED postings index with true APPEND (r9 — the Lucene segment
-# architecture): the r8 index is rebuild-on-corpus-change because its df
-# is denormalized at build; segments make ingest incremental. Each append
-# commits a NEW `seg=` partition level (file-disjoint from every older
-# segment — zero old files touched, the FAISS-add economics for text),
-# per-doc stats (tf, dl) are segment-local and final, and the two corpus
-# scalars accumulate in the manifest meta (S += S_seg, N += N_seg).
+# architecture): the one BM25 index format, partitioned seg=K/bucket=N
+# with no stored df, so ingest is incremental. Each append commits a NEW
+# `seg=` partition level (file-disjoint from every older segment — zero
+# old files touched, the FAISS-add economics for text), per-doc stats
+# (tf, dl) are segment-local and final, and the two corpus scalars
+# accumulate in the manifest meta (S += S_seg, N += N_seg).
 # The only cross-segment statistic, per-term df, is recomputed at query
 # time from the PRUNED slice: bucket pruning keeps every posting of the
 # query's terms, so COUNT(rows) per term over the slice IS the exact
-# global df — a vocabulary-of-the-query-sized aggregate, not a corpus
+# global df — a count over the query terms' postings, not a corpus
 # pass (Lucene instead merges per-segment term dictionaries; same
 # information, same cost class).
 # ---------------------------------------------------------------------------
@@ -2075,22 +1935,24 @@ def bm25_seg_index_build(
     spark: SparkSession,
     sf_dir: str,
     root: str,
-    bound: int,
+    bound: int | None = None,
     *,
     base: str | None = None,
 ) -> dict:
-    """Bootstrap segment 0 over ``doc_id < bound``; postings land under
-    seg=0/bucket=N with segment-local stats; meta records running
-    (S, N, segs). ``base``: index a COMMITTED table instead of the raw
-    documents source and record (base, base_version) — the query path
-    then auto-applies ``deleted_keys_since`` (the same self-describing
-    delete-awareness as the flat index and the ANN index — no new
-    asymmetry)."""
+    """Bootstrap segment 0 over ``doc_id < bound`` (``bound=None``: the
+    whole corpus); postings land under seg=0/bucket=N with segment-local
+    stats; meta records running (S, N, segs). Over the raw documents
+    source the meta also records the corpus fingerprint and ``bound``: a
+    matching call on an untouched bootstrap (one segment, no live-docs
+    marks) returns after one manifest read — zero Spark jobs. ``base``:
+    index a COMMITTED table instead of the raw documents source and
+    record (base, base_version) — the query path then auto-applies
+    ``deleted_keys_since`` (the same self-describing delete-awareness
+    as the ANN index)."""
     from mycarely_saas_dbt_spark.incremental import IncrementalRunner, ModelSpec
-    from mycarely_saas_dbt_spark.util import release_persists
+    from mycarely_saas_dbt_spark.util import corpus_fingerprint, release_persists
 
     runner = IncrementalRunner(spark, root)
-    extra: dict = {}
     if base is not None:
         base_m = runner.current_manifest(base)
         if base_m is None:
@@ -2098,11 +1960,24 @@ def bm25_seg_index_build(
         extra = {"base": base, "base_version": base_m["version"]}
         docs = runner.read_target(base).select("doc_id", "text")
     else:
+        extra = {
+            "corpus": corpus_fingerprint(sf_dir, "documents.parquet"),
+            "bound": bound,
+        }
+        cur = runner.current_manifest(BM25_SEG_INDEX_NAME)
+        meta = ((cur or {}).get("meta") or {}).get("bm25") or {}
+        if (
+            meta.get("corpus") == extra["corpus"]
+            and meta.get("bound") == bound
+            and meta.get("segs") == 1
+            and not meta.get("dead_dirs")
+        ):
+            return cur
         register_sources(spark, sf_dir)
         docs = spark.table("documents").select("doc_id", "text")
-    postings, S, N = _bm25_postings(
-        docs.filter(F.col("doc_id") < bound), with_df=False
-    )
+    if bound is not None:
+        docs = docs.filter(F.col("doc_id") < bound)
+    postings, S, N = _bm25_postings(docs)
     runner.run(
         ModelSpec(
             BM25_SEG_INDEX_NAME,
@@ -2155,7 +2030,7 @@ def bm25_seg_index_append(
     # non-emptiness comes FOR FREE from _bm25_postings' (S, N) aggregate
     # (r15: the former limit(1).count() pre-check was a whole extra Spark
     # job on the happy path just to learn what N2 tells us anyway)
-    postings, S2, N2 = _bm25_postings(new, with_df=False)
+    postings, S2, N2 = _bm25_postings(new)
     if N2 == 0:
         release_persists("bm25index:tf")
         return cur  # nothing past the watermark: append is a no-op
@@ -2186,43 +2061,45 @@ def bm25_seg_index_append(
 
 
 def _bm25_seg_query(spark: SparkSession, runner) -> DataFrame:
-    """Query the segmented index: bucket-pruned slice across ALL
-    segments, global df recomputed exactly from the slice (one tiny
-    per-term aggregate), (S, N) from the accumulated meta, then the
-    shared integer scorer and per-query top-k."""
+    """Query the segmented index with ONE read of its postings: the
+    bucket-pruned slice across ALL segments narrowed to the distinct
+    query terms, the live-docs mask, exact global df as a per-term
+    window count over that slice (one row per (term, live doc)), then
+    the tombstone anti-join, the broadcast query join, the shared
+    integer scorer with (S, N) from the accumulated meta, and the
+    per-query top-k."""
     from pyspark.sql import Window
 
-    m = runner.current_manifest(BM25_SEG_INDEX_NAME)
-    meta = m["meta"]["bm25"]
+    meta = runner.current_manifest(BM25_SEG_INDEX_NAME)["meta"]["bm25"]
     S, N = int(meta["S"]), int(meta["N"])
     q = spark.createDataFrame(
         [(qid, t) for qid, terms in BM25_QUERIES for t in terms],
         "qid bigint, term string",
     )
-    buckets = _bm25_query_buckets(spark)
+    qterms = sorted({t for _, terms in BM25_QUERIES for t in terms})
     post = runner.read_target(BM25_SEG_INDEX_NAME).filter(
-        F.col("bucket").isin(buckets)
+        F.col("bucket").isin(_bm25_query_buckets(spark))
+        & F.col("term").isin(qterms)
     )
     # live-docs mask FIRST (maintained indexes): the streaming
     # maintainer keeps (S, N) exactly live, so df must be live too —
     # the maintained regime grades against a FRESH build, unlike the
     # tombstone-at-read regime below (committed stats until rebuild)
     post = _bm25_apply_dead(post, _bm25_dead_df(spark, runner, meta))
-    sl = F.broadcast(q).join(post, "term")
-    # exact global df: the pruned slice holds EVERY posting of the query
-    # terms, one row per (term, doc) — count per term and broadcast back.
-    # Computed BEFORE any delete filter: tombstone-at-read keeps the
-    # COMMITTED corpus statistics until a rebuild (the flat index's rule)
-    df_g = sl.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    post = post.withColumn(
+        "df", F.count(F.lit(1)).over(Window.partitionBy("term"))
+    )
+    # df is counted BEFORE the delete filter: tombstone-at-read keeps the
+    # COMMITTED corpus statistics until a rebuild or optimize absorbs it
     if meta.get("base") is not None:
         deleted = runner.deleted_keys_since(
             meta["base"], "doc_id", meta["base_version"]
         )
         if deleted is not None:
-            sl = sl.join(F.broadcast(deleted), "doc_id", "left_anti")
+            post = post.join(F.broadcast(deleted), "doc_id", "left_anti")
     scored = (
-        sl.drop("df")
-        .join(F.broadcast(df_g), "term")
+        F.broadcast(q)
+        .join(post, "term")
         .select(
             "qid",
             "doc_id",
@@ -2295,7 +2172,7 @@ def bm25_seg_index_optimize(
     decision) into one new segment so exactly K remain; the largest
     segments' files ride forward BYTE-IDENTICAL, (S, N) and the base
     pointer are untouched (no absorb — per-doc stats are segment-local
-    and final, and query-time df never trusted the stored column, so a
+    and final, and df is counted at query time, so a
     pure re-layout changes no answer). With deletes pending the call
     escalates to the force-merge: absorption must touch every segment a
     deleted doc lives in, which is what can advance the base pointer.
@@ -2357,9 +2234,7 @@ def bm25_seg_index_optimize(
         .agg(F.sum("dl").cast("long"), F.count(F.lit(1)).cast("long"))
         .first()
     )
-    # no stored df (r15): the seg query path recomputes exact df from the
-    # pruned slice, so the forceMerge output skips the per-term shuffle +
-    # join the old df recompute cost (guide §1.2)
+    # no stored df: the query counts exact df over its pruned slice
     merged = (
         live.select("term", "doc_id", "tf", "dl")
         .withColumn("bucket", _bm25_bucket())
@@ -2633,7 +2508,7 @@ def bm25_seg_index_apply_changes(
         S2 = N2 = 0
         staged = None
         if has_live:
-            postings, S2, N2 = _bm25_postings(live, with_df=False)
+            postings, S2, N2 = _bm25_postings(live)
             staged = postings.withColumn("seg", F.lit(seg))
         dead_dirs = list(meta.get("dead_dirs") or [])
         if N_gone:
@@ -2863,7 +2738,7 @@ def bm25_index_tiered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-commit no-op. The query across the merged layout must
     hash-match the full-corpus fresh-build oracle — a pure re-layout
     changes no answer (per-doc stats are segment-local and final;
-    query-time df never trusted a stored column)."""
+    df is counted at query time)."""
     import os
     import tempfile
 

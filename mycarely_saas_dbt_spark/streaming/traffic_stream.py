@@ -408,10 +408,22 @@ def interval_join_stream(spark: SparkSession, sf_dir: str, target: str):
     stream-stream join. One shuffle per side on user_id; state size is
     O(events within the interval + lateness window), independent of stream
     length."""
-    ev1 = raw_events_stream(spark, sf_dir)
-    ev2 = raw_events_stream(spark, sf_dir)
+    views, clicks, cond = _interval_sides(
+        raw_events_stream(spark, sf_dir), raw_events_stream(spark, sf_dir)
+    )
+    joined = views.join(clicks, cond).select(
+        F.col("v_user").alias("user_id"), "view_id", "click_id"
+    )
+    return start_exactly_once(joined, target, semantics="batch_dir")
+
+
+def _interval_sides(ev_views: DataFrame, ev_clicks: DataFrame) -> tuple:
+    """The interval joins' two watermarked sides and their join
+    condition: views and clicks projected to (user, id, ts) with a
+    1-hour watermark each, a click matching the same user's views in
+    the preceding INTERVAL_JOIN_MINUTES."""
     views = (
-        ev1.filter(F.col("event_type") == "view")
+        ev_views.filter(F.col("event_type") == "view")
         .select(
             F.col("user_id").alias("v_user"),
             F.col("event_id").alias("view_id"),
@@ -420,7 +432,7 @@ def interval_join_stream(spark: SparkSession, sf_dir: str, target: str):
         .withWatermark("v_ts", "1 hour")
     )
     clicks = (
-        ev2.filter(F.col("event_type") == "click")
+        ev_clicks.filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
             F.col("event_id").alias("click_id"),
@@ -428,14 +440,89 @@ def interval_join_stream(spark: SparkSession, sf_dir: str, target: str):
         )
         .withWatermark("c_ts", "1 hour")
     )
-    joined = views.join(
-        clicks,
+    cond = (
         (F.col("v_user") == F.col("c_user"))
         & (F.col("c_ts") > F.col("v_ts"))
-        & (F.col("c_ts") <= F.col("v_ts") + F.expr(f"INTERVAL {INTERVAL_JOIN_MINUTES} MINUTES")),
-    ).select(F.col("v_user").alias("user_id"), "view_id", "click_id")
+        & (
+            F.col("c_ts")
+            <= F.col("v_ts") + F.expr(f"INTERVAL {INTERVAL_JOIN_MINUTES} MINUTES")
+        )
+    )
+    return views, clicks, cond
 
-    return start_exactly_once(joined, target, semantics="batch_dir")
+
+def _sentinel_flushed_events(
+    spark: SparkSession, sf_dir: str, workdir: str
+) -> DataFrame:
+    """The outer interval joins' event stream: the real events land as
+    file batch 1, then TWO far-future sentinel batches (one view + one
+    click each, negative user_id so they can never match real rows)
+    advance both sides' watermarks past every real event. A batch runs
+    under the watermark computed at the END of the previous one, so the
+    first sentinel batch publishes the new watermark and the second runs
+    under it and flushes all remaining outer state. One file per
+    trigger; callers filter the sentinels (user_id < 0) from results."""
+    src = os.path.join(workdir, "src")
+    os.makedirs(src, exist_ok=True)
+    ev = load_table(spark, sf_dir, "events")
+    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
+        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
+    # MAX(ts) from the source parquet footer (exact, zero Spark jobs —
+    # r15 guide §1.2); the aggregate stays as the stats-free fallback
+    from mycarely_saas_dbt_spark.sources.registry import source_column_max
+
+    hi = source_column_max(sf_dir, "events.parquet", "ts")
+    if hi is None:
+        hi = ev.agg(F.max("ts")).first()[0]
+
+    def sentinel(uid: int, etype: str, days: int) -> DataFrame:
+        return ev.limit(1).select(
+            *[
+                F.lit(uid).cast("long").alias(c)
+                if c == "user_id"
+                else F.lit(etype).alias(c)
+                if c == "event_type"
+                else (F.lit(hi) + F.expr(f"INTERVAL {days} DAYS")).alias(c)
+                if c == "ts"
+                else F.col(c)
+                for c in ev.columns
+            ]
+        )
+
+    batches = [
+        ev,
+        sentinel(-1, "view", 400).unionByName(sentinel(-2, "click", 400)),
+        sentinel(-3, "view", 800).unionByName(sentinel(-4, "click", 800)),
+    ]
+    for i, df in enumerate(batches, start=1):
+        tmp = os.path.join(workdir, f"tmp{i}")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
+        dst = os.path.join(src, f"batch{i}.parquet")
+        os.rename(os.path.join(tmp, part), dst)
+        os.utime(dst, (1000000000 + i * 1000, 1000000000 + i * 1000))
+
+    return (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
+def _drain_real_rows(
+    spark: SparkSession, joined: DataFrame, workdir: str
+) -> DataFrame:
+    """Run ``joined`` to completion into ``<workdir>/out`` and read back
+    the real (non-sentinel) rows."""
+    target = os.path.join(workdir, "out")
+    q = start_exactly_once(
+        joined,
+        target,
+        semantics="batch_dir",
+        checkpoint=os.path.join(workdir, "ckpt"),
+    )
+    await_or_raise(q, 300)
+    return spark.read.parquet(target).filter(F.col("user_id") >= 0)
 
 
 # --------------------------------------------------------------------------
@@ -1077,99 +1164,18 @@ def interval_left_join_stream(
     Outer emission is watermark-driven and a batch's watermark is the one
     computed at the END of the previous batch, so a single availableNow
     drain of one file would finish with every unmatched view still stuck
-    in state. Fixture: the real events land in batch 1, then TWO
-    far-future sentinel batches (one view + one click each, negative
-    user_id so they can never match real rows) advance both sides'
-    watermarks past every real event — the first sentinel batch publishes
-    the new watermark, the second runs under it and flushes all remaining
-    outer state. Sentinels are filtered from the result; per-user
+    in state; the `_sentinel_flushed_events` fixture follows the real
+    events with two far-future sentinel batches that flush it.
+    Sentinels are filtered from the result; per-user
     (n_pairs, n_unmatched) hash-match the batch LEFT JOIN oracle — an
     EXACT check that every unmatched view was emitted exactly once."""
-    src = os.path.join(workdir, "src")
-    os.makedirs(src, exist_ok=True)
-    ev = load_table(spark, sf_dir, "events")
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    # MAX(ts) from the source parquet footer (exact, zero Spark jobs —
-    # r15 guide §1.2); the aggregate stays as the stats-free fallback
-    from mycarely_saas_dbt_spark.sources.registry import source_column_max
-
-    hi = source_column_max(sf_dir, "events.parquet", "ts")
-    if hi is None:
-        hi = ev.agg(F.max("ts")).first()[0]
-
-    def sentinel(uid: int, etype: str, days: int) -> DataFrame:
-        return ev.limit(1).select(
-            *[
-                F.lit(uid).cast("long").alias(c)
-                if c == "user_id"
-                else F.lit(etype).alias(c)
-                if c == "event_type"
-                else (F.lit(hi) + F.expr(f"INTERVAL {days} DAYS")).alias(c)
-                if c == "ts"
-                else F.col(c)
-                for c in ev.columns
-            ]
-        )
-
-    batches = [
-        ev,
-        sentinel(-1, "view", 400).unionByName(sentinel(-2, "click", 400)),
-        sentinel(-3, "view", 800).unionByName(sentinel(-4, "click", 800)),
-    ]
-    for i, df in enumerate(batches, start=1):
-        tmp = os.path.join(workdir, f"tmp{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(src, f"batch{i}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (1000000000 + i * 1000, 1000000000 + i * 1000))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream = _sentinel_flushed_events(spark, sf_dir, workdir)
+    views, clicks, cond = _interval_sides(stream, stream)
+    joined = views.join(clicks, cond, "leftOuter").select(
+        F.col("v_user").alias("user_id"), "view_id", "click_id"
     )
-    views = (
-        stream.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "1 hour")
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    joined = views.join(
-        clicks,
-        (F.col("v_user") == F.col("c_user"))
-        & (F.col("c_ts") > F.col("v_ts"))
-        & (
-            F.col("c_ts")
-            <= F.col("v_ts") + F.expr(f"INTERVAL {INTERVAL_JOIN_MINUTES} MINUTES")
-        ),
-        "leftOuter",
-    ).select(F.col("v_user").alias("user_id"), "view_id", "click_id")
-
-    target = os.path.join(workdir, "out")
-    q = start_exactly_once(
-        joined,
-        target,
-        semantics="batch_dir",
-        checkpoint=os.path.join(workdir, "ckpt"),
-    )
-    await_or_raise(q, 300)
     return (
-        spark.read.parquet(target)
-        .filter(F.col("user_id") >= 0)
+        _drain_real_rows(spark, joined, workdir)
         .groupBy("user_id")
         .agg(
             F.count("click_id").alias("n_pairs"),
@@ -1187,101 +1193,20 @@ def interval_full_join_stream(
     """Stream-stream FULL OUTER interval join — completes the streaming
     join matrix (inner ✓, left-outer ✓): BOTH sides' unmatched rows are
     held in state until the opposite watermark proves no partner can
-    arrive, then emitted once with NULLs. Same sentinel-flush fixture as
-    `interval_left_join_stream` (two far-future batches advance both
-    watermarks past every real event; a batch runs under the watermark
-    computed at the END of the previous one). Per-user (n_pairs,
+    arrive, then emitted once with NULLs. Same sentinel-flush fixture
+    (`_sentinel_flushed_events`) as `interval_left_join_stream`.
+    Per-user (n_pairs,
     n_view_unmatched, n_click_unmatched) hash-match the batch FULL JOIN
     oracle — the exact both-sides-emitted-once check."""
-    src_dir = os.path.join(workdir, "src")
-    os.makedirs(src_dir, exist_ok=True)
-    ev = load_table(spark, sf_dir, "events")
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    # MAX(ts) from the source parquet footer (exact, zero Spark jobs —
-    # r15 guide §1.2); the aggregate stays as the stats-free fallback
-    from mycarely_saas_dbt_spark.sources.registry import source_column_max
-
-    hi = source_column_max(sf_dir, "events.parquet", "ts")
-    if hi is None:
-        hi = ev.agg(F.max("ts")).first()[0]
-
-    def sentinel(uid: int, etype: str, days: int) -> DataFrame:
-        return ev.limit(1).select(
-            *[
-                F.lit(uid).cast("long").alias(c)
-                if c == "user_id"
-                else F.lit(etype).alias(c)
-                if c == "event_type"
-                else (F.lit(hi) + F.expr(f"INTERVAL {days} DAYS")).alias(c)
-                if c == "ts"
-                else F.col(c)
-                for c in ev.columns
-            ]
-        )
-
-    batches = [
-        ev,
-        sentinel(-1, "view", 400).unionByName(sentinel(-2, "click", 400)),
-        sentinel(-3, "view", 800).unionByName(sentinel(-4, "click", 800)),
-    ]
-    for i, df in enumerate(batches, start=1):
-        tmp = os.path.join(workdir, f"tmp{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(src_dir, f"batch{i}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (1000000000 + i * 1000, 1000000000 + i * 1000))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    views = (
-        stream.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "1 hour")
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    joined = views.join(
-        clicks,
-        (F.col("v_user") == F.col("c_user"))
-        & (F.col("c_ts") > F.col("v_ts"))
-        & (
-            F.col("c_ts")
-            <= F.col("v_ts") + F.expr(f"INTERVAL {INTERVAL_JOIN_MINUTES} MINUTES")
-        ),
-        "fullOuter",
-    ).select(
+    stream = _sentinel_flushed_events(spark, sf_dir, workdir)
+    views, clicks, cond = _interval_sides(stream, stream)
+    joined = views.join(clicks, cond, "fullOuter").select(
         F.coalesce(F.col("v_user"), F.col("c_user")).alias("user_id"),
         "view_id",
         "click_id",
     )
-
-    target = os.path.join(workdir, "out")
-    q = start_exactly_once(
-        joined,
-        target,
-        semantics="batch_dir",
-        checkpoint=os.path.join(workdir, "ckpt"),
-    )
-    await_or_raise(q, 300)
     return (
-        spark.read.parquet(target)
-        .filter(F.col("user_id") >= 0)
+        _drain_real_rows(spark, joined, workdir)
         .groupBy("user_id")
         .agg(
             F.sum(

@@ -127,6 +127,18 @@ def _input_stat(sf_dir: str, files: tuple[str, ...]) -> tuple:
     return tuple(out)
 
 
+def corpus_fingerprint(sf_dir: str, file: str) -> list:
+    """JSON-serializable identity of one source file (name + mtime_ns +
+    size, then the resolved sf_dir) that committed indexes record in
+    their manifest meta and compare on reuse — a rewritten corpus
+    invalidates the index the same way the input-stat key invalidates
+    ``session_memo``."""
+    import os
+
+    root = os.path.realpath(sf_dir)
+    return [list(t) for t in _input_stat(root, (file,))] + [root]
+
+
 def session_memo(site: str, sf_dir: str, files: tuple[str, ...], builder):
     """Memoize ``builder()`` (a () -> DataFrame) as an eagerly
     localCheckpoint'ed relation, keyed by (application id, site,

@@ -57,7 +57,9 @@ AUDIT = [
     # round 7 additions (index/CDC surface; the materialization-runtime
     # entries — dedup_index_ingest, cdc_*, pyds_manifest_stream — execute
     # committed-target reads whose shapes the audit below captures via
-    # ann_pq_index_recall / bm25_index_search)
+    # ann_pq_index_recall / bm25_index_search; the latter is the
+    # one-segment case of the segmented BM25 read: one bucket-pruned
+    # postings scan, df as a per-term window over it)
     "ann_pq_index_recall",
     "bm25_index_search",
     # r7 continuation: DSIR scoring (broadcast ratio join over the

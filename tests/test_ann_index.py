@@ -59,13 +59,14 @@ def test_second_build_is_metadata_only_zero_spark_zero_training(
 
 
 def test_corpus_fingerprint_mismatch_triggers_rebuild(spark, monkeypatch):
+    from mycarely_saas_dbt_spark import util
     from mycarely_saas_dbt_spark.operators import similarity
 
     root = tempfile.mkdtemp(prefix="ann_idx_test_")
     m1 = similarity.ann_index_build(spark, SF_DIR, root)
     # simulate a rewritten corpus: fingerprint changes -> rebuild commits v2
     monkeypatch.setattr(
-        similarity, "_corpus_fingerprint", lambda d: ["changed"]
+        util, "corpus_fingerprint", lambda d, f: ["changed"]
     )
     m2 = similarity.ann_index_build(spark, SF_DIR, root)
     assert m2["version"] == m1["version"] + 1

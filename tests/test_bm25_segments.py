@@ -82,12 +82,34 @@ def test_seg_query_prunes_buckets_across_segments(spark, tmp_path):
     assert out.count() > 0
 
 
+def test_seg_query_counts_shared_term_df_once(spark, tmp_path, monkeypatch):
+    """df counts postings, not query-join rows: with "spark" and "data"
+    each named by two queries, the two-segment query must still return
+    exactly bm25_search's rows (whose df is a per-term count over the
+    postings)."""
+    from mycarely_saas_dbt_spark.incremental import IncrementalRunner
+    from mycarely_saas_dbt_spark.operators import textops as t
+
+    monkeypatch.setattr(
+        t, "BM25_QUERIES", t.BM25_QUERIES + [(3, ["spark", "data"])]
+    )
+    monkeypatch.setattr(t, "_BM25_QBUCKET_CACHE", None)
+    split = int((t._source_max_doc_id(spark, SF_DIR) + 1) * 0.7)
+    root = str(tmp_path / "idx")
+    t.bm25_seg_index_build(spark, SF_DIR, root, bound=split)
+    t.bm25_seg_index_append(spark, SF_DIR, root)
+    got = t._bm25_seg_query(spark, IncrementalRunner(spark, root)).collect()
+    want = t.bm25_search(spark, SF_DIR).collect()
+    assert {r["qid"] for r in want} == {0, 1, 2, 3}
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
 def test_seg_index_auto_delete_aware_from_base_meta(spark, tmp_path):
     """No new asymmetry (the r8 lesson): a segmented index built with
     ``base=`` auto-applies deleted_keys_since at query time — deleted
     docs vanish from results while the committed df/S/N hold (a deleted
-    doc influences scores until a rebuild, exactly the flat index's
-    tombstone-at-read contract). Deletes pend across an APPEND too."""
+    doc influences scores until a rebuild, the tombstone-at-read contract
+    of bm25_index_delete_aware). Deletes pend across an APPEND too."""
     from pyspark.sql import functions as F
 
     from mycarely_saas_dbt_spark.incremental import IncrementalRunner, ModelSpec

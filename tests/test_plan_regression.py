@@ -449,6 +449,24 @@ def test_delete_aware_bm25_keeps_pruning_and_broadcasts_deleted_set(spark):
     assert "LeftAnti, BuildRight" in plan or "LeftAnti" in plan, plan
 
 
+def test_bm25_seg_query_scans_postings_once(spark):
+    """The segmented query reads its postings ONCE: df is a per-term
+    window count over the pruned slice, not a second scan feeding a
+    broadcast df aggregate. The one scan keeps the query-bucket
+    partition pruning."""
+    from mycarely_saas_dbt_spark.operators.textops import (
+        bm25_index_append_search,
+    )
+
+    plan = _plan(bm25_index_append_search(spark, SF_DIR))
+    scans = [
+        ln for ln in plan.splitlines()
+        if "FileScan" in ln and "bm25_postings_seg" in ln
+    ]
+    assert len(scans) == 1, plan
+    assert re.search(r"PartitionFilters: \[[^\]]*bucket", scans[0]), plan
+
+
 def test_semdedup_no_cross_cluster_cartesian(spark):
     """SemDeDup's pairwise verify runs as ONE Arrow-batched matrix pass
     per cluster (r15: FlatMapGroupsInPandas after the cid shuffle — each
