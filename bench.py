@@ -4,8 +4,9 @@ Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {"traffic_pages_agg": sec, ...}, "sf": 0.1}
 
-Each query is forced end-to-end with the noop sink (computes every output
-column, unlike count() which lets Catalyst prune the plan).
+Session set-up, timing, the noop-sink forcing (computes every output
+column, unlike count() which lets Catalyst prune the plan) and the
+min/median/spread summary come from ``mycarely_saas_dbt_spark.measure``.
 """
 
 from __future__ import annotations
@@ -14,7 +15,6 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -153,20 +153,9 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
 
-    from mycarely_saas_dbt_spark.session import get_spark
-    import __spark_entry__ as e
+    from mycarely_saas_dbt_spark import measure
 
-    spark = get_spark(app_name="bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = e.queries()
-
-    # Warm-up outside the timed region: JVM/codegen spin-up plus the one-time
-    # source registration (parquet footer reads + temp-view creation) that is
-    # session setup, not query execution.
-    from mycarely_saas_dbt_spark.sources.registry import register_sources
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    register_sources(spark, sf_dir)
+    spark, qs = measure.boot("bench", sf_dir)
 
     # INTERLEAVED rounds (q1,q2,...,qN repeated N_ROUNDS times — A/B/A/B, not
     # A×N then B×N): this box's wall-clock noise is +/-50% over minutes-long
@@ -181,8 +170,6 @@ def main() -> None:
     # Crash-proof: one broken query must never erase the whole artifact
     # (BENCH_r02 lesson) — each run is caught individually and the final
     # JSON line always prints.
-    from mycarely_saas_dbt_spark.util import capture_phases
-
     N_ROUNDS = 5
     samples: dict[str, list[float]] = {}
     phase_runs: dict[str, list[tuple[float, dict]]] = {}
@@ -193,15 +180,7 @@ def main() -> None:
             if name in errors:
                 continue
             try:
-                sink: dict = {}
-                t0 = time.time()
-                with capture_phases(sink):
-                    df = qs[name](spark, sf_dir)
-                    df.write.mode("overwrite").format("noop").save()
-                dt = time.time() - t0
-                samples.setdefault(name, []).append(dt)
-                if sink:
-                    phase_runs.setdefault(name, []).append((dt, sink))
+                dt, ph = measure.time_entry(qs[name], spark, sf_dir)
             except Exception as exc:  # noqa: BLE001 — record and keep going
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
                 print(
@@ -209,18 +188,21 @@ def main() -> None:
                     file=sys.stderr,
                     flush=True,
                 )
+                continue
+            samples.setdefault(name, []).append(dt)
+            if ph:
+                phase_runs.setdefault(name, []).append((dt, ph))
         print(f"[bench] --- round {rnd + 1}/{N_ROUNDS} done", file=sys.stderr, flush=True)
 
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
     for name in names:
-        runs = sorted(samples.get(name, []))
-        if not runs:
+        if name not in samples:
             continue
-        timings[name] = round(runs[0], 3)
-        medians[name] = round(runs[len(runs) // 2], 3)
-        spreads[name] = [round(t, 3) for t in runs]
+        timings[name], medians[name], spreads[name] = measure.summarize(
+            samples[name]
+        )
         print(
             f"[bench] {name}: min={timings[name]}s median={medians[name]}s"
             f" spread={spreads[name]}",
@@ -242,43 +224,32 @@ def main() -> None:
                 flush=True,
             )
     for name, runs in phase_runs.items():
-        dt, sink = min(runs, key=lambda r: r[0])
-        phases[name] = {
-            **sink,
-            "query_residual": round(max(0.0, dt - sum(sink.values())), 3),
-        }
+        dt, ph = min(runs, key=lambda r: r[0])
+        phases[name] = {**ph, "query_residual": measure.residual(dt, ph)}
         print(f"[bench] {name} phases: {phases[name]}", file=sys.stderr, flush=True)
 
     # cold pass for memoized entries (min of COLD_RUNS, every run rebuilds)
     cold: dict[str, float] = {}
     cold_spread: dict[str, list[float]] = {}
-    os.environ["MYCARELY_SESSION_MEMO"] = "0"
-    try:
+    with measure.setenv("MYCARELY_SESSION_MEMO", "0"):
         for name in MEMOIZED_QUERIES:
             if name not in qs or name in errors:
                 continue
             runs = []
             for _ in range(COLD_RUNS):
                 try:
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).write.mode("overwrite").format(
-                        "noop"
-                    ).save()
-                    runs.append(time.time() - t0)
+                    runs.append(measure.time_entry(qs[name], spark, sf_dir)[0])
                 except Exception as exc:  # noqa: BLE001
                     errors[f"{name}(cold)"] = f"{type(exc).__name__}: {exc}"[:500]
                     break
             if runs:
-                cold[name] = round(min(runs), 3)
-                cold_spread[name] = [round(t, 3) for t in sorted(runs)]
+                cold[name], _, cold_spread[name] = measure.summarize(runs)
                 print(
                     f"[bench] {name} COLD: min={cold[name]}s"
                     f" spread={cold_spread[name]}",
                     file=sys.stderr,
                     flush=True,
                 )
-    finally:
-        os.environ.pop("MYCARELY_SESSION_MEMO", None)
 
     total = round(sum(timings.values()), 3)
 
@@ -322,19 +293,12 @@ def main() -> None:
     }
     if errors:
         out["errors"] = errors
-    # Full artifact (incl. per-query spreads) goes to its OWN file — the
-    # driver's stdout tail capture truncated the r5 JSON line's head
-    # (BENCH_r05 `parsed: null`), and the r13 line — which still inlined
-    # medians, cold spreads and phase maps — truncated AGAIN in the
-    # driver's tail (BENCH_r13 `parsed: null`), costing round 14 its
-    # entire round-over-round comparison (VERDICT r14 item 2). r15
-    # measurement-contract fix: stdout now carries ONLY the driver's
-    # parse contract (metric/value/unit/queries/sf) plus the effective
-    # parallelism (`cpus_effective` from sc.defaultParallelism and
-    # `master`, so "env var ignored" is distinguishable from
-    # "overhead-bound" — the r14 suspect_cpus_ignored flag); medians,
-    # spreads, cold runs, phases and subtotals stay in bench_result.json
-    # (`detail_file`). No timing methodology changed.
+    # The full artifact goes to its OWN file: the driver's stdout tail
+    # capture truncates a long JSON line (BENCH_r05 and BENCH_r13 parsed
+    # as null), so stdout carries ONLY the driver's parse contract plus
+    # the effective parallelism (`cpus_effective`, `master`: "env var
+    # ignored" vs "overhead-bound"); medians, spreads, cold runs, phases
+    # and subtotals stay in bench_result.json (`detail_file`).
     here = os.path.dirname(os.path.abspath(__file__))
     try:
         out["cpus_effective"] = spark.sparkContext.defaultParallelism

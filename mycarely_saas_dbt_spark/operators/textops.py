@@ -1512,9 +1512,15 @@ _BM25_VALUES = ", ".join(
     f"({qid}, '{t}')" for qid, terms in BM25_QUERIES for t in terms
 )
 
-O_BM25 = f"""
-WITH toks AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
+
+def _bm25_fresh_oracle(corpus_sql: str) -> str:
+    """The full-precision integer-BM25 oracle over an arbitrary corpus
+    subquery — the grading shape shared by the maintenance and optimize
+    lifecycles (both promise fresh-build stats over the LIVE corpus)."""
+    return f"""
+WITH corpus AS ({corpus_sql}),
+toks AS (
+    SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM corpus
 ),
 tf AS (
     SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term
@@ -1542,6 +1548,9 @@ SELECT qid, doc_id, score_k, n_hit,
 FROM scored
 QUALIFY rank <= {BM25_TOP_K}
 """
+
+
+O_BM25 = _bm25_fresh_oracle("SELECT doc_id, text FROM documents")
 
 
 # ---------------------------------------------------------------------------
@@ -2309,37 +2318,9 @@ def _bm25_tiered_merge(runner, cur: dict, meta: dict, max_segments: int) -> dict
 # statistics (tf/dl/df/S/N) are those of the LIVE corpus — a fresh build
 # over it. Distinguishable both from tombstone-at-read (committed stats,
 # live candidates: O_BM25_DELETE_AWARE) and from forgetting the deletes.
-O_BM25_OPTIMIZE = f"""
-WITH toks AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-    WHERE NOT (doc_id % 13 = 2)
-),
-tf AS (
-    SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term
-),
-dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-tot AS (SELECT CAST(SUM(dl) AS BIGINT) AS S, COUNT(*) AS N FROM dl),
-df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-q(qid, term) AS (VALUES {_BM25_VALUES}),
-scored AS (
-    SELECT q.qid, tf.doc_id,
-           CAST(SUM((2*t.N - 2*df.df + 1) * 44 * t.S * tf.tf * {BM25_SCALE}
-                    // ((2*df.df + 1) * (20*t.S*tf.tf + 6*t.S + 18*dl.dl*t.N)))
-                AS BIGINT) AS score_k,
-           COUNT(*) AS n_hit
-    FROM q
-    JOIN tf USING (term)
-    JOIN df USING (term)
-    JOIN dl ON dl.doc_id = tf.doc_id
-    CROSS JOIN tot t
-    GROUP BY q.qid, tf.doc_id
+O_BM25_OPTIMIZE = _bm25_fresh_oracle(
+    "SELECT doc_id, text FROM documents WHERE NOT (doc_id % 13 = 2)"
 )
-SELECT qid, doc_id, score_k, n_hit,
-       CAST(ROW_NUMBER() OVER (PARTITION BY qid
-            ORDER BY score_k DESC, n_hit DESC, doc_id ASC) AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= {BM25_TOP_K}
-"""
 
 
 def bm25_index_optimize_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2671,43 +2652,6 @@ def streaming_bm25_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = materialize(_bm25_seg_query(spark, runner))
     shutil.rmtree(root, ignore_errors=True)
     return out
-
-
-def _bm25_fresh_oracle(corpus_sql: str) -> str:
-    """The full-precision integer-BM25 oracle over an arbitrary corpus
-    subquery — the grading shape shared by the maintenance and optimize
-    lifecycles (both promise fresh-build stats over the LIVE corpus)."""
-    return f"""
-WITH corpus AS ({corpus_sql}),
-toks AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM corpus
-),
-tf AS (
-    SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term
-),
-dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-tot AS (SELECT CAST(SUM(dl) AS BIGINT) AS S, COUNT(*) AS N FROM dl),
-df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-q(qid, term) AS (VALUES {_BM25_VALUES}),
-scored AS (
-    SELECT q.qid, tf.doc_id,
-           CAST(SUM((2*t.N - 2*df.df + 1) * 44 * t.S * tf.tf * {BM25_SCALE}
-                    // ((2*df.df + 1) * (20*t.S*tf.tf + 6*t.S + 18*dl.dl*t.N)))
-                AS BIGINT) AS score_k,
-           COUNT(*) AS n_hit
-    FROM q
-    JOIN tf USING (term)
-    JOIN df USING (term)
-    JOIN dl ON dl.doc_id = tf.doc_id
-    CROSS JOIN tot t
-    GROUP BY q.qid, tf.doc_id
-)
-SELECT qid, doc_id, score_k, n_hit,
-       CAST(ROW_NUMBER() OVER (PARTITION BY qid
-            ORDER BY score_k DESC, n_hit DESC, doc_id ASC) AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= {BM25_TOP_K}
-"""
 
 
 def _bm25_m_oracle() -> str:

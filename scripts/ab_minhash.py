@@ -23,9 +23,7 @@ Usage: python scripts/ab_minhash.py
 from __future__ import annotations
 
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -47,55 +45,39 @@ def _drop_memo() -> None:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from mycarely_saas_dbt_spark.session import get_spark
-    import __spark_entry__ as e
+    from mycarely_saas_dbt_spark import measure
 
-    spark = get_spark(app_name="ab_minhash")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = e.queries()
-    from mycarely_saas_dbt_spark.sources.registry import register_sources
+    spark, qs = measure.boot("ab_minhash", sf_dir)
 
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    register_sources(spark, sf_dir)
-    # prime the warm memo once outside the timed region so every "warm"
-    # sample measures steady-state consumption, not the first build
-    os.environ["MYCARELY_SESSION_MEMO"] = "1"
-    qs["dedup_minhash_lsh"](spark, sf_dir).write.mode("overwrite").format(
-        "noop"
-    ).save()
+    def prime() -> None:
+        measure.force(qs["dedup_minhash_lsh"](spark, sf_dir))
 
     samples: dict[tuple[str, str], list[float]] = {}
+    # prime the warm memo once outside the timed region so every "warm"
+    # sample measures steady-state consumption, not the first build
+    with measure.setenv("MYCARELY_SESSION_MEMO", "1"):
+        prime()
     for rnd in range(N_ROUNDS):
         for name in NAMES:
             # cold sample: memo disabled AND dropped, full rebuild
-            os.environ["MYCARELY_SESSION_MEMO"] = "0"
-            _drop_memo()
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            samples.setdefault((name, "cold"), []).append(time.time() - t0)
+            with measure.setenv("MYCARELY_SESSION_MEMO", "0"):
+                _drop_memo()
+                wall, _ = measure.time_entry(qs[name], spark, sf_dir)
+                samples.setdefault((name, "cold"), []).append(wall)
             # re-prime OUTSIDE the timed region (the cold run dropped the
             # memo), then take the steady-state warm sample
-            os.environ["MYCARELY_SESSION_MEMO"] = "1"
-            qs["dedup_minhash_lsh"](spark, sf_dir).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            samples.setdefault((name, "warm"), []).append(time.time() - t0)
+            with measure.setenv("MYCARELY_SESSION_MEMO", "1"):
+                prime()
+                wall, _ = measure.time_entry(qs[name], spark, sf_dir)
+                samples.setdefault((name, "warm"), []).append(wall)
         print(f"--- round {rnd + 1}/{N_ROUNDS}", flush=True)
-    os.environ.pop("MYCARELY_SESSION_MEMO", None)
 
     for name in NAMES:
         for mode in ("cold", "warm"):
-            s = sorted(samples[(name, mode)])
+            lo, med, spread = measure.summarize(samples[(name, mode)])
             print(
-                f"{name:24s} {mode}: min={s[0]:.2f}s "
-                f"median={statistics.median(s):.2f}s "
-                f"spread={[round(x, 2) for x in s]}"
+                f"{name:24s} {mode}: min={lo:.2f}s median={med:.2f}s "
+                f"spread={[round(x, 2) for x in spread]}"
             )
         deltas = [
             c - w

@@ -5,10 +5,11 @@ artifact at all, so regressions there were invisible).
 These entries stay OUT of bench.py by the standing medallion rule (their
 wall time is Structured Streaming machinery, not query compute), but that
 is exactly why they need their own artifact: this script times each entry
-end-to-end with the noop sink, records the phases the entry reports via
-util.timed_phase (stream start / state init vs data plan), and prints the
-artifact as JSON (written to a file only with --out; the committed
-STREAMING_r*.json artifacts are never overwritten by default).
+with ``measure.time_entry`` (noop sink, the phases the entry reports via
+util.timed_phase, residual = wall - phases), keeps each entry's
+min-of-``--reps`` run and prints the artifact as JSON (written to a file
+only with --out; the committed STREAMING_r*.json artifacts are never
+overwritten by default).
 
 One discarded streaming run comes first (`_stream_warmup`), so no timed
 entry pays the session's stream machinery start-up and an entry's time
@@ -26,7 +27,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -92,23 +92,15 @@ def main() -> None:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    from mycarely_saas_dbt_spark.session import get_spark
-    from mycarely_saas_dbt_spark.sources.registry import register_sources
-    from mycarely_saas_dbt_spark.util import capture_phases
-    import __spark_entry__ as e
+    from mycarely_saas_dbt_spark import measure
 
-    spark = get_spark(app_name="bench-streaming")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = e.queries()
+    spark, qs = measure.boot("bench-streaming", args.sf_dir)
     names = args.names or (
         [n for n in qs if n.startswith("streaming_")]
         + [n for n in EXTRA if n in qs]
     )
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    register_sources(spark, args.sf_dir)
-    t0 = time.time()
-    _stream_warmup(spark, args.sf_dir)
-    print(f"[stream-bench] warm-up (discarded): {time.time() - t0:.1f}s",
+    warm, _ = measure.time_entry(_stream_warmup, spark, args.sf_dir)
+    print(f"[stream-bench] warm-up (discarded): {warm:.1f}s",
           file=sys.stderr, flush=True)
 
     wall: dict[str, float] = {}
@@ -119,26 +111,16 @@ def main() -> None:
         runs: list[tuple[float, dict]] = []
         for _ in range(args.reps):
             try:
-                sink: dict = {}
-                t0 = time.time()
-                with capture_phases(sink):
-                    df = qs[name](spark, args.sf_dir)
-                    df.write.mode("overwrite").format("noop").save()
-                runs.append((time.time() - t0, sink))
+                runs.append(measure.time_entry(qs[name], spark, args.sf_dir))
             except Exception as exc:  # noqa: BLE001 — record and continue
                 errors[name] = f"{type(exc).__name__}: {exc}"[:400]
                 break
         if not runs:
             continue
-        runs.sort(key=lambda r: r[0])
-        dt, sink = runs[0]
-        wall[name] = round(dt, 3)
-        spread[name] = [round(r[0], 3) for r in runs]
-        if sink:
-            phases[name] = {
-                **sink,
-                "residual": round(max(0.0, dt - sum(sink.values())), 3),
-            }
+        wall[name], _, spread[name] = measure.summarize([r[0] for r in runs])
+        dt, ph = min(runs, key=lambda r: r[0])
+        if ph:
+            phases[name] = {**ph, "residual": measure.residual(dt, ph)}
         print(
             f"[stream-bench] {name}: min={wall[name]}s spread={spread[name]}"
             f" phases={phases.get(name, {})}",

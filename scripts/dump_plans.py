@@ -23,16 +23,11 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
-    from mycarely_saas_dbt_spark.session import get_spark
-    from mycarely_saas_dbt_spark.sources.registry import register_sources
-    import __spark_entry__ as e
+    from mycarely_saas_dbt_spark import measure
 
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", args.tag)
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="dump_plans")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = e.queries()
-    register_sources(spark, args.sf_dir)
+    spark, qs = measure.boot("dump_plans", args.sf_dir)
 
     for name in args.names:
         try:

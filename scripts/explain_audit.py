@@ -143,13 +143,10 @@ def audit(name: str, plan: str) -> None:
 
 
 def main() -> None:
-    import __spark_entry__ as e
-    from mycarely_saas_dbt_spark.session import get_spark
+    from mycarely_saas_dbt_spark import measure
 
-    spark = get_spark(app_name="explain-audit")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = e.queries()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark, qs = measure.boot("explain-audit", sf_dir)
     names = sys.argv[1:] or AUDIT
     for name in names:
         df = qs[name](spark, sf_dir)

@@ -1,10 +1,11 @@
 """Per-job profile of registered entries (guide §1: measure first).
 
-Runs each named entry end-to-end at $SPARK_GRAFT_SF_DIR with the noop sink
-and, with the UI enabled (MYCARELY_UI=1 is set by this script), reports the
-Spark jobs the entry launched: wall per job, its name/description, and the
-job count — so fixture-heavy entries show WHERE the seconds go (many tiny
-commit jobs vs one big shuffle) before anything is changed.
+Runs each named entry through ``measure.time_entry`` (noop sink) at
+--sf-dir and, with the Spark UI on (``main`` sets MYCARELY_UI=1 unless the
+caller set it), lists the Spark jobs the entry launched, read through
+``measure.ui_jobs``: wall per job, its description and the job count — so
+fixture-heavy entries show WHERE the seconds go (many tiny commit jobs vs
+one big shuffle) before anything is changed.
 
 Usage: python scripts/profile_entry.py [--sf-dir DIR] [--reps N] name...
 """
@@ -12,24 +13,12 @@ Usage: python scripts/profile_entry.py [--sf-dir DIR] [--reps N] name...
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
-import time
-import urllib.request
-
-os.environ.setdefault("MYCARELY_UI", "1")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _jobs(spark) -> list[dict]:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app}/jobs?status=succeeded", timeout=10
-    ) as r:
-        return json.load(r)
+TOP = 25
 
 
 def main() -> None:
@@ -39,54 +28,29 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
-    from mycarely_saas_dbt_spark.session import get_spark
-    from mycarely_saas_dbt_spark.sources.registry import register_sources
-    import __spark_entry__ as e
+    os.environ.setdefault("MYCARELY_UI", "1")
+    from mycarely_saas_dbt_spark import measure
 
-    spark = get_spark(app_name="profile")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = e.queries()
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    register_sources(spark, args.sf_dir)
-
+    spark, qs = measure.boot("profile", args.sf_dir)
     for name in args.names:
         for rep in range(args.reps):
-            before = {j["jobId"] for j in _jobs(spark)}
-            t0 = time.time()
-            from mycarely_saas_dbt_spark.util import capture_phases
-
-            sink: dict = {}
-            with capture_phases(sink):
-                df = qs[name](spark, args.sf_dir)
-                df.write.mode("overwrite").format("noop").save()
-            wall = time.time() - t0
-            jobs = [j for j in _jobs(spark) if j["jobId"] not in before]
-            tot_ms = 0
-            rows = []
-            for j in jobs:
-                try:
-                    st = time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-                    ct = time.strptime(j["completionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-                    dur = time.mktime(ct) - time.mktime(st)
-                    # sub-second precision from the GMT suffix if present
-                    try:
-                        dur += (
-                            float(j["completionTime"][19:23].lstrip("."))
-                            - float(j["submissionTime"][19:23].lstrip("."))
-                        ) / 1000.0
-                    except Exception:
-                        pass
-                except Exception:
-                    dur = 0.0
-                tot_ms += dur
-                rows.append((dur, j["jobId"], (j.get("description") or j.get("name") or "")[:110]))
-            rows.sort(reverse=True)
-            print(f"\n=== {name} rep{rep}: wall={wall:.2f}s jobs={len(jobs)} job-sum={tot_ms:.2f}s phases={sink}")
-            for dur, jid, desc in rows[:25]:
+            before = {j["jobId"] for j in measure.ui_jobs(spark)}
+            wall, phases = measure.time_entry(qs[name], spark, args.sf_dir)
+            rows = sorted(
+                (
+                    (measure.job_seconds(j), j["jobId"], (j.get("description") or j.get("name") or "")[:110])
+                    for j in measure.ui_jobs(spark)
+                    if j["jobId"] not in before
+                ),
+                reverse=True,
+            )
+            job_sum = sum(r[0] for r in rows)
+            print(f"\n=== {name} rep{rep}: wall={wall:.2f}s jobs={len(rows)} job-sum={job_sum:.2f}s phases={phases}")
+            for dur, jid, desc in rows[:TOP]:
                 print(f"  {dur:7.2f}s  job {jid:4d}  {desc}")
-            if len(rows) > 25:
-                rest = sum(r[0] for r in rows[25:])
-                print(f"  {rest:7.2f}s  ... {len(rows) - 25} more jobs")
+            if len(rows) > TOP:
+                rest = sum(r[0] for r in rows[TOP:])
+                print(f"  {rest:7.2f}s  ... {len(rows) - TOP} more jobs")
 
     spark.stop()
 

@@ -21,13 +21,14 @@ shuffle-heaviest operator families and records wall-clock growth:
 r13 hardening: wall time at these sizes is dominated by fixed job
 overhead (every r12 family measured "sub-linear", which mostly proved
 the overhead floor). Each leg therefore ALSO records WORK metrics —
-shuffle read/write bytes, input bytes, and spill — diffed from the
-Spark UI REST API around the winning rep (MYCARELY_UI=1; executor
-totals are cumulative and eviction-proof, stage spill is best-effort).
+shuffle read/write bytes, input bytes, and spill — diffed with
+``measure.ui_work`` around the winning rep (``main`` sets MYCARELY_UI=1
+and MYCARELY_SESSION_MEMO=0 unless the caller set them; executor totals
+are cumulative and eviction-proof, stage spill is best-effort). Every
+leg is timed by ``measure.time_entry`` (noop sink, never count()).
 Bytes pin the ALGORITHMIC claim (candidate-pair and state growth)
-independently of the box. The two flattest r12 families (semdedup,
-bm25_index_append_search) additionally run a single 100x leg to
-separate the fixed-overhead floor from true scaling.
+independently of the box. The four corpus families additionally run a
+single 100x leg to separate the fixed-overhead floor from true scaling.
 
 The pinned claim is SUB-QUADRATIC growth (growth << input_ratio^2 = 100
 for the corpus operators; near-flat for the maintenance hop), not an
@@ -44,9 +45,10 @@ relation that op actually consumes (documents vs embeddings vs fact
 rows — the r12 artifact mislabeled semdedup's input; fixed).
 
 Usage:  python scripts/scale_stress.py [out.json]
-Writes BENCH_SCALE_r13.json (or the given path) with per-op
+Writes BENCH_SCALE_r14.json (or the given path) with per-op
 {rows_1x, sec_1x, rows_10x, sec_10x, growth, work_1x, work_10x,
-shuffle_growth} fields (plus *_100x for the two 100x ops).
+shuffle_growth} fields (plus *_100x for the four corpus ops, and
+candidates_* for dedup_minhash_lsh).
 """
 
 from __future__ import annotations
@@ -56,12 +58,10 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("MYCARELY_SESSION_MEMO", "0")  # cold paths only
-os.environ.setdefault("MYCARELY_UI", "1")  # REST API for work metrics
+from mycarely_saas_dbt_spark import measure  # noqa: E402
 
 BASE_SF = "/root/testdata/sf0.1"
 DOCS_1X, EMB_1X = 5_000, 2_000
@@ -181,74 +181,23 @@ def _write_single(df, dest: str) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def work_snapshot(spark) -> dict:
-    """Cumulative work counters from the Spark UI REST API. Executor
-    totals (shuffle read/write, input bytes) are monotone and never
-    evicted — diffing two snapshots isolates one leg's work exactly.
-    Stage-level spill sums the retained-stage store (best-effort: stage
-    eviction under spark.ui.retainedStages can undercount spill on very
-    long runs; shuffle/input bytes are immune). Returns zeros when the
-    UI is off so wall-clock measurement still works anywhere."""
-    import urllib.request
-
-    out = {"shuffle_read": 0, "shuffle_write": 0, "input_bytes": 0,
-           "spill_mem": 0, "spill_disk": 0}
-    base = spark.sparkContext.uiWebUrl
-    if not base:
-        return out
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/executors", timeout=10
-        ) as r:
-            for e in json.load(r):
-                out["shuffle_read"] += e.get("totalShuffleRead", 0)
-                out["shuffle_write"] += e.get("totalShuffleWrite", 0)
-                out["input_bytes"] += e.get("totalInputBytes", 0)
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete",
-            timeout=10,
-        ) as r:
-            for s in json.load(r):
-                out["spill_mem"] += s.get("memoryBytesSpilled", 0)
-                out["spill_disk"] += s.get("diskBytesSpilled", 0)
-    except Exception:
-        pass  # UI race/disabled: zeros; wall-clock still recorded
-    return out
-
-
-def _work_delta(a: dict, b: dict) -> dict:
-    return {k: max(0, b[k] - a[k]) for k in a}
-
-
-def timed(fn, *args, reps: int = 2, spark=None) -> tuple[float, dict]:
-    """min-of-N wall (the bench rule: this box swings under load; min is
-    the stable statistic) plus the WINNING rep's work delta (bytes are
-    deterministic across reps up to cache effects; pairing them with the
-    min-wall rep keeps one coherent record). Callers warm the session
-    first so JIT/codegen warmup doesn't land inside the 1x leg and fake
-    a sub-1.0 growth."""
-    best, best_work = None, None
+def timed(spark, fn, *args, reps: int = 2, before=None) -> tuple[float, dict]:
+    """min-of-N wall of ``measure.time_entry(fn, *args)`` (the bench rule:
+    this box swings under load; min is the stable statistic) plus the
+    WINNING rep's ``measure.ui_work`` delta (bytes are deterministic
+    across reps up to cache effects; pairing them with the min-wall rep
+    keeps one coherent record). ``before()`` runs untimed ahead of each
+    rep. Callers warm the session first so JIT/codegen warmup doesn't
+    land inside the 1x leg and fake a sub-1.0 growth."""
+    best, best_work = float("inf"), {}
     for _ in range(reps):
-        w0 = work_snapshot(spark) if spark is not None else None
-        t0 = time.monotonic()
-        df = fn(*args)
-        if df is not None and hasattr(df, "write"):
-            # noop sink, NOT count() (r15 measurement-bug fix, guide
-            # §1.4): count() lets Catalyst prune whole subtrees — on the
-            # old semdedup it ELIMINATED the left join against the
-            # provably-unique pruned relation and with it the entire
-            # within-cluster pairwise stage, so the r12-r14 semdedup
-            # scale legs timed a no-op (sec_100x 1.11s with 30 KB of
-            # input). The noop sink computes every output column of
-            # every row, same as bench.py.
-            df.write.mode("overwrite").format("noop").save()
-        dt = time.monotonic() - t0
-        if best is None or dt < best:
-            best = dt
-            if w0 is not None:
-                best_work = _work_delta(w0, work_snapshot(spark))
-    return best, best_work or {}
+        if before is not None:
+            before()
+        w0 = measure.ui_work(spark)
+        dt, _ = measure.time_entry(fn, *args)
+        if dt < best:
+            best, best_work = dt, measure.work_delta(w0, measure.ui_work(spark))
+    return best, best_work
 
 
 def ivm_hop_seconds(spark, n_fact: int) -> tuple[float, dict]:
@@ -304,28 +253,19 @@ def ivm_hop_seconds(spark, n_fact: int) -> tuple[float, dict]:
             view_bucket_expr="k % 8", view_bucket_col="kb",
         ))
         m.refresh()  # bootstrap the view (not timed — build cost, linear)
-        best, best_work = None, None
-        for _ in range(2):  # min-of-2 dim-churn refreshes, same churn size
-            runner.update_where(dim_spec, "ck % 4 = 1", {"seg": "seg + 10"})
-            w0 = work_snapshot(spark)
-            t0 = time.monotonic()
-            m.refresh()  # the dim-churn maintenance refresh — measured
-            dt = time.monotonic() - t0
-            if best is None or dt < best:
-                best = dt
-                best_work = _work_delta(w0, work_snapshot(spark))
-        return best, best_work or {}
+        # min-of-2 dim-churn maintenance refreshes, same churn size
+        return timed(spark, m.refresh, before=lambda: runner.update_where(
+            dim_spec, "ck % 4 = 1", {"seg": "seg + 10"}
+        ))
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
 
 def main() -> None:
-    from mycarely_saas_dbt_spark.entry import build_queries
-    from mycarely_saas_dbt_spark.session import get_spark
-
     out_path = sys.argv[1] if len(sys.argv) > 1 else "BENCH_SCALE_r14.json"
-    spark = get_spark()
-    qs = build_queries()
+    os.environ.setdefault("MYCARELY_SESSION_MEMO", "0")  # cold paths only
+    os.environ.setdefault("MYCARELY_UI", "1")  # REST API for work metrics
+    spark, qs = measure.boot("scale-stress", BASE_SF)
     # op -> (input relation rows at 1x, has a 100x leg). semdedup
     # consumes EMBEDDINGS (the r12 artifact mislabeled it as docs).
     # r14 (VERDICT r13 item 5): the two heaviest shufflers gain 100x
@@ -361,13 +301,13 @@ def main() -> None:
         for op, (rows_1x, has_100x) in corpus_ops.items():
             # untimed warm pass: JIT/codegen/Arrow warmup must not land
             # inside the 1x leg (it fakes sub-1.0 growth)
-            timed(qs[op], spark, warm, reps=1)
+            timed(spark, qs[op], spark, warm, reps=1)
             secs, works = {}, {}
             legs = ("1x", "10x", "100x") if has_100x else ("1x", "10x")
             for tag in legs:
                 reps = 1 if tag == "100x" else 2
                 secs[tag], works[tag] = timed(
-                    qs[op], spark, dirs[tag], reps=reps, spark=spark
+                    spark, qs[op], spark, dirs[tag], reps=reps
                 )
                 print(f"{op} {tag}: {secs[tag]:.1f}s", file=sys.stderr)
             rec = {
